@@ -25,4 +25,16 @@ Spark-first:
 Everything here is built only on public Apache Spark / PySpark APIs.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+# Python workers cannot import this package: only the Spark driver has
+# it on its path (`__spark_entry__.py` puts it there and may run from
+# any cwd, with a session not built by `session.get_spark`).
+# Registering the package makes cloudpickle ship every package function,
+# class and constant a worker function uses by value, so mapInPandas /
+# applyInPandasWithState take plain module functions.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

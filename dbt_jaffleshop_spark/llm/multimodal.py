@@ -1,59 +1,55 @@
-"""Multimodal-column plumbing (beyond-reference extension; BASELINE.json
-north star: "multimodal columns").
+"""Multimodal columns (beyond-reference extension; BASELINE.json north
+star: "multimodal columns").
 
-Pattern: media lives as an opaque `binary` column with typed metadata;
-decode / feature-extract runs as an Arrow-batched Pandas function over
-`mapInPandas`, so each task processes columnar batches and the pipeline
+Media lives as an opaque ``binary`` column with typed metadata; decode
+and feature extraction run as Arrow-batched pandas functions over
+``mapInPandas``, so each task processes columnar batches and the plan
 shape (schema, partitioning, batch iteration) is exactly what a real
-image/audio decoder would plug into. `decode_media` decodes
-PNG/BMP/GIF/JPEG metadata (dimensions, GIF frame count, JPEG SOFn
-dimensions) DEPENDENCY-FREE via
-container-header parsing (`parse_image_header`); PNG PIXELS decode FOR
-REAL, dependency-free (r6: `png_decode_gray` — chunk walk with CRC
-verification, stdlib-zlib inflate, all five spec scanline filters
-reversed; 8-bit grayscale non-interlaced, the honest subset), as does
-uncompressed 16-bit PCM WAV audio (`parse_wav` + the Arrow-batched
-`audio_features` operator — container walk, numpy sample extraction,
-integer RMS); animated-GIF FRAMES decode FOR REAL too (r6:
-`gif_decode_frames` — full LZW dictionary replay with code-size growth
-and dictionary resets; r8: `gif_decode_rgb` adds the complete GIF89a
-ANIMATION state machine — sub-rect compositing, disposal
-none/background/previous, transparency, local palettes, interlace);
-baseline
-JPEG pixels decode FOR REAL as well (r7/r7b: `jpeg_decode_gray` +
-`jpeg_decode_color` — marker walk, canonical Huffman entropy decode
-with DC prediction and ZRL/EOB, interleaved MCUs with per-component
-tables/predictors including 4:2:0 subsampling, dequant, float 8x8
-IDCT, level shift, fixed-point BT.601 to RGB, DRI restart markers,
-and SOF2 progressive scans — spectral selection with EOB-run coding
-AND successive approximation with refinement correction bits, color
-AND chroma-subsampled progressive frames with per-component grid
-geometry, sampling factors across T.81's full 1..4, and DRI restarts
-inside progressive scans — r8 closes the format: every T.81
-Huffman-coded non-hierarchical JPEG shape decodes);
-other image formats decode through PIL when installed (capability-gated
-— see `_image_codec`); compressed-audio payloads and compressed-VIDEO
-pixel decode raise NotImplementedError (MP3/H.264/VP9 genuinely need
-codec libraries absent here), while MP4 container metadata (movie
-duration, track count) parses dependency-free via `parse_mp4_header`. The
-deterministic metadata path (byte length, md5, fake dimensions derived
-from length) is fully implemented and oracle-checked regardless of
-codec availability.
+image/audio decoder plugs into.
 
-The binary payload here is the document text's UTF-8 bytes (the testdata
-has no real media); at 100 TB the same plan reads parquet `binary`
-columns directly and only the lambda body changes.
+What decodes for real, dependency-free (the codecs live in
+``llm/codecs``, stdlib + numpy only):
+
+* container metadata: PNG/BMP/GIF/JPEG dimensions and GIF frame counts
+  (:func:`parse_image_header`), MP4 duration and track count
+  (:func:`parse_mp4_header`);
+* audio: PCM WAV 8/16/24-bit and float32 (:func:`parse_wav`, the
+  Arrow-batched :func:`audio_features`) and lossless FLAC;
+* pixels: PNG (every color type and depth, Adam7), animated GIF (LZW
+  frames and the full GIF89a compositing state machine), and every
+  Huffman-coded non-hierarchical JPEG (baseline and progressive, any
+  sampling, DRI restarts).
+
+Other image formats decode through PIL when it is installed
+(capability-gated, :func:`_image_codec`). Compressed audio and video
+pixels (MP3/H.264/VP9) raise NotImplementedError: they need codec
+libraries absent here.
+
+The testdata has no real media. The metadata members read the
+document text's UTF-8 bytes as the payload; the audio and pixel members
+synthesize deterministic media per document, round-trip it through the
+real encoder and decoder, and reduce the result to statistics the
+DuckDB oracle recomputes in closed form, so every decode path is
+value-checked, not just schema-checked. At 100 TB the same plan reads parquet
+``binary`` columns directly and only the per-document function changes.
+
+The per-document operators share one adapter, :func:`_doc_batches`:
+each supplies a generator of output rows for one (doc_id, value) pair.
 """
 
 from __future__ import annotations
 
 import hashlib
+import struct
 from collections.abc import Iterator
+from functools import partial
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -62,6 +58,41 @@ from pyspark.sql.types import (
 )
 
 from ..sources import load_table
+from .codecs.flac import flac_encode, parse_flac
+from .codecs.gif import (
+    gif_decode_frames,
+    gif_decode_rgb,
+    gif_encode_animation,
+    gif_encode_frames,
+)
+# the JPEG and PNG codec APIs stay importable from here
+from .codecs.jpeg import (  # noqa: F401
+    JPEG_FIX_BCB,
+    JPEG_FIX_GCB,
+    JPEG_FIX_GCR,
+    JPEG_FIX_RCR,
+    JPEG_QUANT_CHROMA_ZZ,
+    JPEG_QUANT_ZZ,
+    _jpeg_zigzag,
+    jpeg_decode_color,
+    jpeg_decode_gray,
+    jpeg_encode_420_coefs,
+    jpeg_encode_color_coefs,
+    jpeg_encode_gray_coefs,
+    jpeg_encode_progressive3_coefs,
+    jpeg_encode_progressive_coefs,
+    jpeg_encode_progressive_sampled_coefs,
+    jpeg_encode_sampled_coefs,
+    jpeg_parse_any,
+    jpeg_parse_gray,
+)
+from .codecs.png import (  # noqa: F401
+    PNG_SIG,
+    png_decode,
+    png_encode,
+    png_encode_palette,
+)
+from .codecs.wav import parse_wav
 
 EXTRACT_SCHEMA = StructType(
     [
@@ -101,8 +132,6 @@ def parse_image_header(payload: bytes) -> dict | None:
     recognized formats. This is the real operation a metadata-extraction
     pipeline performs (dimensions, frame count) — full pixel decode
     still needs PIL and stays capability-gated."""
-    import struct
-
     if len(payload) >= 24 and payload[:8] == b"\x89PNG\r\n\x1a\n":
         # IHDR is mandatory-first: width/height are big-endian at 16/20
         w, h = struct.unpack(">II", payload[16:24])
@@ -238,38 +267,98 @@ def decode_media(payload: bytes, media_type: str) -> dict:
     )
 
 
-def _make_extract_batches():
-    """Build the Arrow-batched extraction function as a CLOSURE so
-    cloudpickle serializes it by value — Python workers on executors do
-    not have this package on their import path (only the driver does),
-    so a module-level function reference would fail to unpickle there."""
+# ------------------------------------------------ per-document adapter
 
-    def extract_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
 
-        import pandas as _pd
+def _doc_batches(row_fn, columns, source, batches):
+    """The one mapInPandas body of the per-document operators: every
+    (doc_id, ``source`` value) pair of a batch goes through ``row_fn``,
+    a generator of output row dicts, and a batch's rows form one output
+    frame. ``columns`` (the output schema's names) fixes the column
+    order and the shape of an empty frame; other row keys are dropped."""
+    for pdf in batches:
+        rows = [
+            row
+            for doc_id, value in zip(pdf["doc_id"].tolist(), pdf[source].tolist())
+            for row in row_fn(doc_id, value)
+        ]
+        yield pd.DataFrame(rows, columns=columns)
 
-        for pdf in batches:
-            payloads = pdf["payload"]
-            n_bytes = payloads.map(len)
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": n_bytes.astype("int64"),
-                    "content_md5": payloads.map(
-                        lambda b: _hashlib.md5(b).hexdigest()
-                    ),
-                    # deterministic stand-ins for decoder output (see oracle)
-                    "width": (100 + n_bytes % 800).astype("int32"),
-                    "height": (100 + (n_bytes * 7) % 600).astype("int32"),
-                    "n_frames": (1 + n_bytes % 24).astype("int32"),
-                }
-            )
 
-    return extract_batches
+def _map_docs(
+    df: DataFrame, row_fn, schema: StructType, source: str = "n_bytes"
+) -> DataFrame:
+    """``df.mapInPandas`` of ``row_fn`` through :func:`_doc_batches`."""
+    batches = partial(_doc_batches, row_fn, schema.fieldNames(), source)
+    return df.mapInPandas(batches, schema=schema)
+
+
+def _weight(h: int, w: int, a: int, b: int, m: int):
+    """Position weights ``1 + (x·a + y·b) mod m`` over an h×w grid: a
+    weighted checksum pins exact per-position recovery, so sums cannot
+    match by accident through a decode bug."""
+    y, x = np.mgrid[0:h, 0:w]
+    return 1 + (x * a + y * b) % m
+
+
+# the weight fields of the checksums; one per color channel (R, G, B, A)
+_W1, _W2, _W3, _W4 = (
+    (127, 149, 241), (131, 137, 239), (113, 151, 251), (109, 139, 233)
+)
+_WP = (131, 137, 251)  # the r6 gray members (PNG pixels, thumbnail, GIF frames)
+
+
+def _gray_stats(px, weight) -> dict:
+    """Count, range, sum and weighted checksum of a gray plane."""
+    px = px.astype(np.int64)
+    return {
+        "n_pixels": int(px.size),
+        "px_min": int(px.min()),
+        "px_max": int(px.max()),
+        "px_sum": int(px.sum()),
+        "px_checksum": int((px * weight).sum()),
+    }
+
+
+def _rgb_row(doc_id: int, w: int, h: int, rgb) -> dict:
+    """The COLOR_PIXELS_SCHEMA row of a decoded (h, w, 3) image:
+    per-channel sums and one checksum with a weight field per channel,
+    so a channel swap breaks parity on its own."""
+    assert rgb.shape == (h, w, 3)
+    r, g, b = (rgb[..., c].astype(np.int64) for c in range(3))
+    checksum = (
+        r * _weight(h, w, *_W1) + g * _weight(h, w, *_W2) + b * _weight(h, w, *_W3)
+    )
+    return {
+        "doc_id": doc_id,
+        "width": w,
+        "height": h,
+        "n_pixels": h * w,
+        "r_sum": int(r.sum()),
+        "g_sum": int(g.sum()),
+        "b_sum": int(b.sum()),
+        "rgb_checksum": int(checksum.sum()),
+    }
+
+
+def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        payloads = pdf["payload"]
+        n_bytes = payloads.map(len)
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "media_type": pdf["media_type"],
+                "n_bytes": n_bytes.astype("int64"),
+                "content_md5": payloads.map(
+                    lambda b: hashlib.md5(b).hexdigest()
+                ),
+                # deterministic stand-ins for decoder output (see oracle)
+                "width": (100 + n_bytes % 800).astype("int32"),
+                "height": (100 + (n_bytes * 7) % 600).astype("int32"),
+                "n_frames": (1 + n_bytes % 24).astype("int32"),
+            }
+        )
 
 
 def multimodal_extract(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
@@ -286,10 +375,11 @@ def multimodal_extract(spark: SparkSession, sf_dir: str | None = None) -> DataFr
             " when doc_id % 3 = 1 then 'audio' else 'video' end"
         ).alias("media_type"),
     )
-    return media.mapInPandas(_make_extract_batches(), schema=EXTRACT_SCHEMA)
+    return media.mapInPandas(_extract_batches, schema=EXTRACT_SCHEMA)
 
 
 # --------------------------------------------------- frame sampling
+
 
 FRAME_SAMPLES = 4  # uniform-stride target: ≤4 sampled frames per video
 
@@ -303,45 +393,29 @@ FRAMESAMPLE_SCHEMA = StructType(
 )
 
 
-def _make_framesample_batches():
-    """Closure for cloudpickle-by-value (see _make_extract_batches)."""
-
-    def framesample_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            n_bytes = pdf["payload"].map(len).to_numpy()
-            content_md5 = pdf["payload"].map(
-                lambda b: _hashlib.md5(b).hexdigest()
-            )
-            n_frames = (1 + n_bytes % 24).astype("int64")
-            stride = -(-n_frames // FRAME_SAMPLES)  # ceil
-            doc_ids, frames, idxs, md5s = [], [], [], []
-            for doc, md, n, s in zip(
-                pdf["doc_id"], content_md5, n_frames, stride
-            ):
-                for i in range(0, int(n), int(s)):
-                    doc_ids.append(doc)
-                    frames.append(int(n))
-                    idxs.append(i)
-                    md5s.append(
-                        _hashlib.md5(f"{md}-{i}".encode()).hexdigest()
-                    )
-            yield _pd.DataFrame(
-                {
-                    "doc_id": _np.asarray(doc_ids, dtype="int64"),
-                    "n_frames": _np.asarray(frames, dtype="int32"),
-                    "frame_idx": _np.asarray(idxs, dtype="int32"),
-                    "frame_md5": md5s,
-                }
-            )
-
-    return framesample_batches
+def _framesample_batches(
+    batches: Iterator[pd.DataFrame],
+) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        n_bytes = pdf["payload"].map(len).to_numpy()
+        content_md5 = pdf["payload"].map(lambda b: hashlib.md5(b).hexdigest())
+        n_frames = (1 + n_bytes % 24).astype("int64")
+        stride = -(-n_frames // FRAME_SAMPLES)  # ceil
+        doc_ids, frames, idxs, md5s = [], [], [], []
+        for doc, md, n, s in zip(pdf["doc_id"], content_md5, n_frames, stride):
+            for i in range(0, int(n), int(s)):
+                doc_ids.append(doc)
+                frames.append(int(n))
+                idxs.append(i)
+                md5s.append(hashlib.md5(f"{md}-{i}".encode()).hexdigest())
+        yield pd.DataFrame(
+            {
+                "doc_id": np.asarray(doc_ids, dtype="int64"),
+                "n_frames": np.asarray(frames, dtype="int32"),
+                "frame_idx": np.asarray(idxs, dtype="int32"),
+                "frame_md5": md5s,
+            }
+        )
 
 
 def multimodal_framesample(
@@ -355,12 +429,11 @@ def multimodal_framesample(
     videos = docs.where(F.expr("doc_id % 3 = 2")).select(
         "doc_id", F.expr("encode(text, 'UTF-8')").alias("payload")
     )
-    return videos.mapInPandas(
-        _make_framesample_batches(), schema=FRAMESAMPLE_SCHEMA
-    )
+    return videos.mapInPandas(_framesample_batches, schema=FRAMESAMPLE_SCHEMA)
 
 
 # --------------------------------------------------------- resize
+
 
 RESIZE_TARGET = 224
 
@@ -376,34 +449,25 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def _make_resize_batches():
-    """Closure for cloudpickle-by-value (see _make_extract_batches)."""
-
-    def resize_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        for pdf in batches:
-            n_bytes = pdf["payload"].map(len)
-            w = 100 + n_bytes % 800
-            h = 100 + (n_bytes * 7) % 600
-            m = w.combine(h, max)
-            # aspect-preserving fit into 224×224, integer-exact
-            new_w = (w * RESIZE_TARGET) // m
-            new_h = (h * RESIZE_TARGET) // m
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": w.astype("int32"),
-                    "height": h.astype("int32"),
-                    "new_width": new_w.astype("int32"),
-                    "new_height": new_h.astype("int32"),
-                    "resized_bytes": (new_w * new_h * 3).astype("int64"),
-                }
-            )
-
-    return resize_batches
+def _resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        n_bytes = pdf["payload"].map(len)
+        w = 100 + n_bytes % 800
+        h = 100 + (n_bytes * 7) % 600
+        m = w.combine(h, max)
+        # aspect-preserving fit into 224×224, integer-exact
+        new_w = (w * RESIZE_TARGET) // m
+        new_h = (h * RESIZE_TARGET) // m
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "width": w.astype("int32"),
+                "height": h.astype("int32"),
+                "new_width": new_w.astype("int32"),
+                "new_height": new_h.astype("int32"),
+                "resized_bytes": (new_w * new_h * 3).astype("int64"),
+            }
+        )
 
 
 def multimodal_resize(
@@ -416,10 +480,11 @@ def multimodal_resize(
     images = docs.where(F.expr("doc_id % 3 = 0")).select(
         "doc_id", F.expr("encode(text, 'UTF-8')").alias("payload")
     )
-    return images.mapInPandas(_make_resize_batches(), schema=RESIZE_SCHEMA)
+    return images.mapInPandas(_resize_batches, schema=RESIZE_SCHEMA)
 
 
 # ------------------------------------------------------------- oracle SQL
+
 
 # The Python path computes md5 over the UTF-8 payload and derives the fake
 # dimensions from the byte length — both reproducible in SQL, so even the
@@ -485,124 +550,18 @@ AUDIO_SCHEMA = StructType(
 )
 
 
-def _wav_parser():
-    """Build the WAV parser as a DYNAMIC function so executor closures
-    that capture it serialize it by value (cloudpickle pickles a
-    module-level function by module reference, which Python workers
-    cannot import — see _make_extract_batches)."""
-
-    def parse(payload: bytes) -> dict | None:
-        import struct
-
-        import numpy as np
-
-        if len(payload) < 44 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-            return None
-        pos, n = 12, len(payload)
-        fmt = None
-        data = None
-        while pos + 8 <= n:
-            cid = payload[pos:pos + 4]
-            (size,) = struct.unpack("<I", payload[pos + 4:pos + 8])
-            body = payload[pos + 8:pos + 8 + size]
-            if cid == b"fmt ":
-                fmt = struct.unpack("<HHIIHH", body[:16])
-            elif cid == b"data":
-                data = body
-            pos += 8 + size + (size % 2)  # chunks are word-aligned
-        if fmt is None or data is None:
-            return None
-        audio_fmt, channels, rate, _byte_rate, _align, bits = fmt
-        if channels < 1:
-            return None
-        # uncompressed shapes (r8 extends the r6 16-bit-only gate):
-        # PCM 8-bit (unsigned, centered at 128), 16-bit, 24-bit
-        # (3-byte little-endian two's complement), and IEEE float32
-        # (format tag 3); rms_q is always in 16-bit-equivalent units so
-        # the feature is comparable across sample widths. Compressed
-        # codecs (mp3/aac) stay out of scope — they need real codec
-        # libraries.
-        if audio_fmt == 1 and bits == 16:
-            samples = np.frombuffer(
-                data[: len(data) - (len(data) % (2 * channels))], dtype="<i2"
-            ).astype("int64")
-        elif audio_fmt == 1 and bits == 8:
-            raw8 = np.frombuffer(
-                data[: len(data) - (len(data) % channels)], dtype=np.uint8
-            )
-            samples = (raw8.astype("int64") - 128) * 256  # center + scale
-        elif audio_fmt == 1 and bits == 24:
-            usable = len(data) - (len(data) % (3 * channels))
-            b = np.frombuffer(data[:usable], dtype=np.uint8).reshape(-1, 3)
-            v = (
-                b[:, 0].astype("int64")
-                | (b[:, 1].astype("int64") << 8)
-                | (b[:, 2].astype("int64") << 16)
-            )
-            v = np.where(v >= 1 << 23, v - (1 << 24), v)
-            samples = v >> 8  # to 16-bit-equivalent units
-        elif audio_fmt == 3 and bits == 32:
-            f32 = np.frombuffer(
-                data[: len(data) - (len(data) % (4 * channels))], dtype="<f4"
-            )
-            samples = np.round(
-                np.clip(f32.astype("float64"), -1.0, 1.0) * 32767
-            ).astype("int64")
-        else:
-            return None
-        n_samples = samples.size // channels
-        rms_q = (
-            int(np.sqrt(np.mean(samples.astype("int64") ** 2)))
-            if samples.size
-            else 0
-        )
-        return {
-            "sample_rate": rate,
-            "n_channels": channels,
-            "n_samples": n_samples,
-            "duration_ms": (n_samples * 1000) // rate if rate else 0,
-            "rms_q": rms_q,
-        }
-
-    return parse
+# the (doc_id, payload) relation the synthesis stages emit
+PAYLOAD_SCHEMA = StructType(
+    [StructField("doc_id", LongType()), StructField("payload", BinaryType())]
+)
 
 
-#: Dependency-free PCM WAV decode — REAL audio decoding, not a stub:
-#: RIFF/WAVE container walk (fmt + data chunks), sample extraction via
-#: numpy for PCM 8/16/24-bit AND IEEE float32 (r8; r6 was 16-bit-only),
-#: and an integer RMS in 16-bit-equivalent units so the feature is
-#: comparable across sample widths and engine/partitioning-exact.
-#: Returns None for non-WAV payloads; compressed codecs (mp3/aac) stay
-#: out of scope — they need real codec libraries.
-parse_wav = _wav_parser()
-
-
-def _make_audio_batches():
-    """Closure for cloudpickle-by-value (see _make_extract_batches).
-    The parser is captured as a fresh dynamic function (closure cell),
-    so it too ships by value — workers need no package import."""
-    _parse_wav = _wav_parser()
-
-    def audio_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                meta = _parse_wav(bytes(payload))
-                if meta is not None:
-                    rows.append({"doc_id": doc_id, **meta})
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_channels",
-                    "n_samples", "duration_ms", "rms_q",
-                ],
-            )
-
-    return audio_batches
+def _audio_rows(parse, doc_id: int, payload: bytes):
+    """Decoded audio features of one payload; payloads ``parse``
+    rejects drop out (the standard extract-what-decodes contract)."""
+    meta = parse(bytes(payload))
+    if meta is not None:
+        yield {"doc_id": doc_id, **meta}
 
 
 def audio_features(media: DataFrame) -> DataFrame:
@@ -614,64 +573,47 @@ def audio_features(media: DataFrame) -> DataFrame:
     on crafted PCM files, and driver-verified through
     :func:`multimodal_audio` (a `multimodal_digest` member), which runs
     this exact operator over synthesized-in-Spark PCM WAV payloads."""
-    return media.select("doc_id", "payload").mapInPandas(
-        _make_audio_batches(), schema=AUDIO_SCHEMA
+    return _map_docs(
+        media.select("doc_id", "payload"),
+        partial(_audio_rows, parse_wav),
+        AUDIO_SCHEMA,
+        source="payload",
     )
 
 
 # ----------------------- driver-verified audio decode (r5)
 
+
 AUDIO_RATE = 8000  # synthesized sample rate (Hz)
 
 
-def _make_wav_synth_batches():
-    """Closure for cloudpickle-by-value (see _make_extract_batches):
-    synthesize a REAL RIFF/WAVE 16-bit PCM file per document, with
-    deterministic integer samples derived from (doc_id, byte length) —
+def _wav_synth_rows(doc_id: int, nb: int):
+    """A real RIFF/WAVE 16-bit PCM file per document, with
+    deterministic integer samples derived from (doc_id, byte length),
     reproducible exactly in the DuckDB oracle."""
-
-    def synth_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            payloads = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id = int(doc_id)
-                channels = 1 + doc_id % 2
-                frames = 120 + int(nb) % 200
-                total = frames * channels
-                k = _np.arange(total, dtype="int64")
-                vals = ((doc_id * 31 + k * 7) % 2003 - 1001).astype("<i2")
-                data = vals.tobytes()
-                hdr = (
-                    b"RIFF"
-                    + _struct.pack("<I", 36 + len(data))
-                    + b"WAVE"
-                    + b"fmt "
-                    + _struct.pack("<I", 16)
-                    + _struct.pack(
-                        "<HHIIHH",
-                        1,  # PCM
-                        channels,
-                        AUDIO_RATE,
-                        AUDIO_RATE * channels * 2,
-                        channels * 2,
-                        16,
-                    )
-                    + b"data"
-                    + _struct.pack("<I", len(data))
-                )
-                payloads.append(hdr + data)
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return synth_batches
+    channels = 1 + doc_id % 2
+    frames = 120 + nb % 200
+    k = np.arange(frames * channels, dtype="int64")
+    data = ((doc_id * 31 + k * 7) % 2003 - 1001).astype("<i2").tobytes()
+    hdr = (
+        b"RIFF"
+        + struct.pack("<I", 36 + len(data))
+        + b"WAVE"
+        + b"fmt "
+        + struct.pack("<I", 16)
+        + struct.pack(
+            "<HHIIHH",
+            1,  # PCM
+            channels,
+            AUDIO_RATE,
+            AUDIO_RATE * channels * 2,
+            channels * 2,
+            16,
+        )
+        + b"data"
+        + struct.pack("<I", len(data))
+    )
+    yield {"doc_id": doc_id, "payload": hdr + data}
 
 
 def multimodal_audio(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
@@ -691,9 +633,7 @@ def multimodal_audio(spark: SparkSession, sf_dir: str | None = None) -> DataFram
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    wav = _spread(audio_docs).mapInPandas(
-        _make_wav_synth_batches(), schema="doc_id long, payload binary"
-    )
+    wav = _map_docs(_spread(audio_docs), _wav_synth_rows, PAYLOAD_SCHEMA)
     return audio_features(wav)
 
 
@@ -726,634 +666,31 @@ FROM a JOIN q ON a.doc_id = q.doc_id
 """
 
 
-# ----------------------------------------- real FLAC codec (r9)
+# ------------------------------------------ FLAC roundtrip (r9)
 #
 # The audio half of the compressed-codec seam, done where it is
-# POSSIBLE dependency-free: FLAC (RFC 9639) compresses with fixed/LPC
-# linear prediction + Rice-coded residuals — pure integer arithmetic
-# and bit I/O, no psychoacoustic model, no DSP library — and it is
-# LOSSLESS, so a synth → encode → decode roundtrip is value-verifiable
-# bit-for-bit (the same property that made the PNG codec closeable,
-# and exactly what MP3/AAC lack: their decoders are only testable
-# against vectors a real encoder must produce). FLAC is also a format
-# a training-data pipeline actually meets — speech corpora commonly
-# ship as FLAC. Reference parity: the reference has no media pipeline
-# at all; this extends the beyond-reference multimodal surface
-# (SURVEY §7.5).
+# possible dependency-free (llm/codecs/flac.py): FLAC is lossless, so a
+# synth → encode → decode roundtrip is value-verifiable bit for bit.
+# Speech corpora commonly ship as FLAC.
+
+_FLAC_STEREO = ("independent", "left_side", "mid_side")
 
 
-def _flac_codec():
-    """Build the dependency-free FLAC (encode, decode) pair — dynamic
-    functions so mapInPandas closures ship by value (see
-    _make_extract_batches).
-
-    Encoder: STREAMINFO (incl. MD5 of the unencoded audio), frames at a
-    fixed blocksize, per-subframe choice of CONSTANT / best FIXED
-    predictor (order 0-4, Rice-coded residual, escape to VERBATIM when
-    prediction loses), independent or decorrelated stereo (left/side,
-    right/side, mid/side), CRC-8 frame headers + CRC-16 frame footers.
-    Decoder: the full subframe surface — CONSTANT, VERBATIM, FIXED 0-4,
-    LPC any order, wasted bits, both Rice methods (4- and 5-bit
-    parameters) with partition orders and escape codes, every blocksize
-    / sample-rate / bit-depth header code, all four channel
-    assignments — with CRC verification, so it reads files from real
-    encoders, not just its own."""
-    import struct as _struct
-
-    import numpy as _np
-
-    # ---- CRCs, tables derived from the polynomials at build time
-    def _mk_crc8():
-        tbl = []
-        for b in range(256):
-            c = b
-            for _ in range(8):
-                c = ((c << 1) ^ 0x07) & 0xFF if c & 0x80 else (c << 1) & 0xFF
-            tbl.append(c)
-        return tbl
-
-    def _mk_crc16():
-        tbl = []
-        for b in range(256):
-            c = b << 8
-            for _ in range(8):
-                c = ((c << 1) ^ 0x8005) & 0xFFFF if c & 0x8000 else (c << 1) & 0xFFFF
-            tbl.append(c)
-        return tbl
-
-    _CRC8 = _mk_crc8()
-    _CRC16 = _mk_crc16()
-
-    def crc8(data: bytes) -> int:
-        c = 0
-        for byte in data:
-            c = _CRC8[c ^ byte]
-        return c
-
-    def crc16(data: bytes) -> int:
-        c = 0
-        for byte in data:
-            c = _CRC16[((c >> 8) ^ byte) & 0xFF] ^ ((c << 8) & 0xFFFF)
-        return c
-
-    # ---- bit I/O (MSB-first, as the format requires)
-    class _W:
-        def __init__(self):
-            self.buf = bytearray()
-            self.acc = 0
-            self.nbits = 0
-
-        def w(self, value: int, bits: int):
-            self.acc = (self.acc << bits) | (value & ((1 << bits) - 1))
-            self.nbits += bits
-            while self.nbits >= 8:
-                self.nbits -= 8
-                self.buf.append((self.acc >> self.nbits) & 0xFF)
-            self.acc &= (1 << self.nbits) - 1
-
-        def ws(self, value: int, bits: int):  # signed two's complement
-            self.w(value & ((1 << bits) - 1), bits)
-
-        def unary(self, q: int):  # q zeros then a one
-            while q >= 32:
-                self.w(0, 32)
-                q -= 32
-            self.w(1, q + 1)
-
-        def align(self):
-            if self.nbits:
-                self.w(0, 8 - self.nbits)
-
-        def bytes(self) -> bytes:
-            assert self.nbits == 0
-            return bytes(self.buf)
-
-    class _R:
-        def __init__(self, data: bytes, pos_bits: int = 0):
-            self.d = data
-            self.p = pos_bits
-
-        def r(self, bits: int) -> int:
-            v = 0
-            p, d = self.p, self.d
-            end = p + bits
-            if end > len(d) * 8:
-                raise ValueError("FLAC bitstream truncated")
-            while bits:
-                byte = d[p >> 3]
-                avail = 8 - (p & 7)
-                take = avail if avail < bits else bits
-                v = (v << take) | ((byte >> (avail - take)) & ((1 << take) - 1))
-                p += take
-                bits -= take
-            self.p = p
-            return v
-
-        def rs(self, bits: int) -> int:
-            v = self.r(bits)
-            return v - (1 << bits) if v >= (1 << (bits - 1)) else v
-
-        def unary(self) -> int:
-            q = 0
-            while self.r(1) == 0:
-                q += 1
-            return q
-
-        def align(self):
-            self.p = (self.p + 7) & ~7
-
-    def _utf8_num(w: _W, n: int):
-        """FLAC's UTF-8-style coded number (frame index)."""
-        if n < 0x80:
-            w.w(n, 8)
-            return
-        for nbytes, prefix in ((2, 0xC0), (3, 0xE0), (4, 0xF0), (5, 0xF8),
-                               (6, 0xFC), (7, 0xFE)):
-            if n < (1 << (nbytes * 5 + 1)) or nbytes == 7:
-                w.w(prefix | (n >> (6 * (nbytes - 1))), 8)
-                for i in range(nbytes - 2, -1, -1):
-                    w.w(0x80 | ((n >> (6 * i)) & 0x3F), 8)
-                return
-
-    def _utf8_num_read(r: _R) -> int:
-        b0 = r.r(8)
-        if b0 < 0x80:
-            return b0
-        nbytes = 0
-        for mask, val, nb in ((0xE0, 0xC0, 2), (0xF0, 0xE0, 3), (0xF8, 0xF0, 4),
-                              (0xFC, 0xF8, 5), (0xFE, 0xFC, 6), (0xFF, 0xFE, 7)):
-            if b0 & mask == val:
-                nbytes = nb
-                break
-        if not nbytes:
-            raise ValueError("FLAC bad coded number")
-        n = b0 & (0x7F >> nbytes)
-        for _ in range(nbytes - 1):
-            c = r.r(8)
-            if c & 0xC0 != 0x80:
-                raise ValueError("FLAC bad coded-number continuation")
-            n = (n << 6) | (c & 0x3F)
-        return n
-
-    # ---- fixed predictors (orders 0-4): residual r[i] = s[i] - pred
-    def _fixed_residual(s, order: int):
-        r = s.astype(_np.int64)
-        for _ in range(order):
-            r = _np.diff(r)
-        return r
-
-    def _fixed_restore(res, warm, order: int):
-        # invert `order` rounds of diff by cumulative summation
-        out = res.astype(_np.int64)
-        for k in range(order, 0, -1):
-            w = _np.asarray(warm, dtype=_np.int64)
-            for _ in range(k - 1):
-                w = _np.diff(w)
-            seed = w[-1] if len(w) else 0
-            out = seed + _np.cumsum(out)
-        return _np.concatenate([_np.asarray(warm, dtype=_np.int64), out])
-
-    def _rice_cost(u, k: int) -> int:
-        return int(u.size * (k + 1) + (u >> k).sum())
-
-    def _zigzag(res):
-        return _np.where(res >= 0, res.astype(_np.int64) << 1,
-                         ((-res.astype(_np.int64)) << 1) - 1)
-
-    def _write_residual(w: _W, res):
-        """Method 00 (4-bit Rice params), partition order 0, escape to
-        raw when even the best parameter loses (high-entropy input)."""
-        u = _zigzag(res)
-        best_k, best_c = 0, None
-        for k in range(15):
-            c = _rice_cost(u, k)
-            if best_c is None or c < best_c:
-                best_k, best_c = k, c
-        raw_bits = 1
-        if res.size:
-            m = int(_np.abs(res).max())
-            raw_bits = max(m.bit_length() + 1, 1)
-        w.w(0, 2)  # method 00
-        w.w(0, 4)  # partition order 0
-        if best_c > res.size * raw_bits + 5 and raw_bits <= 31:
-            w.w(0xF, 4)  # escape
-            w.w(raw_bits, 5)
-            for v in res:
-                w.ws(int(v), raw_bits)
-            return
-        w.w(best_k, 4)
-        for uv in u:
-            uv = int(uv)
-            w.unary(uv >> best_k)
-            if best_k:
-                w.w(uv & ((1 << best_k) - 1), best_k)
-
-    def _read_residual(r: _R, blocksize: int, order: int):
-        method = r.r(2)
-        if method > 1:
-            raise ValueError("FLAC reserved residual method")
-        pbits = 4 if method == 0 else 5
-        escape = (1 << pbits) - 1
-        porder = r.r(4)
-        nparts = 1 << porder
-        if blocksize % nparts:
-            raise ValueError("FLAC partition order does not divide blocksize")
-        out = []
-        for part in range(nparts):
-            count = blocksize // nparts - (order if part == 0 else 0)
-            if count < 0:
-                raise ValueError("FLAC predictor order exceeds partition")
-            param = r.r(pbits)
-            if param == escape:
-                bits = r.r(5)
-                vals = [r.rs(bits) if bits else 0 for _ in range(count)]
-            else:
-                vals = []
-                for _ in range(count):
-                    u = (r.unary() << param) | (r.r(param) if param else 0)
-                    vals.append((u >> 1) ^ -(u & 1))
-            out.extend(vals)
-        return _np.asarray(out, dtype=_np.int64)
-
-    def _write_subframe(w: _W, s, bps: int):
-        s = _np.asarray(s, dtype=_np.int64)
-        n = s.size
-        w.w(0, 1)  # zero pad
-        if n and (s == s[0]).all():
-            w.w(0, 6)  # CONSTANT
-            w.w(0, 1)  # no wasted bits
-            w.ws(int(s[0]), bps)
-            return
-        # best fixed order by absolute residual sum
-        best_o, best_sum = 0, None
-        for o in range(min(5, n)):
-            tot = int(_np.abs(_fixed_residual(s, o)).sum())
-            if best_sum is None or tot < best_sum:
-                best_o, best_sum = o, tot
-        res = _fixed_residual(s, best_o)
-        u = _zigzag(res)
-        est = min(_rice_cost(u, k) for k in range(15)) + best_o * bps
-        if est >= n * bps:  # prediction loses: VERBATIM
-            w.w(1, 6)
-            w.w(0, 1)
-            for v in s:
-                w.ws(int(v), bps)
-            return
-        w.w(0b001000 | best_o, 6)  # FIXED
-        w.w(0, 1)
-        for v in s[:best_o]:
-            w.ws(int(v), bps)
-        _write_residual(w, res)
-
-    def _read_subframe(r: _R, blocksize: int, bps: int):
-        if r.r(1):
-            raise ValueError("FLAC subframe padding bit set")
-        t = r.r(6)
-        wasted = 0
-        if r.r(1):
-            wasted = r.unary() + 1
-        eff = bps - wasted
-        if t == 0:  # CONSTANT
-            s = _np.full(blocksize, r.rs(eff), dtype=_np.int64)
-        elif t == 1:  # VERBATIM
-            s = _np.asarray([r.rs(eff) for _ in range(blocksize)], dtype=_np.int64)
-        elif 0b001000 <= t <= 0b001100:  # FIXED 0-4
-            order = t & 0x07
-            warm = [r.rs(eff) for _ in range(order)]
-            res = _read_residual(r, blocksize, order)
-            s = _fixed_restore(res, warm, order)
-        elif t >= 0b100000:  # LPC
-            order = (t & 0x1F) + 1
-            warm = [r.rs(eff) for _ in range(order)]
-            prec = r.r(4) + 1
-            if prec == 16:
-                raise ValueError("FLAC invalid LPC precision")
-            shift = r.rs(5)
-            if shift < 0:
-                raise ValueError("FLAC negative LPC shift")
-            coefs = [r.rs(prec) for _ in range(order)]
-            res = _read_residual(r, blocksize, order)
-            s = _np.empty(blocksize, dtype=_np.int64)
-            s[:order] = warm
-            for i in range(order, blocksize):
-                pred = 0
-                for j in range(order):
-                    pred += coefs[j] * int(s[i - 1 - j])
-                s[i] = int(res[i - order]) + (pred >> shift)
-        else:
-            raise ValueError("FLAC reserved subframe type")
-        return s << wasted
-
-    _BPS_CODE = {8: 0b001, 12: 0b010, 16: 0b100, 20: 0b101, 24: 0b110}
-    _BPS_FROM = {v: k for k, v in _BPS_CODE.items()}
-
-    def encode(samples, sample_rate: int, bps: int = 16,
-               blocksize: int = 4096, stereo: str = "independent") -> bytes:
-        """(n, channels) int samples → complete FLAC stream. ``stereo``
-        picks the channel assignment for 2-channel input: independent /
-        left_side / right_side / mid_side (decorrelation is lossless
-        either way — the decoder undoes it exactly)."""
-        import hashlib
-
-        s = _np.asarray(samples, dtype=_np.int64)
-        if s.ndim == 1:
-            s = s[:, None]
-        n, ch = s.shape
-        if bps not in _BPS_CODE:
-            raise ValueError(f"unsupported bits-per-sample {bps}")
-        if ch != 2 and stereo != "independent":
-            raise ValueError("decorrelated stereo needs exactly 2 channels")
-        # RFC 9639 §9.1.1: MD5 input packs each sample into the SMALLEST
-        # whole number of bytes — ceil(bps/8), so 12-bit samples take 2
-        # bytes and 20-bit take 3 (bps//8 truncates both to widths that
-        # overflow int.to_bytes).
-        width = (bps + 7) // 8
-        md5 = hashlib.md5()
-        # MD5 covers the unencoded interleaved little-endian signed stream
-        inter = s.reshape(-1)
-        raw = bytearray()
-        for v in inter:
-            raw += int(v).to_bytes(width, "little", signed=True)
-        md5.update(bytes(raw))
-
-        frames = bytearray()
-        nframes = (n + blocksize - 1) // blocksize or 1
-        assign = {"independent": ch - 1, "left_side": 8,
-                  "right_side": 9, "mid_side": 10}[stereo]
-        for fi in range(nframes):
-            blk = s[fi * blocksize:(fi + 1) * blocksize]
-            bs = blk.shape[0] if blk.shape[0] else 0
-            if bs == 0:
-                break
-            hw = _W()
-            hw.w(0b11111111111110, 14)
-            hw.w(0, 1)  # reserved
-            hw.w(0, 1)  # fixed-blocksize stream
-            hw.w(0b0111, 4)  # 16-bit blocksize-1 at header end
-            hw.w(0, 4)  # rate from STREAMINFO
-            hw.w(assign, 4)
-            hw.w(_BPS_CODE[bps], 3)
-            hw.w(0, 1)  # reserved
-            _utf8_num(hw, fi)
-            hw.w(bs - 1, 16)
-            hw.align()
-            header = hw.bytes()
-            body = _W()
-            if stereo == "independent":
-                subs = [(blk[:, c], bps) for c in range(ch)]
-            else:
-                left = blk[:, 0]
-                right = blk[:, 1]
-                side = left - right
-                if stereo == "left_side":
-                    subs = [(left, bps), (side, bps + 1)]
-                elif stereo == "right_side":
-                    subs = [(side, bps + 1), (right, bps)]
-                else:  # mid_side
-                    mid = (left + right) >> 1
-                    subs = [(mid, bps), (side, bps + 1)]
-            for vals, sbps in subs:
-                _write_subframe(body, vals, sbps)
-            body.align()
-            frame = header + bytes([crc8(header)]) + body.bytes()
-            frames += frame + _struct.pack(">H", crc16(frame))
-
-        si = _W()
-        si.w(blocksize, 16)  # min blocksize
-        si.w(blocksize, 16)  # max blocksize
-        si.w(0, 24)  # min framesize unknown
-        si.w(0, 24)  # max framesize unknown
-        si.w(sample_rate, 20)
-        si.w(ch - 1, 3)
-        si.w(bps - 1, 5)
-        si.w(n, 36)
-        info = si.bytes() + md5.digest()
-        return (b"fLaC" + bytes([0x80]) + len(info).to_bytes(3, "big")
-                + info + bytes(frames))
-
-    _BLOCKSIZE_FIXED = {0b0001: 192}
-    for _c in range(0b0010, 0b0110):
-        _BLOCKSIZE_FIXED[_c] = 576 << (_c - 0b0010)
-    for _c in range(0b1000, 0b10000):
-        _BLOCKSIZE_FIXED[_c] = 256 << (_c - 0b1000)
-    _RATE_FIXED = {0b0001: 88200, 0b0010: 176400, 0b0011: 192000,
-                   0b0100: 8000, 0b0101: 16000, 0b0110: 22050,
-                   0b0111: 24000, 0b1000: 32000, 0b1001: 44100,
-                   0b1010: 48000, 0b1011: 96000}
-
-    def decode(payload: bytes, verify_md5: bool = False):
-        """FLAC stream → dict(sample_rate, n_channels, bps, samples
-        (n, ch) int64). Returns None when the payload is not FLAC;
-        raises ValueError on a corrupt stream (bad CRC, reserved
-        codes, truncation)."""
-        import hashlib
-
-        if len(payload) < 42 or payload[:4] != b"fLaC":
-            return None
-        pos = 4
-        info = None
-        while True:
-            if pos + 4 > len(payload):
-                raise ValueError("FLAC truncated in metadata")
-            hdr = payload[pos]
-            length = int.from_bytes(payload[pos + 1:pos + 4], "big")
-            body = payload[pos + 4:pos + 4 + length]
-            if hdr & 0x7F == 0:
-                info = body
-            pos += 4 + length
-            if hdr & 0x80:
-                break
-        if info is None or len(info) < 34:
-            raise ValueError("FLAC missing STREAMINFO")
-        ir = _R(info)
-        ir.r(16)
-        ir.r(16)
-        ir.r(24)
-        ir.r(24)
-        rate = ir.r(20)
-        ch = ir.r(3) + 1
-        bps = ir.r(5) + 1
-        total = ir.r(36)
-        md5_expect = info[18:34]
-
-        chans = [[] for _ in range(ch)]
-        got = 0
-        while got < total and pos < len(payload):
-            frame_start = pos
-            r = _R(payload, pos * 8)
-            if r.r(14) != 0b11111111111110:
-                raise ValueError("FLAC lost frame sync")
-            r.r(1)
-            r.r(1)  # blocking strategy (number semantics only)
-            bs_code = r.r(4)
-            rate_code = r.r(4)
-            assign = r.r(4)
-            bps_code = r.r(3)
-            r.r(1)
-            _utf8_num_read(r)
-            if bs_code == 0b0110:
-                bs = r.r(8) + 1
-            elif bs_code == 0b0111:
-                bs = r.r(16) + 1
-            elif bs_code in _BLOCKSIZE_FIXED:
-                bs = _BLOCKSIZE_FIXED[bs_code]
-            else:
-                raise ValueError("FLAC reserved blocksize code")
-            if rate_code == 0b1100:
-                r.r(8)
-            elif rate_code in (0b1101, 0b1110):
-                r.r(16)
-            elif rate_code == 0b1111:
-                raise ValueError("FLAC invalid sample-rate code")
-            fbps = bps if bps_code == 0 else _BPS_FROM.get(bps_code)
-            if fbps is None:
-                raise ValueError("FLAC reserved sample-size code")
-            r.align()
-            hdr_len = r.p // 8 - frame_start
-            if crc8(payload[frame_start:frame_start + hdr_len]) != r.r(8):
-                raise ValueError("FLAC frame-header CRC mismatch")
-            if assign <= 7:
-                nsub = assign + 1
-                extra = [0] * nsub
-            elif assign in (8, 9, 10):
-                nsub = 2
-                extra = [0, 1] if assign in (8, 10) else [1, 0]
-            else:
-                raise ValueError("FLAC reserved channel assignment")
-            subs = [_read_subframe(r, bs, fbps + extra[i]) for i in range(nsub)]
-            r.align()
-            end = r.p // 8
-            if crc16(payload[frame_start:end]) != r.r(16):
-                raise ValueError("FLAC frame CRC-16 mismatch")
-            pos = end + 2
-            if assign <= 7:
-                out = subs
-            elif assign == 8:  # left/side
-                out = [subs[0], subs[0] - subs[1]]
-            elif assign == 9:  # right/side
-                out = [subs[1] + subs[0], subs[1]]
-            else:  # mid/side
-                mid2 = (subs[0] << 1) | (subs[1] & 1)
-                left = (mid2 + subs[1]) >> 1
-                out = [left, left - subs[1]]
-            keep = min(bs, total - got)
-            for c in range(len(out)):
-                chans[c].extend(out[c][:keep].tolist())
-            got += keep
-        if got != total:
-            raise ValueError("FLAC stream ended before total samples")
-        samples = _np.asarray(chans, dtype=_np.int64).T if ch else _np.empty((0, 0))
-        if verify_md5:
-            width = (bps + 7) // 8  # ceil — must mirror encode's packing
-            raw = bytearray()
-            for v in samples.reshape(-1):
-                raw += int(v).to_bytes(width, "little", signed=True)
-            if hashlib.md5(bytes(raw)).digest() != md5_expect:
-                raise ValueError("FLAC decoded audio MD5 mismatch")
-        return {
-            "sample_rate": rate,
-            "n_channels": ch,
-            "bps": bps,
-            "samples": samples,
-        }
-
-    return encode, decode
-
-
-def _flac_parser():
-    """FLAC → the WAV-parser feature contract (see _wav_parser): rms_q
-    in 16-bit-equivalent units so the feature is comparable across
-    codecs and bit depths."""
-    _enc, _dec = _flac_codec()
-
-    def parse(payload: bytes) -> dict | None:
-        import numpy as np
-
-        meta = _dec(payload)
-        if meta is None:
-            return None
-        s = meta["samples"].astype("int64")
-        shift = meta["bps"] - 16
-        s16 = (s >> shift) if shift >= 0 else (s << -shift)
-        n_samples = s.shape[0]
-        rate = meta["sample_rate"]
-        rms_q = int(np.sqrt(np.mean(s16.astype("int64") ** 2))) if s.size else 0
-        return {
-            "sample_rate": rate,
-            "n_channels": meta["n_channels"],
-            "n_samples": n_samples,
-            "duration_ms": (n_samples * 1000) // rate if rate else 0,
-            "rms_q": rms_q,
-        }
-
-    return parse
-
-
-#: Dependency-free FLAC decode to the shared audio-feature contract.
-parse_flac = _flac_parser()
-
-
-def _make_flac_synth_batches():
-    """Synthesize a deterministic 16-bit stream per document and encode
-    it as REAL FLAC — ``v[k] = (doc_id*37 + k*11) % 4001 - 2000``,
-    ``1 + doc_id % 2`` channels, ``120 + n_bytes % 200`` frames — with
-    the stereo decorrelation mode rotating by doc_id (independent /
-    left-side / mid-side), so the decoder's decorrelation paths are all
-    driver-verified. Losslessness makes the oracle exact: DuckDB
+def _flac_synth_rows(doc_id: int, nb: int):
+    """A deterministic 16-bit stream per document encoded as REAL FLAC —
+    ``v[k] = (doc_id*37 + k*11) % 4001 - 2000``, ``1 + doc_id % 2``
+    channels, ``120 + n_bytes % 200`` frames — with the stereo
+    decorrelation mode rotating by doc_id (independent / left-side /
+    mid-side), so the decoder's decorrelation paths are all
+    oracle-checked. Losslessness makes the oracle exact: DuckDB
     recomputes the features straight from the sample formula."""
-    _enc, _dec = _flac_codec()
-
-    def synth_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        modes = ["independent", "left_side", "mid_side"]
-        for pdf in batches:
-            payloads = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id = int(doc_id)
-                channels = 1 + doc_id % 2
-                frames = 120 + int(nb) % 200
-                k = _np.arange(frames * channels, dtype="int64")
-                vals = ((doc_id * 37 + k * 11) % 4001 - 2000).reshape(
-                    frames, channels
-                )
-                mode = modes[doc_id % 3] if channels == 2 else "independent"
-                payloads.append(
-                    _enc(vals, AUDIO_RATE, bps=16, blocksize=256, stereo=mode)
-                )
-            yield _pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
-
-    return synth_batches
-
-
-def _make_flac_feature_batches():
-    _parse = _flac_parser()
-
-    def feature_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                meta = _parse(bytes(payload))
-                if meta is not None:
-                    rows.append({"doc_id": doc_id, **meta})
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "sample_rate", "n_channels",
-                    "n_samples", "duration_ms", "rms_q",
-                ],
-            )
-
-    return feature_batches
+    channels = 1 + doc_id % 2
+    frames = 120 + nb % 200
+    k = np.arange(frames * channels, dtype="int64")
+    vals = ((doc_id * 37 + k * 11) % 4001 - 2000).reshape(frames, channels)
+    mode = _FLAC_STEREO[doc_id % 3] if channels == 2 else "independent"
+    payload = flac_encode(vals, AUDIO_RATE, bps=16, blocksize=256, stereo=mode)
+    yield {"doc_id": doc_id, "payload": payload}
 
 
 def multimodal_flac(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
@@ -1371,10 +708,10 @@ def multimodal_flac(spark: SparkSession, sf_dir: str | None = None) -> DataFrame
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    flac = _spread(audio_docs).mapInPandas(
-        _make_flac_synth_batches(), schema="doc_id long, payload binary"
+    flac = _map_docs(_spread(audio_docs), _flac_synth_rows, PAYLOAD_SCHEMA)
+    return _map_docs(
+        flac, partial(_audio_rows, parse_flac), AUDIO_SCHEMA, source="payload"
     )
-    return flac.mapInPandas(_make_flac_feature_batches(), schema=AUDIO_SCHEMA)
 
 
 ORACLES["multimodal_flac"] = f"""
@@ -1408,6 +745,7 @@ FROM a JOIN q ON a.doc_id = q.doc_id
 
 # ------------------------------------------ MP4 container metadata
 
+
 def parse_mp4_header(payload: bytes) -> dict | None:
     """Dependency-free MP4/ISO-BMFF metadata decode: top-level box walk
     to `moov`, then `mvhd` (movie timescale + duration, version 0 and
@@ -1415,8 +753,6 @@ def parse_mp4_header(payload: bytes) -> dict | None:
     metadata pipeline performs. Frame-accurate pixel decode stays out
     of scope (that genuinely needs a codec library). Returns None for
     non-MP4 payloads."""
-    import struct
-
     def boxes(buf, pos, end):
         while pos + 8 <= end:
             (size,) = struct.unpack(">I", buf[pos:pos + 4])
@@ -1462,355 +798,6 @@ def parse_mp4_header(payload: bytes) -> dict | None:
 
 # ------------------------------------------ PNG pixel decode (r6)
 
-PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _png_codec():
-    """Build the REAL dependency-free PNG codec triple (encode, decode,
-    encode_palette) covering EVERY color-type/depth combination RFC
-    2083 §4.1.1 defines (r9 closed the last two gates — alpha color
-    types 4/6 and sub-byte depths 1/2/4; r8 added palette/Adam7/16-bit
-    over r6/r7's 8-bit non-interlaced gray/truecolor) — zlib (stdlib)
-    handles the DEFLATE layer, so PNG pixels need no external codec
-    library at all; this closes the pixel half of the compressed-codec
-    seam for the one format where that is possible dependency-free
-    (JPEG/MP3/H.264 still need real codec libraries). With the full
-    IHDR matrix supported, an invalid combination is now corrupt input
-    (ValueError), not a NotImplementedError gate.
-
-    The pair is built inside a factory so mapInPandas closures capture
-    NESTED functions (cloudpickle serializes those by value — executors
-    lack this package on their import path; see _make_extract_batches).
-
-    Encoder (test-vector/synthesis side) applies a per-scanline filter
-    ``y % 5`` — every filter type the spec defines (None/Sub/Up/
-    Average/Paeth) appears, so the decoder's unfilterer is genuinely
-    exercised, and writes CRC-correct IHDR/IDAT/IEND chunks. Decoder
-    verifies chunk CRCs (ValueError on corruption), enforces the
-    supported subset honestly (NotImplementedError otherwise), inflates
-    the IDAT stream, and reverses the filters."""
-    import struct as _struct
-    import zlib as _zlib
-
-    import numpy as _np
-
-    def _chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            _struct.pack(">I", len(data))
-            + ctype
-            + data
-            + _struct.pack(">I", _zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    def _paeth(left: int, up: int, ul: int) -> int:
-        pa = abs(up - ul)
-        pb = abs(left - ul)
-        pc = abs(left + up - 2 * ul)
-        if pa <= pb and pa <= pc:
-            return left
-        return up if pb <= pc else ul
-
-    # Adam7: (x0, y0, dx, dy) per pass, spec order
-    PASSES = (
-        (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-        (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-    )
-
-    def _filter_rows(raw, bpp: int) -> bytes:
-        """Filter (nrows, nb) int32 scanline BYTES with the y%5 cycle —
-        every spec filter appears. PNG filters are BYTEWISE with "left"
-        meaning `bpp` bytes earlier (RFC 2083 §6.2), so every color
-        type/depth runs the same code; only the stride differs."""
-        nrows, nb = raw.shape
-        lines = []
-        for y in range(nrows):
-            ft = y % 5
-            row = raw[y]
-            prior = raw[y - 1] if y else _np.zeros(nb, _np.int32)
-            left = _np.concatenate((_np.zeros(bpp, _np.int32), row[:-bpp]))
-            ul = _np.concatenate((_np.zeros(bpp, _np.int32), prior[:-bpp]))
-            if ft == 0:
-                filt = row
-            elif ft == 1:  # Sub
-                filt = row - left
-            elif ft == 2:  # Up
-                filt = row - prior
-            elif ft == 3:  # Average
-                filt = row - (left + prior) // 2
-            else:  # Paeth
-                filt = row - _np.array(
-                    [_paeth(int(left[x]), int(prior[x]), int(ul[x]))
-                     for x in range(nb)],
-                    dtype=_np.int32,
-                )
-            lines.append(bytes([ft]) + (filt % 256).astype(_np.uint8).tobytes())
-        return b"".join(lines)
-
-    def _pack_bits(samples, depth: int):
-        """(h, w) sub-byte samples -> (h, ceil(w·depth/8)) packed byte
-        matrix, MSB-first within each byte (RFC 2083 §2.3); scanlines
-        pad to a byte boundary with zero bits."""
-        h, w = samples.shape
-        spb = 8 // depth  # samples per byte
-        pad = (-w) % spb
-        padded = _np.pad(samples.astype(_np.uint8), ((0, 0), (0, pad)))
-        grouped = padded.reshape(h, -1, spb).astype(_np.int32)
-        out = _np.zeros((h, grouped.shape[1]), dtype=_np.int32)
-        for i in range(spb):
-            out |= grouped[:, :, i] << (depth * (spb - 1 - i))
-        return out
-
-    def _to_bytes(px, depth: int):
-        """(h, w[, ch]) samples -> (h, rowbytes) byte matrix (big-endian
-        for 16-bit, MSB-first packed for sub-byte) + filter bpp."""
-        h, w = px.shape[:2]
-        ch = 1 if px.ndim == 2 else px.shape[2]
-        if depth in (1, 2, 4):
-            # sub-byte is single-channel only (gray / palette indices);
-            # the filter's "left" distance is one byte regardless
-            return _pack_bits(px, depth), 1
-        if depth == 8:
-            b = px.astype(_np.uint8).reshape(h, w * ch)
-            return b.astype(_np.int32), ch
-        hi = (px.astype(_np.uint16) >> 8).astype(_np.uint8)
-        lo = (px.astype(_np.uint16) & 0xFF).astype(_np.uint8)
-        inter = _np.stack([hi, lo], axis=-1).reshape(h, w * ch * 2)
-        return inter.astype(_np.int32), ch * 2
-
-    def _scan_stream(px, depth: int, interlace: int) -> bytes:
-        """Full filtered scanline stream, sequential or Adam7 (each
-        pass filtered independently; empty passes emit nothing)."""
-        if not interlace:
-            raw, bpp = _to_bytes(px, depth)
-            return _filter_rows(raw, bpp)
-        out = []
-        for x0, y0, dx, dy in PASSES:
-            sub = px[y0::dy, x0::dx]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue
-            raw, bpp = _to_bytes(sub, depth)
-            out.append(_filter_rows(raw, bpp))
-        return b"".join(out)
-
-    def encode(pixels, interlace: bool = False, depth: int | None = None) -> bytes:
-        """Pixels to a complete filtered+deflated PNG, sequential or
-        Adam7-interlaced. Channel count picks the color type: (h, w) →
-        grayscale 0, (h, w, 2) → gray+alpha 4, (h, w, 3) → truecolor 2,
-        (h, w, 4) → RGBA 6 (r9). Depth defaults from dtype (uint16 →
-        16, else 8); pass depth 1/2/4 for sub-byte grayscale (samples
-        must fit the depth)."""
-        px = _np.asarray(pixels)
-        if depth is None:
-            depth = 16 if px.dtype == _np.uint16 else 8
-        if depth in (1, 2, 4):
-            if px.ndim != 2:
-                raise ValueError("sub-byte PNG depths are grayscale-only")
-            if int(px.max(initial=0)) >= (1 << depth):
-                raise ValueError(f"sample out of range for depth {depth}")
-            px = px.astype(_np.uint8)
-            color_type = 0
-        else:
-            px = px.astype(_np.uint16 if depth == 16 else _np.uint8)
-            ch = 1 if px.ndim == 2 else px.shape[2]
-            color_type = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
-            if ch == 1 and px.ndim == 3:
-                px = px[..., 0]
-        h, w = px.shape[:2]
-        ihdr = _struct.pack(
-            ">IIBBBBB", w, h, depth, color_type, 0, 0, int(interlace)
-        )
-        return (
-            PNG_SIG
-            + _chunk(b"IHDR", ihdr)
-            + _chunk(b"IDAT", _zlib.compress(_scan_stream(px, depth, interlace)))
-            + _chunk(b"IEND", b"")
-        )
-
-    def encode_palette(
-        indices, palette, interlace: bool = False, depth: int = 8
-    ) -> bytes:
-        """PALETTE image (color type 3): (h, w) uint8 indices + an
-        (n, 3) uint8 palette -> PNG with a PLTE chunk. ``depth``
-        1/2/4/8 (r9 adds the sub-byte index packings)."""
-        idx = _np.asarray(indices, dtype=_np.uint8)
-        pal = _np.asarray(palette, dtype=_np.uint8).reshape(-1, 3)
-        if depth not in (1, 2, 4, 8):
-            raise ValueError("palette depth must be 1, 2, 4, or 8")
-        if int(idx.max(initial=0)) >= (1 << depth):
-            raise ValueError(f"palette index out of range for depth {depth}")
-        h, w = idx.shape
-        ihdr = _struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, int(interlace))
-        return (
-            PNG_SIG
-            + _chunk(b"IHDR", ihdr)
-            + _chunk(b"PLTE", pal.tobytes())
-            + _chunk(b"IDAT", _zlib.compress(_scan_stream(idx, depth, interlace)))
-            + _chunk(b"IEND", b"")
-        )
-
-    def _unfilter(raw: bytes, pos: int, nrows: int, nb: int, bpp: int):
-        """Reverse the scanline filters for one (sub-)image; returns
-        ((nrows, nb) uint8 bytes, new stream position)."""
-        if pos + nrows * (nb + 1) > len(raw):
-            raise ValueError("PNG pixel payload has the wrong length")
-        out = _np.zeros((nrows, nb), dtype=_np.uint8)
-        for y in range(nrows):
-            ft = raw[pos]
-            line = _np.frombuffer(
-                raw[pos + 1 : pos + 1 + nb], dtype=_np.uint8
-            ).astype(_np.int32)
-            pos += 1 + nb
-            prior = (
-                out[y - 1].astype(_np.int32) if y else _np.zeros(nb, _np.int32)
-            )
-            if ft == 0:
-                rec = line
-            elif ft == 2:
-                rec = (line + prior) % 256
-            elif ft in (1, 3, 4):
-                rec = _np.empty(nb, _np.int32)
-                for x in range(nb):
-                    left = int(rec[x - bpp]) if x >= bpp else 0
-                    up = int(prior[x])
-                    ul = int(prior[x - bpp]) if x >= bpp else 0
-                    if ft == 1:
-                        pred = left
-                    elif ft == 3:
-                        pred = (left + up) // 2
-                    else:
-                        pred = _paeth(left, up, ul)
-                    rec[x] = (int(line[x]) + pred) % 256
-            else:
-                raise ValueError(f"PNG scanline filter {ft} is invalid")
-            out[y] = rec.astype(_np.uint8)
-        return out, pos
-
-    def decode(payload: bytes):
-        if payload[:8] != PNG_SIG:
-            raise ValueError("not a PNG (bad signature)")
-        pos, idat, ihdr, plte = 8, [], None, None
-        while pos + 8 <= len(payload):
-            (length,) = _struct.unpack(">I", payload[pos : pos + 4])
-            ctype = payload[pos + 4 : pos + 8]
-            if pos + 12 + length > len(payload):
-                # struct.error is not a ValueError — truncation must
-                # surface through the documented corrupt-input contract
-                raise ValueError(f"PNG truncated inside chunk {ctype!r}")
-            data = payload[pos + 8 : pos + 8 + length]
-            (crc,) = _struct.unpack(
-                ">I", payload[pos + 8 + length : pos + 12 + length]
-            )
-            if _zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-                raise ValueError(f"PNG chunk {ctype!r} CRC mismatch")
-            if ctype == b"IHDR":
-                ihdr = _struct.unpack(">IIBBBBB", data)
-            elif ctype == b"PLTE":
-                plte = data
-            elif ctype == b"IDAT":
-                idat.append(data)
-            elif ctype == b"IEND":
-                break
-            pos += 12 + length
-        if ihdr is None or not idat:
-            raise ValueError("PNG missing IHDR/IDAT")
-        w, h, depth, color, comp, filt, interlace = ihdr
-        # every IHDR shape the spec defines (RFC 2083 §4.1.1) decodes
-        # since r9: alpha color types 4/6 and sub-byte depths closed
-        # the last honest gates — the check below now only rejects
-        # combinations the SPEC forbids (corrupt input, ValueError)
-        _VALID = {0: (1, 2, 4, 8, 16), 2: (8, 16), 3: (1, 2, 4, 8),
-                  4: (8, 16), 6: (8, 16)}
-        if (
-            color not in _VALID
-            or depth not in _VALID[color]
-            or (comp, filt) != (0, 0)
-            or interlace not in (0, 1)
-        ):
-            raise ValueError(
-                "invalid PNG IHDR combination: "
-                f"depth={depth} color={color} comp={comp} filt={filt} "
-                f"interlace={interlace}"
-            )
-        if color == 3 and plte is None:
-            raise ValueError("palette PNG is missing its PLTE chunk")
-        nch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color]
-        raw = _zlib.decompress(b"".join(idat))
-
-        def _unpack_bits(mat, width: int):
-            """(n, rowbytes) packed bytes -> (n, width) samples,
-            MSB-first (the _pack_bits inverse)."""
-            spb = 8 // depth
-            mask = (1 << depth) - 1
-            n, nb = mat.shape
-            out = _np.zeros((n, nb * spb), dtype=_np.uint8)
-            for i in range(spb):
-                out[:, i::spb] = (
-                    mat.astype(_np.int32) >> (depth * (spb - 1 - i))
-                ) & mask
-            return out[:, :width]
-
-        if depth in (1, 2, 4):
-            rb = (w * depth + 7) // 8
-            if interlace == 0:
-                flat, end = _unfilter(raw, 0, h, rb, 1)
-                if end != len(raw):
-                    raise ValueError("PNG pixel payload has the wrong length")
-                samples = _unpack_bits(flat, w)[..., None]
-            else:
-                samples = _np.zeros((h, w, 1), dtype=_np.uint8)
-                spos = 0
-                for x0, y0, dx, dy in PASSES:
-                    ph = len(range(y0, h, dy))
-                    pw = len(range(x0, w, dx))
-                    if ph == 0 or pw == 0:
-                        continue
-                    prb = (pw * depth + 7) // 8
-                    sub, spos = _unfilter(raw, spos, ph, prb, 1)
-                    samples[y0::dy, x0::dx, 0] = _unpack_bits(sub, pw)
-                if spos != len(raw):
-                    raise ValueError("PNG pixel payload has the wrong length")
-        else:
-            bpp = nch * (depth // 8)
-            if interlace == 0:
-                flat, end = _unfilter(raw, 0, h, w * bpp, bpp)
-                if end != len(raw):
-                    raise ValueError("PNG pixel payload has the wrong length")
-                px_bytes = flat.reshape(h, w, bpp)
-            else:  # Adam7: each pass is an independently-filtered sub-image
-                px_bytes = _np.zeros((h, w, bpp), dtype=_np.uint8)
-                spos = 0
-                for x0, y0, dx, dy in PASSES:
-                    ph = len(range(y0, h, dy))
-                    pw = len(range(x0, w, dx))
-                    if ph == 0 or pw == 0:
-                        continue
-                    sub, spos = _unfilter(raw, spos, ph, pw * bpp, bpp)
-                    px_bytes[y0::dy, x0::dx] = sub.reshape(ph, pw, bpp)
-                if spos != len(raw):
-                    raise ValueError("PNG pixel payload has the wrong length")
-            if depth == 16:
-                hi = px_bytes[..., 0::2].astype(_np.uint16)
-                lo = px_bytes[..., 1::2].astype(_np.uint16)
-                samples = (hi << 8) | lo  # (h, w, nch) uint16
-            else:
-                samples = px_bytes
-        if color == 3:
-            pal = _np.frombuffer(plte, dtype=_np.uint8).reshape(-1, 3)
-            idx = samples[..., 0]
-            if int(idx.max(initial=0)) >= pal.shape[0]:
-                raise ValueError("palette index out of range")
-            return pal[idx]  # (h, w, 3) uint8
-        return samples[..., 0] if nch == 1 else samples
-
-    return encode, decode, encode_palette
-
-
-# module-level pair for driver-side use and the pytest vectors.
-# r7 extended the codec to truecolor (color type 2), so the canonical
-# names drop the `_gray` suffix; the old names remain as aliases for
-# any external callers pinned to the r6 surface.
-png_encode, png_decode, png_encode_palette = _png_codec()
-png_encode_gray, png_decode_gray = png_encode, png_decode
 
 PIXELS_SCHEMA = StructType(
     [
@@ -1826,51 +813,28 @@ PIXELS_SCHEMA = StructType(
 )
 
 
-def _make_pixels_batches():
-    """Closure for cloudpickle-by-value (see _make_extract_batches):
-    synthesize a REAL filtered+deflated PNG per image doc (deterministic
-    pixels p(x,y) = (doc_id·7 + y·31 + x·13) mod 256), then run the REAL
-    decoder on the bytes and reduce to pixel statistics. Encoder and
+def _png_gray(doc_id: int, nb: int):
+    """The gray PNG of an image doc — p(x,y) = (doc_id·7 + y·31 +
+    x·13) mod 256 — after a real encode → decode roundtrip. Encoder and
     decoder are independent code paths (filters applied forward vs
     reversed), so a bug in either breaks the oracle parity."""
-    encode, decode, *_pal = _png_codec()
+    w, h = 8 + doc_id % 9, 8 + nb % 9
+    y, x = np.mgrid[0:h, 0:w]
+    px = ((doc_id * 7 + y * 31 + x * 13) % 256).astype(np.uint8)
+    return png_decode(png_encode(px))
 
-    def pixel_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
 
-        for pdf in batches:
-            rows = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id, nb = int(doc_id), int(nb)
-                w, h = 8 + doc_id % 9, 8 + nb % 9
-                y, x = _np.mgrid[0:h, 0:w]
-                px = ((doc_id * 7 + y * 31 + x * 13) % 256).astype(_np.uint8)
-                recovered = decode(encode(px)).astype(_np.int64)
-                weight = 1 + (x * 131 + y * 137) % 251
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixels": int(recovered.size),
-                        "px_min": int(recovered.min()),
-                        "px_max": int(recovered.max()),
-                        "px_sum": int(recovered.sum()),
-                        "px_checksum": int((recovered * weight).sum()),
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return pixel_batches
+def _pixels_rows(doc_id: int, nb: int):
+    rec = _png_gray(doc_id, nb)
+    h, w = rec.shape
+    yield {"doc_id": doc_id, "width": w, "height": h,
+           **_gray_stats(rec, _weight(h, w, *_WP))}
 
 
 def multimodal_pixels(spark: SparkSession, sf_dir: str | None = None) -> DataFrame:
     """The registered PNG pixel-decode query (multimodal_digest member,
     r6): per image doc, a real zlib-compressed PNG (all five scanline
-    filters) round-trips through :func:`png_decode_gray`'s genuine
+    filters) round-trips through :func:`png_decode`'s genuine
     inflate + unfilter path, and the recovered pixels reduce to
     position-weighted statistics. The DuckDB oracle regenerates the
     pixels from the formula and recomputes every column — the weighted
@@ -1882,9 +846,7 @@ def multimodal_pixels(spark: SparkSession, sf_dir: str | None = None) -> DataFra
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    return _spread(image_docs).mapInPandas(
-        _make_pixels_batches(), schema=PIXELS_SCHEMA
-    )
+    return _map_docs(_spread(image_docs), _pixels_rows, PIXELS_SCHEMA)
 
 
 ORACLES["multimodal_pixels"] = """
@@ -1920,413 +882,6 @@ FROM v GROUP BY doc_id
 
 # ------------------------------------- GIF animated-frame decode (r6)
 
-GIF_MIN_CODE = 8  # 256-entry palette
-
-
-def _gif_codec():
-    """Build the REAL dependency-free GIF codec pair (encode_frames,
-    decode_frames) for non-interlaced frames over a 256-entry global
-    palette — GIF's compression layer is LZW, implementable exactly in
-    ~60 lines each way, so animated-GIF FRAMES decode with no codec
-    library: this realizes real frame extraction for the one video-ish
-    container where that is possible dependency-free (H.264/VP9 frames
-    still need real codecs). Encoder and decoder are independent LZW
-    implementations (dictionary-build vs dictionary-replay), covering
-    code-size growth (9→12 bits) and mid-stream dictionary resets.
-
-    Nested-function factory for cloudpickle-by-value (see
-    _make_extract_batches)."""
-    import struct as _struct
-
-    import numpy as _np
-
-    clear, eoi = 1 << GIF_MIN_CODE, (1 << GIF_MIN_CODE) + 1
-
-    def lzw_encode(data: bytes) -> bytes:
-        out_bits: list[tuple[int, int]] = []
-        size = GIF_MIN_CODE + 1
-        nxt = eoi + 1
-        dict_ = {bytes([i]): i for i in range(1 << GIF_MIN_CODE)}
-        out_bits.append((clear, size))
-        w = b""
-        for b in data:
-            k = bytes([b])
-            if w + k in dict_:
-                w = w + k
-                continue
-            out_bits.append((dict_[w], size))
-            dict_[w + k] = nxt
-            nxt += 1
-            if nxt == (1 << size) + 1 and size < 12:
-                size += 1
-            if nxt > 4095:  # dictionary full — reset (the spec's CLEAR)
-                out_bits.append((clear, size))
-                dict_ = {bytes([i]): i for i in range(1 << GIF_MIN_CODE)}
-                size = GIF_MIN_CODE + 1
-                nxt = eoi + 1
-            w = k
-        if w:
-            out_bits.append((dict_[w], size))
-            # the flush emission adds NO dict entry on the encoder side,
-            # but the decoder still appends one after replaying it — if
-            # that append lands its table exactly on 2^size, the decoder
-            # reads the NEXT code (EOI) one bit wider, so the encoder
-            # must grow too or the stream desyncs (surfaced only when
-            # the bitstream also ends on a byte boundary — no padding
-            # bits to absorb the misread)
-            if nxt == (1 << size) and size < 12:
-                size += 1
-        out_bits.append((eoi, size))
-        acc = n = 0
-        out = bytearray()
-        for code, s in out_bits:
-            acc |= code << n
-            n += s
-            while n >= 8:
-                out.append(acc & 0xFF)
-                acc >>= 8
-                n -= 8
-        if n:
-            out.append(acc & 0xFF)
-        return bytes(out)
-
-    def lzw_decode(data: bytes, min_code: int = GIF_MIN_CODE) -> bytes:
-        pos = acc = nbits = 0
-        clear_c, eoi_c = 1 << min_code, (1 << min_code) + 1
-
-        def read(size: int) -> int:
-            nonlocal pos, acc, nbits
-            while nbits < size:
-                if pos >= len(data):
-                    raise ValueError("GIF LZW stream truncated")
-                acc |= data[pos] << nbits
-                pos += 1
-                nbits += 8
-            code = acc & ((1 << size) - 1)
-            acc >>= size
-            nbits -= size
-            return code
-
-        size = min_code + 1
-        table = [bytes([i]) for i in range(1 << min_code)] + [b"", b""]
-        out = bytearray()
-        prev = None
-        while True:
-            code = read(size)
-            if code == clear_c:
-                table = [bytes([i]) for i in range(1 << min_code)] + [b"", b""]
-                size = min_code + 1
-                prev = None
-                continue
-            if code == eoi_c:
-                break
-            if prev is None:
-                entry = table[code]
-            elif code < len(table):
-                entry = table[code]
-                table.append(prev + entry[:1])
-            elif code == len(table):  # the KwKwK case
-                entry = prev + prev[:1]
-                table.append(entry)
-            else:
-                raise ValueError("corrupt GIF LZW code")
-            out += entry
-            if len(table) == (1 << size) and size < 12:
-                size += 1
-            prev = entry
-        return bytes(out)
-
-    def _sub_blocks(data: bytes) -> bytes:
-        out = bytearray()
-        for i in range(0, len(data), 255):
-            part = data[i : i + 255]
-            out.append(len(part))
-            out += part
-        out.append(0)
-        return bytes(out)
-
-    def encode_frames(frames) -> bytes:
-        """Animated GIF89a over the identity GRAYSCALE palette
-        (palette[i] = (i,i,i), so palette index == gray value)."""
-        frames = [_np.asarray(f, dtype=_np.uint8) for f in frames]
-        h, w = frames[0].shape
-        out = bytearray(b"GIF89a")
-        out += _struct.pack("<HH", w, h)
-        out.append(0b1111_0111)  # GCT present, 8-bit color, 256 entries
-        out += b"\x00\x00"  # bg color, aspect
-        for i in range(256):  # identity grayscale palette
-            out += bytes([i, i, i])
-        for frame in frames:
-            assert frame.shape == (h, w)
-            # Graphic Control Extension (delay 10cs, no transparency)
-            out += b"\x21\xf9\x04\x00\x0a\x00\x00\x00"
-            out += b"\x2c" + _struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
-            out.append(GIF_MIN_CODE)
-            out += _sub_blocks(lzw_encode(frame.tobytes()))
-        out += b"\x3b"
-        return bytes(out)
-
-    def decode_frames(payload: bytes):
-        """All frames as (h, w) uint8 index arrays + the palette."""
-        if payload[:6] not in (b"GIF87a", b"GIF89a"):
-            raise ValueError("not a GIF (bad signature)")
-        if len(payload) < 13:
-            raise ValueError("GIF truncated inside the screen descriptor")
-        w, h = _struct.unpack("<HH", payload[6:10])
-        packed = payload[10]
-        pos = 13
-        palette = None
-        if packed & 0x80:
-            n = 3 * (2 << (packed & 0x07))
-            palette = payload[pos : pos + n]
-            pos += n
-        frames = []
-        while pos < len(payload):
-            b = payload[pos]
-            pos += 1
-            if b == 0x3B:  # trailer
-                break
-            if b == 0x21:  # extension: label + sub-blocks
-                pos += 1
-                while pos < len(payload) and payload[pos]:
-                    pos += 1 + payload[pos]
-                pos += 1
-                continue
-            if b != 0x2C:
-                raise ValueError(f"unexpected GIF block 0x{b:02x}")
-            if pos + 10 > len(payload):
-                raise ValueError("GIF truncated inside an image descriptor")
-            left, top, fw, fh = _struct.unpack("<HHHH", payload[pos : pos + 8])
-            fpacked = payload[pos + 8]
-            pos += 9
-            if fpacked & 0xC0:
-                raise NotImplementedError(
-                    "index-frame gif decode supports non-interlaced "
-                    "frames over the global palette; interlace/local "
-                    "palettes decode through gif_decode_rgb (r8)"
-                )
-            if (left, top) != (0, 0) or (fw, fh) != (w, h):
-                # partial-rect frame updates need canvas compositing +
-                # disposal handling — the per-frame INDEX contract of
-                # this path cannot express them (the composited canvas
-                # mixes palettes); gif_decode_rgb implements them
-                raise NotImplementedError(
-                    "index-frame gif decode supports full-canvas frames "
-                    f"only; got a {fw}x{fh} sub-rect at ({left},{top}) "
-                    f"on a {w}x{h} canvas — decode composited animations "
-                    "through gif_decode_rgb (r8)"
-                )
-            min_code = payload[pos]
-            pos += 1
-            if min_code != GIF_MIN_CODE:
-                raise NotImplementedError(
-                    f"gif decode expects an 8-bit palette image, got "
-                    f"LZW min code {min_code}"
-                )
-            data = bytearray()
-            while True:
-                if pos >= len(payload):
-                    raise ValueError("GIF truncated inside frame data")
-                ln = payload[pos]
-                if not ln:
-                    break
-                data += payload[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            pos += 1
-            raw = lzw_decode(bytes(data))
-            if len(raw) != fw * fh:
-                raise ValueError("GIF frame pixel payload has the wrong length")
-            frames.append(
-                _np.frombuffer(raw, dtype=_np.uint8).reshape(fh, fw)
-            )
-        return frames, palette
-
-    # ----- full GIF89a animation semantics (r8): compositing canvas,
-    # disposal methods, transparency, local palettes, interlace -----
-
-    _ILACE = ((0, 8), (4, 8), (2, 4), (1, 2))  # Adam-style GIF passes
-
-    def _interlace_order(fh: int) -> list:
-        order = []
-        for start, step in _ILACE:
-            order.extend(range(start, fh, step))
-        return order
-
-    def encode_animation(
-        w: int, h: int, global_palette: bytes, bg_index: int, frames
-    ) -> bytes:
-        """Animated GIF89a with the FULL feature surface: per-frame
-        dicts {px: (fh, fw) uint8 indices, left, top, disposal (0-3),
-        transparent: int|None, palette: 768-byte local palette|None,
-        interlace: bool}. Interlaced frames store their rows in the
-        four-pass GIF order; the decoder reverses it."""
-        assert len(global_palette) == 768
-        out = bytearray(b"GIF89a")
-        out += _struct.pack("<HH", w, h)
-        out.append(0b1111_0111)  # GCT present, 8-bit, 256 entries
-        out += bytes([bg_index, 0])
-        out += global_palette
-        for fr in frames:
-            px = _np.asarray(fr["px"], dtype=_np.uint8)
-            fh, fw = px.shape
-            left, top = fr.get("left", 0), fr.get("top", 0)
-            disposal = fr.get("disposal", 0)
-            transparent = fr.get("transparent")
-            local = fr.get("palette")
-            interlace = bool(fr.get("interlace", False))
-            gce_packed = (disposal & 0x7) << 2
-            t_idx = 0
-            if transparent is not None:
-                gce_packed |= 1
-                t_idx = transparent
-            out += b"\x21\xf9\x04" + bytes([gce_packed, 0x0A, 0x00, t_idx, 0])
-            desc_packed = 0
-            if local is not None:
-                assert len(local) == 768
-                desc_packed |= 0x80 | 0x07
-            if interlace:
-                desc_packed |= 0x40
-            out += b"\x2c" + _struct.pack("<HHHH", left, top, fw, fh)
-            out += bytes([desc_packed])
-            if local is not None:
-                out += local
-            if interlace:
-                px = px[_interlace_order(fh)]
-            out.append(GIF_MIN_CODE)
-            out += _sub_blocks(lzw_encode(px.tobytes()))
-        out += b"\x3b"
-        return bytes(out)
-
-    def decode_rgb(payload: bytes):
-        """Decode a GIF with full animation semantics to the DISPLAYED
-        frames: list of (h, w, 3) uint8 canvases. Implements the
-        GIF89a state machine the simple index-frame path refuses:
-        sub-rect frames composited onto a persistent canvas,
-        transparency (indices that keep the underlying canvas pixel),
-        disposal none/keep (canvas persists), restore-to-background
-        (the frame's rect refills with the background color), and
-        restore-to-previous (canvas reverts to its pre-frame state);
-        local palettes override the global one per frame; interlaced
-        frames de-permute through the four-pass row order; LZW min
-        codes 2..8 supported for sub-256 palettes."""
-        if payload[:6] not in (b"GIF87a", b"GIF89a"):
-            raise ValueError("not a GIF (bad signature)")
-        if len(payload) < 13:
-            raise ValueError("GIF truncated inside the screen descriptor")
-        w, h = _struct.unpack("<HH", payload[6:10])
-        packed, bg_index = payload[10], payload[11]
-        pos = 13
-        gct = None
-        if packed & 0x80:
-            n = 3 * (2 << (packed & 0x07))
-            gct = payload[pos : pos + n]
-            pos += n
-
-        def _pal_rgb(pal: bytes):
-            arr = _np.frombuffer(pal, dtype=_np.uint8).reshape(-1, 3)
-            if arr.shape[0] < 256:  # pad: out-of-range indices are black
-                arr = _np.vstack(
-                    [arr, _np.zeros((256 - arr.shape[0], 3), _np.uint8)]
-                )
-            return arr
-
-        if gct is not None and bg_index < len(gct) // 3:
-            bg_rgb = _pal_rgb(gct)[bg_index]
-        else:
-            bg_rgb = _np.zeros(3, _np.uint8)
-        canvas = _np.tile(bg_rgb, (h, w, 1)).astype(_np.uint8)
-        frames = []
-        disposal, transparent = 0, None
-        while pos < len(payload):
-            b = payload[pos]
-            pos += 1
-            if b == 0x3B:
-                break
-            if b == 0x21:  # extension
-                label = payload[pos]
-                pos += 1
-                if label == 0xF9:  # Graphic Control Extension
-                    ln = payload[pos]
-                    # the spec-mandated GCE body is 4 bytes; a declared
-                    # or actual shorter block is corrupt input, not an
-                    # IndexError (advisor r8)
-                    if ln < 4 or pos + 1 + ln > len(payload):
-                        raise ValueError("GIF truncated inside GCE")
-                    gce = payload[pos + 1 : pos + 1 + ln]
-                    disposal = (gce[0] >> 2) & 0x7
-                    transparent = gce[3] if (gce[0] & 1) else None
-                while pos < len(payload) and payload[pos]:
-                    pos += 1 + payload[pos]
-                pos += 1
-                continue
-            if b != 0x2C:
-                raise ValueError(f"unexpected GIF block 0x{b:02x}")
-            if pos + 10 > len(payload):
-                raise ValueError("GIF truncated inside an image descriptor")
-            left, top, fw, fh = _struct.unpack("<HHHH", payload[pos : pos + 8])
-            fpacked = payload[pos + 8]
-            pos += 9
-            if left + fw > w or top + fh > h:
-                raise ValueError("GIF frame rect exceeds the canvas")
-            local = None
-            if fpacked & 0x80:
-                n = 3 * (2 << (fpacked & 0x07))
-                local = payload[pos : pos + n]
-                pos += n
-            interlace = bool(fpacked & 0x40)
-            min_code = payload[pos]
-            pos += 1
-            if not 2 <= min_code <= 8:
-                raise ValueError(f"GIF LZW min code {min_code} out of range")
-            data = bytearray()
-            while True:
-                if pos >= len(payload):
-                    raise ValueError("GIF truncated inside frame data")
-                ln = payload[pos]
-                if not ln:
-                    break
-                data += payload[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            pos += 1
-            raw = lzw_decode(bytes(data), min_code)
-            if len(raw) != fw * fh:
-                raise ValueError("GIF frame pixel payload has the wrong length")
-            idx = _np.frombuffer(raw, dtype=_np.uint8).reshape(fh, fw)
-            if interlace:
-                stored = _interlace_order(fh)
-                deperm = _np.empty(fh, _np.int64)
-                deperm[stored] = _np.arange(fh)
-                idx = idx[deperm]
-            pal = local if local is not None else gct
-            if pal is None:
-                raise ValueError("GIF frame has neither local nor global palette")
-            rgb_lut = _pal_rgb(pal)
-            snapshot = canvas.copy() if disposal == 3 else None
-            region = canvas[top : top + fh, left : left + fw]
-            if transparent is not None:
-                mask = idx != transparent
-                region[mask] = rgb_lut[idx[mask]]
-            else:
-                region[...] = rgb_lut[idx]
-            frames.append(canvas.copy())
-            if disposal == 2:  # restore rect to background
-                canvas[top : top + fh, left : left + fw] = bg_rgb
-            elif disposal == 3:  # restore to previous
-                canvas = snapshot
-            disposal, transparent = 0, None  # GCE covers ONE image
-        return frames
-
-    return encode_frames, decode_frames, encode_animation, decode_rgb
-
-
-# module-level pair for driver-side use and the pytest vectors
-(
-    gif_encode_frames,
-    gif_decode_frames,
-    gif_encode_animation,
-    gif_decode_rgb,
-) = _gif_codec()
-
 GIF_FRAMES_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -2339,50 +894,22 @@ GIF_FRAMES_SCHEMA = StructType(
 )
 
 
-def _make_gif_frames_batches():
-    """Closure for cloudpickle-by-value: synthesize a REAL animated GIF
-    per video doc (2 + doc_id % 3 frames, deterministic pixels
-    p(f,x,y) = (doc_id·7 + f·17 + y·31 + x·13) mod 256 over the
-    identity grayscale palette), then run the REAL LZW decoder on the
-    bytes and reduce each frame to position-weighted statistics."""
-    encode, decode, *_anim = _gif_codec()
-
-    def gif_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id, nb = int(doc_id), int(nb)
-                w, h = 8 + doc_id % 9, 8 + nb % 9
-                n_frames = 2 + doc_id % 3
-                y, x = _np.mgrid[0:h, 0:w]
-                frames = [
-                    ((doc_id * 7 + f * 17 + y * 31 + x * 13) % 256).astype(
-                        _np.uint8
-                    )
-                    for f in range(n_frames)
-                ]
-                decoded, _palette = decode(encode(frames))
-                weight = 1 + (x * 131 + y * 137) % 251
-                for f, frame in enumerate(decoded):
-                    px = frame.astype(_np.int64)
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_idx": f,
-                            "width": w,
-                            "height": h,
-                            "px_sum": int(px.sum()),
-                            "px_checksum": int((px * weight).sum()),
-                        }
-                    )
-            yield _pd.DataFrame(rows)
-
-    return gif_batches
+def _gif_frames_rows(doc_id: int, nb: int):
+    """A REAL animated GIF per video doc (2 + doc_id % 3 frames,
+    deterministic pixels p(f,x,y) = (doc_id·7 + f·17 + y·31 + x·13)
+    mod 256 over the identity grayscale palette) through the real LZW
+    decoder, one row of position-weighted statistics per frame."""
+    w, h = 8 + doc_id % 9, 8 + nb % 9
+    y, x = np.mgrid[0:h, 0:w]
+    frames = [
+        ((doc_id * 7 + f * 17 + y * 31 + x * 13) % 256).astype(np.uint8)
+        for f in range(2 + doc_id % 3)
+    ]
+    decoded, _palette = gif_decode_frames(gif_encode_frames(frames))
+    weight = _weight(h, w, *_WP)
+    for f, frame in enumerate(decoded):
+        yield {"doc_id": doc_id, "frame_idx": f, "width": w, "height": h,
+               **_gray_stats(frame, weight)}
 
 
 def multimodal_gif_frames(
@@ -2402,9 +929,7 @@ def multimodal_gif_frames(
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    return _spread(video_docs).mapInPandas(
-        _make_gif_frames_batches(), schema=GIF_FRAMES_SCHEMA
-    )
+    return _map_docs(_spread(video_docs), _gif_frames_rows, GIF_FRAMES_SCHEMA)
 
 
 ORACLES["multimodal_gif_frames"] = """
@@ -2444,101 +969,64 @@ FROM v GROUP BY doc_id, f
 # -------------------- GIF animation-semantics decode (r8)
 
 
-def _make_gif_anim_batches():
-    """Closure for cloudpickle-by-value: synthesize a REAL animated GIF
-    with full GIF89a semantics per video doc — sub-rect frames
-    composited onto the persistent canvas, shifted-gray local palettes
-    on odd frames, interlaced storage on alternating frames — decode
-    through the genuine state machine (gif_decode_rgb) and reduce each
-    DISPLAYED canvas to position-weighted statistics. Disposal
+def _gray_palette(shift: int) -> bytes:
+    """The 256-entry grayscale palette, rotated by ``shift``."""
+    return bytes(v for i in range(256) for v in ((i + shift) % 256,) * 3)
+
+
+def _gif_anim_spec(doc_id: int, nb: int):
+    """The deterministic animation script, re-expressed in SQL by the
+    oracle: frame 0 paints the full canvas; every later frame is a
+    sub-rect composited with disposal=keep, odd frames under a
+    shifted-gray LOCAL palette, alternating frames stored interlaced (a
+    pure storage permutation — pixels, and therefore the oracle, are
+    unchanged)."""
+    w, h = 10 + doc_id % 9, 10 + nb % 9
+    frames = []
+    for f in range(3 + doc_id % 3):
+        if f == 0:
+            left, top, fw, fh, s = 0, 0, w, h, 0
+        else:
+            fw = 3 + (doc_id + f) % 4
+            fh = 3 + (doc_id + 2 * f) % 4
+            left = (doc_id + 3 * f) % (w - fw + 1)
+            top = (doc_id * 3 + 2 * f) % (h - fh + 1)
+            s = (doc_id + 11 * f) % 256 if f % 2 == 1 else 0
+        frames.append((left, top, fw, fh, s, (doc_id + f) % 2 == 0))
+    return w, h, frames
+
+
+def _gif_anim_rows(doc_id: int, nb: int):
+    """A REAL animated GIF with full GIF89a semantics per video doc —
+    sub-rect frames composited onto the persistent canvas, shifted-gray
+    local palettes on odd frames, interlaced storage on alternating
+    frames — decoded through the genuine state machine
+    (:func:`gif_decode_rgb`), one row per DISPLAYED canvas. Disposal
     restore-to-background/previous and transparency are pytest-pinned
     with handcrafted canvases (tests/test_llm_ops_r8.py); the digest
     verifies the compositing core at corpus width."""
-    import numpy as _np
-
-    _e, _d, encode_anim, decode_rgb = _gif_codec()
-
-    def anim_spec(doc_id: int, nb: int):
-        """The deterministic animation script (NESTED so cloudpickle
-        ships it by value — see _make_extract_batches), re-expressed in
-        SQL by the oracle: frame 0 paints the full canvas; every later
-        frame is a sub-rect composited with disposal=keep, odd frames
-        under a shifted-gray LOCAL palette, alternating frames stored
-        interlaced (a pure storage permutation — pixels, and therefore
-        the oracle, are unchanged)."""
-        w, h = 10 + doc_id % 9, 10 + nb % 9
-        n = 3 + doc_id % 3
-        frames = []
-        for f in range(n):
-            if f == 0:
-                left, top, fw, fh, s = 0, 0, w, h, 0
-            else:
-                fw = 3 + (doc_id + f) % 4
-                fh = 3 + (doc_id + 2 * f) % 4
-                left = (doc_id + 3 * f) % (w - fw + 1)
-                top = (doc_id * 3 + 2 * f) % (h - fh + 1)
-                s = (doc_id + 11 * f) % 256 if f % 2 == 1 else 0
-            frames.append((left, top, fw, fh, s, (doc_id + f) % 2 == 0))
-        return w, h, frames
-
-    def anim_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-
-        gray = bytes(
-            bytearray(v for i in range(256) for v in (i, i, i))
+    w, h, spec = _gif_anim_spec(doc_id, nb)
+    frames = []
+    for f, (left, top, fw, fh, s, ilace) in enumerate(spec):
+        yy, xx = np.mgrid[top : top + fh, left : left + fw]
+        # indices in GLOBAL coordinates so the oracle is one uniform formula
+        px = ((doc_id * 7 + f * 17 + yy * 31 + xx * 13) % 256).astype(np.uint8)
+        frames.append(
+            {
+                "px": px,
+                "left": left,
+                "top": top,
+                "disposal": 1,
+                "palette": _gray_palette(s) if s else None,
+                "interlace": ilace,
+            }
         )
-
-        def shifted(s: int) -> bytes:
-            return bytes(
-                bytearray(
-                    v for i in range(256) for v in (((i + s) % 256),) * 3
-                )
-            )
-
-        for pdf in batches:
-            rows = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id, nb = int(doc_id), int(nb)
-                w, h, spec = anim_spec(doc_id, nb)
-                frames = []
-                for f, (left, top, fw, fh, s, ilace) in enumerate(spec):
-                    yy, xx = _np.mgrid[top : top + fh, left : left + fw]
-                    # indices in GLOBAL coordinates so the oracle is
-                    # one uniform formula
-                    px = (
-                        (doc_id * 7 + f * 17 + yy * 31 + xx * 13) % 256
-                    ).astype(_np.uint8)
-                    frames.append(
-                        {
-                            "px": px,
-                            "left": left,
-                            "top": top,
-                            "disposal": 1,
-                            "palette": shifted(s) if s else None,
-                            "interlace": ilace,
-                        }
-                    )
-                decoded = decode_rgb(encode_anim(w, h, gray, 0, frames))
-                yg, xg = _np.mgrid[0:h, 0:w]
-                weight = 1 + (xg * 127 + yg * 149) % 241
-                for f, canvas in enumerate(decoded):
-                    assert (canvas[..., 0] == canvas[..., 1]).all()
-                    gr = canvas[..., 0].astype(_np.int64)
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "frame_idx": f,
-                            "width": w,
-                            "height": h,
-                            "px_sum": int(gr.sum()),
-                            "px_checksum": int((gr * weight).sum()),
-                        }
-                    )
-            yield _pd.DataFrame(rows)
-
-    return anim_batches
+    decoded = gif_decode_rgb(gif_encode_animation(w, h, _gray_palette(0), 0, frames))
+    weight = _weight(h, w, *_W1)
+    for f, canvas in enumerate(decoded):
+        assert (canvas[..., 0] == canvas[..., 1]).all()
+        yield {"doc_id": doc_id, "frame_idx": f, "width": w, "height": h,
+               **_gray_stats(canvas[..., 0], weight)}
 
 
 def multimodal_gif_anim(
@@ -2561,9 +1049,7 @@ def multimodal_gif_anim(
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    return _spread(video_docs).mapInPandas(
-        _make_gif_anim_batches(), schema=GIF_FRAMES_SCHEMA
-    )
+    return _map_docs(_spread(video_docs), _gif_anim_rows, GIF_FRAMES_SCHEMA)
 
 
 ORACLES["multimodal_gif_anim"] = """
@@ -2642,48 +1128,25 @@ THUMBNAIL_SCHEMA = StructType(
 )
 
 
-def _make_thumbnail_batches():
-    """Closure for cloudpickle-by-value: the full image pipeline —
-    synthesize a REAL PNG, decode it through the genuine inflate +
-    unfilter path, then nearest-neighbor downscale the RECOVERED pixels
-    to a THUMB_SIZE² thumbnail (src = (dst·in) div out, the standard
-    integer NN mapping) and reduce to position-weighted statistics.
-    Upgrades the r3 resize operator's byte-length planning stand-in to
-    an actual pixel transform over actually-decoded pixels."""
-    encode, decode, *_pal = _png_codec()
-
-    def thumb_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        t = THUMB_SIZE
-        for pdf in batches:
-            rows = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id, nb = int(doc_id), int(nb)
-                w, h = 8 + doc_id % 9, 8 + nb % 9
-                y, x = _np.mgrid[0:h, 0:w]
-                px = ((doc_id * 7 + y * 31 + x * 13) % 256).astype(_np.uint8)
-                rec = decode(encode(px)).astype(_np.int64)
-                ty, tx = _np.mgrid[0:t, 0:t]
-                thumb = rec[(ty * h) // t, (tx * w) // t]
-                weight = 1 + (tx * 131 + ty * 137) % 251
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "out_w": t,
-                        "out_h": t,
-                        "thumb_sum": int(thumb.sum()),
-                        "thumb_checksum": int((thumb * weight).sum()),
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return thumb_batches
+def _thumbnail_rows(doc_id: int, nb: int):
+    """The full image pipeline: real PNG decode, then a nearest-neighbor
+    downscale of the RECOVERED pixels to a THUMB_SIZE² thumbnail (src =
+    (dst·in) div out, the standard integer NN mapping), reduced to
+    position-weighted statistics."""
+    t = THUMB_SIZE
+    rec = _png_gray(doc_id, nb)
+    h, w = rec.shape
+    ty, tx = np.mgrid[0:t, 0:t]
+    stats = _gray_stats(rec[(ty * h) // t, (tx * w) // t], _weight(t, t, *_WP))
+    yield {
+        "doc_id": doc_id,
+        "width": w,
+        "height": h,
+        "out_w": t,
+        "out_h": t,
+        "thumb_sum": stats["px_sum"],
+        "thumb_checksum": stats["px_checksum"],
+    }
 
 
 def multimodal_thumbnail(
@@ -2702,9 +1165,7 @@ def multimodal_thumbnail(
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    return _spread(image_docs).mapInPandas(
-        _make_thumbnail_batches(), schema=THUMBNAIL_SCHEMA
-    )
+    return _map_docs(_spread(image_docs), _thumbnail_rows, THUMBNAIL_SCHEMA)
 
 
 ORACLES["multimodal_thumbnail"] = f"""
@@ -2760,1483 +1221,13 @@ def _spread(df: DataFrame) -> DataFrame:
 
 
 # --------------------------- baseline-JPEG pixel decode (r7)
+#
+# The test coefficients live in the {0,4}x{0,4} frequency subspace where
+# the IDCT is exactly integer (cos((2x+1)pi/4) = +-sqrt(2)/2, quant
+# entries multiples of 8), so DuckDB recomputes every pixel from
+# closed-form arithmetic while the decoder runs the fully general float
+# transform (llm/codecs/jpeg.py).
 
-# The last feasible piece of the compressed-codec seam: baseline DCT
-# JPEG (ITU-T T.81 / ISO 10918-1) needs only canonical Huffman tables,
-# dequantization, an 8x8 IDCT and a level shift — all implementable
-# dependency-free in numpy. Supported (r7/r7b/r7c/r7d): baseline
-# sequential, 8-bit, grayscale AND interleaved YCbCr color with
-# sampling factors 1..2 per axis (4:4:4, 4:2:0, 4:2:2), DRI restart
-# intervals (RST markers with byte realignment + predictor resets),
-# and SOF2 PROGRESSIVE frames (grayscale or 4:4:4 color) — spectral
-# selection (interleaved DC scan + per-component AC band scans with
-# EOB-run coding) AND successive approximation (point-transformed
-# first scans + DC/AC refinement scans with correction bits, r7e).
-# Subsampled progressive frames and factors >2 stay behind
-# NotImplementedError.
-
-
-def _jpeg_zigzag() -> list[tuple[int, int]]:
-    """T.81 Figure 5 zigzag order: k -> (row, col) of the 8x8 block
-    (row = vertical frequency v, col = horizontal frequency u). Built by
-    the diagonal walk rather than a 64-literal table so the encoder,
-    decoder and oracle constants all derive from one definition."""
-    order, r, c = [], 0, 0
-    for _ in range(64):
-        order.append((r, c))
-        if (r + c) % 2 == 0:  # heading up-right
-            if c == 7:
-                r += 1
-            elif r == 0:
-                c += 1
-            else:
-                r, c = r - 1, c + 1
-        else:  # heading down-left
-            if r == 7:
-                c += 1
-            elif c == 0:
-                r += 1
-            else:
-                r, c = r + 1, c - 1
-    return order
-
-
-# Quantization table in zigzag order: every entry a multiple of 8 so
-# dequantized coefficients at the test frequencies divide exactly by the
-# IDCT's 1/8 (see multimodal_jpeg_pixels) — values vary per position so
-# the dequant indexing is genuinely exercised.
-JPEG_QUANT_ZZ = [8 * (2 + (7 * k) % 9) for k in range(64)]
-
-# T.81 Annex K-style luminance Huffman specs: (BITS[1..16], HUFFVAL).
-JPEG_DC_BITS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-JPEG_DC_VALS = list(range(12))
-JPEG_AC_BITS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 125]
-JPEG_AC_VALS = (
-    [0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12,
-     0x21, 0x31, 0x41, 0x06, 0x13, 0x51, 0x61, 0x07,
-     0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-     0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0,
-     0x24, 0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16,
-     0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-     0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39,
-     0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49,
-     0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-     0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69,
-     0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-     0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-     0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98,
-     0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5, 0xA6, 0xA7,
-     0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-     0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5,
-     0xC6, 0xC7, 0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4,
-     0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-     0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA,
-     0xF1, 0xF2, 0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8,
-     0xF9, 0xFA]
-)
-
-
-# Chroma quantization table (tq=1), again every entry a multiple of 8
-# so the exactly-representable subspace stays integer; a DIFFERENT
-# progression from the luma table so per-component dequant routing is
-# genuinely exercised (a luma/chroma table swap breaks oracle parity).
-JPEG_QUANT_CHROMA_ZZ = [8 * (3 + (5 * k) % 7) for k in range(64)]
-
-# T.81 Annex K.3.3.1 chroma DC Huffman spec: different code-length
-# histogram from the luma table, so the color scan routes through a
-# structurally different canonical tree per component class.
-JPEG_DC_CHROMA_BITS = [0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0]
-JPEG_DC_CHROMA_VALS = list(range(12))
-
-# Progressive-scan AC Huffman spec (r7d): spectral-selection AC scans
-# code EOBn run symbols (RRRR<<4, RRRR=0..14) the Annex-K sequential
-# table lacks. A flat 9-bit canonical table over every symbol the
-# encoder may emit (EOBn, ZRL, (run, size) for size 1..10) keeps the
-# spec trivially valid (Kraft sum 176/512); the decoder reads it from
-# the file's own DHT, so nothing is shared out-of-band.
-JPEG_PROG_AC_VALS = sorted(
-    [r << 4 for r in range(15)]                      # EOB0..EOB14
-    + [0xF0]                                         # ZRL
-    + [(r << 4) | sz for r in range(16) for sz in range(1, 11)]
-)
-JPEG_PROG_AC_BITS = [0] * 8 + [len(JPEG_PROG_AC_VALS)] + [0] * 7
-
-# Fixed-point BT.601 YCbCr->RGB constants (libjpeg-style FIX(x) =
-# round(x * 65536)): 1.40200, 0.34414, 0.71414, 1.77200. The >> 16 is a
-# FLOOR shift — the DuckDB oracle replays it as floor(a / 65536.0)
-# (its integer `//` truncates toward zero, which differs on negatives).
-JPEG_FIX_RCR = 91881
-JPEG_FIX_GCB = 22554
-JPEG_FIX_GCR = 46802
-JPEG_FIX_BCB = 116130
-
-
-def _jpeg_codec():
-    """Build the dependency-free baseline-JPEG codec functions
-    ``(encode, parse, decode, encode3, parse_any, decode3)`` —
-    single-component 8-bit grayscale plus interleaved 3-component
-    YCbCr 4:4:4 color (r7b).
-
-    Factory for cloudpickle-by-value capture (see _make_extract_batches).
-    Encoder and decoder are independent forward/backward paths that meet
-    only at the byte stream: the encoder is a coefficient->bitstream
-    WRITER (canonical-code table from BITS/HUFFVAL, DC prediction, AC
-    run-length with ZRL/EOB, 0xFF byte stuffing, DQT/SOF0/DHT/SOS
-    markers); the decoder is a general marker PARSER + entropy DECODER
-    (tables read from the file's own DHT segments, bit-level canonical
-    Huffman match, EXTEND sign recovery, de-stuffing) feeding dequant ->
-    de-zigzag -> float 8x8 IDCT -> level shift -> round -> clamp ->
-    edge crop. A bug in either path breaks the oracle parity."""
-    import struct as _struct
-
-    import numpy as _np
-
-    ZZ = _jpeg_zigzag()
-
-    def _canonical_codes(bits: list[int], vals: list[int]) -> dict[int, tuple[int, int]]:
-        """symbol -> (code, length) per T.81 Annex C code assignment."""
-        out, code, k = {}, 0, 0
-        for length in range(1, 17):
-            for _ in range(bits[length - 1]):
-                out[vals[k]] = (code, length)
-                code += 1
-                k += 1
-            code <<= 1
-        return out
-
-    def _marker(tag: int, payload: bytes) -> bytes:
-        return _struct.pack(">HH", tag, len(payload) + 2) + payload
-
-    class _BitWriter:
-        def __init__(self):
-            self.out = bytearray()
-            self.acc = 0
-            self.nbits = 0
-
-        def put(self, code: int, length: int) -> None:
-            self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-            self.nbits += length
-            while self.nbits >= 8:
-                byte = (self.acc >> (self.nbits - 8)) & 0xFF
-                self.nbits -= 8
-                self.out.append(byte)
-                if byte == 0xFF:  # entropy-stream byte stuffing
-                    self.out.append(0x00)
-
-        def flush(self) -> bytes:
-            if self.nbits:
-                pad = 8 - self.nbits
-                self.put((1 << pad) - 1, pad)  # pad with 1-bits per spec
-            return bytes(self.out)
-
-        def restart_marker(self, m: int) -> None:
-            """Byte-align (1-bit padding) and emit RSTm verbatim —
-            restart markers are real markers, never byte-stuffed."""
-            if self.nbits:
-                pad = 8 - self.nbits
-                self.put((1 << pad) - 1, pad)
-            self.out.append(0xFF)
-            self.out.append(0xD0 + (m % 8))
-
-    def _put_coef(w: _BitWriter, table, run: int, value: int) -> None:
-        size = int(value).bit_length() if value else 0
-        w.put(*table[(run << 4) | size])
-        if size:
-            v = value if value >= 0 else value + (1 << size) - 1
-            w.put(v, size)
-
-    def encode(coefs, width: int, height: int) -> bytes:
-        """Quantized coefficient blocks (nby, nbx, 8, 8) natural [v][u]
-        order -> complete baseline JFIF-less JPEG byte stream."""
-        coefs = _np.asarray(coefs, dtype=_np.int32)
-        nby, nbx = coefs.shape[:2]
-        dc_tab = _canonical_codes(JPEG_DC_BITS, JPEG_DC_VALS)
-        ac_tab = _canonical_codes(JPEG_AC_BITS, JPEG_AC_VALS)
-        w = _BitWriter()
-        prev_dc = 0
-        for by in range(nby):
-            for bx in range(nbx):
-                prev_dc = _encode_block(
-                    w, coefs[by, bx], prev_dc, dc_tab, ac_tab
-                )
-        dqt = bytes([0]) + bytes(JPEG_QUANT_ZZ[k] & 0xFF for k in range(64))
-        # 8-bit multiples-of-8 table entries: cap at 255 would corrupt —
-        # JPEG_QUANT_ZZ maxes at 8*(2+8)=80, well inside one byte
-        sof = _struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0])
-        dht = (
-            bytes([0x00]) + bytes(JPEG_DC_BITS) + bytes(JPEG_DC_VALS)
-            + bytes([0x10]) + bytes(JPEG_AC_BITS) + bytes(JPEG_AC_VALS)
-        )
-        sos = bytes([1, 1, 0x00, 0, 63, 0])
-        return (
-            b"\xff\xd8"
-            + _marker(0xFFDB, dqt)
-            + _marker(0xFFC0, sof)
-            + _marker(0xFFC4, dht)
-            + _marker(0xFFDA, sos)
-            + w.flush()
-            + b"\xff\xd9"
-        )
-
-    def _encode_block(w, blk, prev_dc, dc_tab, ac_tab) -> int:
-        """Write one 8x8 natural-order block; returns its DC for the
-        caller's per-component predictor chain."""
-        zz = [int(blk[r][c]) for r, c in ZZ]
-        diff = zz[0] - prev_dc
-        size = abs(diff).bit_length()
-        w.put(*dc_tab[size])
-        if size:
-            v = diff if diff >= 0 else diff + (1 << size) - 1
-            w.put(v, size)
-        run = 0
-        for k in range(1, 64):
-            if zz[k] == 0:
-                run += 1
-                continue
-            while run > 15:
-                w.put(*ac_tab[0xF0])  # ZRL: 16 zeros
-                run -= 16
-            _put_coef(w, ac_tab, run, zz[k])
-            run = 0
-        if run:
-            w.put(*ac_tab[0x00])  # EOB
-        return zz[0]
-
-    def encode3(coefs, width: int, height: int) -> bytes:
-        """Quantized coefficient blocks (3, nby, nbx, 8, 8) natural
-        order (Y, Cb, Cr) -> complete interleaved baseline YCbCr 4:4:4
-        JPEG: two DQT tables (luma tq=0, chroma tq=1), four DHT tables
-        (chroma DC uses the Annex-K chroma histogram), MCU order
-        Y,Cb,Cr with independent DC predictors."""
-        coefs = _np.asarray(coefs, dtype=_np.int32)
-        ncomp, nby, nbx = coefs.shape[:3]
-        assert ncomp == 3
-        tabs = [
-            (
-                _canonical_codes(JPEG_DC_BITS, JPEG_DC_VALS),
-                _canonical_codes(JPEG_AC_BITS, JPEG_AC_VALS),
-            ),
-            (
-                _canonical_codes(JPEG_DC_CHROMA_BITS, JPEG_DC_CHROMA_VALS),
-                _canonical_codes(JPEG_AC_BITS, JPEG_AC_VALS),
-            ),
-        ]
-        w = _BitWriter()
-        prev = [0, 0, 0]
-        for by in range(nby):
-            for bx in range(nbx):
-                for ci in range(3):
-                    dc_tab, ac_tab = tabs[0 if ci == 0 else 1]
-                    prev[ci] = _encode_block(
-                        w, coefs[ci, by, bx], prev[ci], dc_tab, ac_tab
-                    )
-        dqt = (
-            bytes([0]) + bytes(JPEG_QUANT_ZZ[k] & 0xFF for k in range(64))
-            + bytes([1])
-            + bytes(JPEG_QUANT_CHROMA_ZZ[k] & 0xFF for k in range(64))
-        )
-        sof = _struct.pack(">BHHB", 8, height, width, 3) + bytes(
-            [1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1]
-        )
-        dht = (
-            bytes([0x00]) + bytes(JPEG_DC_BITS) + bytes(JPEG_DC_VALS)
-            + bytes([0x10]) + bytes(JPEG_AC_BITS) + bytes(JPEG_AC_VALS)
-            + bytes([0x01])
-            + bytes(JPEG_DC_CHROMA_BITS) + bytes(JPEG_DC_CHROMA_VALS)
-            + bytes([0x11]) + bytes(JPEG_AC_BITS) + bytes(JPEG_AC_VALS)
-        )
-        sos = bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-        return (
-            b"\xff\xd8"
-            + _marker(0xFFDB, dqt)
-            + _marker(0xFFC0, sof)
-            + _marker(0xFFC4, dht)
-            + _marker(0xFFDA, sos)
-            + w.flush()
-            + b"\xff\xd9"
-        )
-
-    def encode_sampled(
-        coefs_y,
-        coefs_c,
-        width: int,
-        height: int,
-        hy: int = 2,
-        vy: int = 2,
-        restart_interval: int = 0,
-    ) -> bytes:
-        """Chroma-subsampled encoder, luma sampling (hy, vy) vs 1x1
-        chroma: luma blocks (vy*nmy, hy*nmx, 8, 8), chroma blocks
-        (2, nmy, nmx, 8, 8) — each MCU writes hy*vy raster-order Y
-        blocks then one Cb and one Cr, per T.81 A.2.3. (2,2) is 4:2:0,
-        (2,1) is 4:2:2. Same table assignments as encode3. With
-        restart_interval > 0, a DRI segment declares the interval and
-        RST0..RST7 markers (cycling) separate every `restart_interval`
-        MCUs: byte-aligned, DC predictors reset, per T.81
-        B.2.4.4/E.2.4."""
-        coefs_y = _np.asarray(coefs_y, dtype=_np.int32)
-        coefs_c = _np.asarray(coefs_c, dtype=_np.int32)
-        nmy, nmx = coefs_c.shape[1:3]
-        assert coefs_y.shape[:2] == (vy * nmy, hy * nmx)
-        luma = (
-            _canonical_codes(JPEG_DC_BITS, JPEG_DC_VALS),
-            _canonical_codes(JPEG_AC_BITS, JPEG_AC_VALS),
-        )
-        chroma = (
-            _canonical_codes(JPEG_DC_CHROMA_BITS, JPEG_DC_CHROMA_VALS),
-            _canonical_codes(JPEG_AC_BITS, JPEG_AC_VALS),
-        )
-        w = _BitWriter()
-        prev = [0, 0, 0]
-        mcu_count, rst_seq = 0, 0
-        for my in range(nmy):
-            for mx in range(nmx):
-                if (
-                    restart_interval
-                    and mcu_count
-                    and mcu_count % restart_interval == 0
-                ):
-                    w.restart_marker(rst_seq)
-                    rst_seq += 1
-                    prev = [0, 0, 0]
-                mcu_count += 1
-                for byi in range(vy):
-                    for bxi in range(hy):
-                        prev[0] = _encode_block(
-                            w,
-                            coefs_y[my * vy + byi, mx * hy + bxi],
-                            prev[0],
-                            *luma,
-                        )
-                for ci in range(2):
-                    prev[1 + ci] = _encode_block(
-                        w, coefs_c[ci, my, mx], prev[1 + ci], *chroma
-                    )
-        dqt = (
-            bytes([0]) + bytes(JPEG_QUANT_ZZ[k] & 0xFF for k in range(64))
-            + bytes([1])
-            + bytes(JPEG_QUANT_CHROMA_ZZ[k] & 0xFF for k in range(64))
-        )
-        sof = _struct.pack(">BHHB", 8, height, width, 3) + bytes(
-            [1, (hy << 4) | vy, 0, 2, 0x11, 1, 3, 0x11, 1]
-        )
-        dht = (
-            bytes([0x00]) + bytes(JPEG_DC_BITS) + bytes(JPEG_DC_VALS)
-            + bytes([0x10]) + bytes(JPEG_AC_BITS) + bytes(JPEG_AC_VALS)
-            + bytes([0x01])
-            + bytes(JPEG_DC_CHROMA_BITS) + bytes(JPEG_DC_CHROMA_VALS)
-            + bytes([0x11]) + bytes(JPEG_AC_BITS) + bytes(JPEG_AC_VALS)
-        )
-        sos = bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
-        dri = (
-            _marker(0xFFDD, _struct.pack(">H", restart_interval))
-            if restart_interval
-            else b""
-        )
-        return (
-            b"\xff\xd8"
-            + _marker(0xFFDB, dqt)
-            + _marker(0xFFC0, sof)
-            + _marker(0xFFC4, dht)
-            + dri
-            + _marker(0xFFDA, sos)
-            + w.flush()
-            + b"\xff\xd9"
-        )
-
-    def encode420(
-        coefs_y, coefs_c, width: int, height: int, restart_interval: int = 0
-    ) -> bytes:
-        """The 4:2:0 instance of :func:`encode_sampled`."""
-        return encode_sampled(
-            coefs_y, coefs_c, width, height, 2, 2, restart_interval
-        )
-
-    def _zzb(comp) -> list:
-        """One component's (nby, nbx, 8, 8) natural-order blocks as
-        nested zigzag lists for the progressive scan writers."""
-        nby, nbx = comp.shape[:2]
-        return [
-            [
-                [int(comp[by, bx][r][c]) for r, c in ZZ]
-                for bx in range(nbx)
-            ]
-            for by in range(nby)
-        ]
-
-    def _pt(v: int, lvl: int) -> int:
-        """AC point transform: sign-magnitude shift (T.81 G.1.2.2; DC
-        uses a plain arithmetic shift instead)."""
-        return (abs(v) >> lvl) * (1 if v >= 0 else -1)
-
-    def _prog_dc_first(comp_list, lvl: int, ri: int = 0) -> bytes:
-        """Interleaved DC first scan: per block position, each
-        component codes the diff of its arithmetic-shifted DC against
-        its own predictor with its own table. (All-1x1 sampling: one
-        block position == one MCU, the restart unit.)"""
-        w = _BitWriter()
-        prev = [0] * len(comp_list)
-        nby, nbx = len(comp_list[0][0]), len(comp_list[0][0][0])
-        n_units, rst_seq = 0, 0
-        for by in range(nby):
-            for bx in range(nbx):
-                if ri and n_units and n_units % ri == 0:
-                    w.restart_marker(rst_seq)
-                    rst_seq += 1
-                    prev = [0] * len(comp_list)
-                n_units += 1
-                for si, (zzb, dc_tab) in enumerate(comp_list):
-                    cur = zzb[by][bx][0] >> lvl
-                    diff = cur - prev[si]
-                    prev[si] = cur
-                    size = abs(diff).bit_length()
-                    w.put(*dc_tab[size])
-                    if size:
-                        v = diff if diff >= 0 else diff + (1 << size) - 1
-                        w.put(v, size)
-        return w.flush()
-
-    def _prog_dc_refine(comp_list, lvl: int, ri: int = 0) -> bytes:
-        w = _BitWriter()
-        nby, nbx = len(comp_list[0][0]), len(comp_list[0][0][0])
-        n_units, rst_seq = 0, 0
-        for by in range(nby):
-            for bx in range(nbx):
-                if ri and n_units and n_units % ri == 0:
-                    w.restart_marker(rst_seq)
-                    rst_seq += 1
-                n_units += 1
-                for zzb, _dc_tab in comp_list:
-                    w.put((zzb[by][bx][0] >> lvl) & 1, 1)
-        return w.flush()
-
-    def _prog_dc_first_mcu(
-        comp_list, samplings, nmy: int, nmx: int, lvl: int, ri: int = 0
-    ) -> bytes:
-        """Interleaved DC first scan over a subsampled frame (r8): MCU
-        order, hi*vi raster blocks per component per MCU — dummy blocks
-        past a component's edge are encoded too (T.81 A.2.3); each
-        component keeps its own predictor and table. The all-1x1 case
-        reduces to :func:`_prog_dc_first`."""
-        w = _BitWriter()
-        prev = [0] * len(comp_list)
-        n_units, rst_seq = 0, 0
-        for my in range(nmy):
-            for mx in range(nmx):
-                if ri and n_units and n_units % ri == 0:
-                    w.restart_marker(rst_seq)
-                    rst_seq += 1
-                    prev = [0] * len(comp_list)
-                n_units += 1
-                for si, ((zzb, dc_tab), (hi, vi)) in enumerate(
-                    zip(comp_list, samplings)
-                ):
-                    for byi in range(vi):
-                        for bxi in range(hi):
-                            cur = zzb[my * vi + byi][mx * hi + bxi][0] >> lvl
-                            diff = cur - prev[si]
-                            prev[si] = cur
-                            size = abs(diff).bit_length()
-                            w.put(*dc_tab[size])
-                            if size:
-                                v = (
-                                    diff
-                                    if diff >= 0
-                                    else diff + (1 << size) - 1
-                                )
-                                w.put(v, size)
-        return w.flush()
-
-    def _prog_dc_refine_mcu(
-        comp_list, samplings, nmy: int, nmx: int, lvl: int, ri: int = 0
-    ) -> bytes:
-        w = _BitWriter()
-        n_units, rst_seq = 0, 0
-        for my in range(nmy):
-            for mx in range(nmx):
-                if ri and n_units and n_units % ri == 0:
-                    w.restart_marker(rst_seq)
-                    rst_seq += 1
-                n_units += 1
-                for (zzb, _dc_tab), (hi, vi) in zip(comp_list, samplings):
-                    for byi in range(vi):
-                        for bxi in range(hi):
-                            w.put(
-                                (zzb[my * vi + byi][mx * hi + bxi][0] >> lvl)
-                                & 1,
-                                1,
-                            )
-        return w.flush()
-
-    def _prog_ac_first(
-        zzb, ac_tab, ss: int, se: int, lvl: int, ri: int = 0
-    ) -> bytes:
-        w = _BitWriter()
-        nby, nbx = len(zzb), len(zzb[0])
-
-        def flush_eob(run: int) -> None:
-            while run:
-                chunk = min(run, (1 << 15) - 1)
-                r = chunk.bit_length() - 1
-                w.put(*ac_tab[r << 4])
-                if r:
-                    w.put(chunk - (1 << r), r)
-                run -= chunk
-
-        eob_run = 0
-        n_units, rst_seq = 0, 0  # restart units = blocks (Ns=1 scan)
-        for by in range(nby):
-            for bx in range(nbx):
-                if ri and n_units and n_units % ri == 0:
-                    # T.81 E.2.4: the EOB run may not cross a restart
-                    flush_eob(eob_run)
-                    eob_run = 0
-                    w.restart_marker(rst_seq)
-                    rst_seq += 1
-                n_units += 1
-                band = [_pt(v, lvl) for v in zzb[by][bx][ss : se + 1]]
-                nz = [i for i, v in enumerate(band) if v]
-                if not nz:
-                    eob_run += 1
-                    continue
-                flush_eob(eob_run)
-                eob_run = 0
-                run = 0
-                for i in range(nz[-1] + 1):
-                    v = band[i]
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        w.put(*ac_tab[0xF0])
-                        run -= 16
-                    size = abs(v).bit_length()
-                    w.put(*ac_tab[(run << 4) | size])
-                    vv = v if v >= 0 else v + (1 << size) - 1
-                    w.put(vv, size)
-                    run = 0
-                if nz[-1] < se - ss:  # trailing zeros -> EOB
-                    eob_run += 1
-        flush_eob(eob_run)
-        return w.flush()
-
-    def _prog_ac_refine(
-        zzb, ac_tab, ss: int, se: int, lvl: int, ri: int = 0
-    ) -> bytes:
-        """T.81 G.1.2.3 / the jcphuff structure: per block, walk the
-        band; zero-history positions accumulate the run, already-
-        nonzero positions buffer a correction bit, newly-nonzero
-        (|v| >> lvl == 1) positions flush the pending EOB run, emit
-        (run, 1) + sign + the buffered bits. Blocks ending in zeros/
-        corrections join the EOB run, whose correction bits ride
-        behind the eventual EOBn."""
-        w = _BitWriter()
-        nby, nbx = len(zzb), len(zzb[0])
-        eob_run = 0
-        be_bits: list = []  # corrections owned by the EOB run
-
-        def flush_run() -> None:
-            nonlocal eob_run, be_bits
-            if eob_run:
-                r = eob_run.bit_length() - 1
-                w.put(*ac_tab[r << 4])
-                if r:
-                    w.put(eob_run - (1 << r), r)
-                eob_run = 0
-                for b in be_bits:
-                    w.put(b, 1)
-                be_bits = []
-
-        n_units, rst_seq = 0, 0  # restart units = blocks (Ns=1 scan)
-        for by in range(nby):
-            for bx in range(nbx):
-                if ri and n_units and n_units % ri == 0:
-                    flush_run()  # EOB run + its bits end at the marker
-                    w.restart_marker(rst_seq)
-                    rst_seq += 1
-                n_units += 1
-                full = zzb[by][bx][ss : se + 1]
-                absv = [abs(v) >> lvl for v in full]
-                eob_k = -1
-                for i, t in enumerate(absv):
-                    if t == 1:
-                        eob_k = i
-                run = 0
-                br: list = []  # this block's pending bits
-                for i, t in enumerate(absv):
-                    if t == 0:
-                        run += 1
-                        continue
-                    while run > 15 and i <= eob_k:
-                        flush_run()
-                        w.put(*ac_tab[0xF0])
-                        run -= 16
-                        for b in br:
-                            w.put(b, 1)
-                        br = []
-                    if t > 1:  # history: correction bit only
-                        br.append(t & 1)
-                        continue
-                    # newly nonzero at this level
-                    flush_run()
-                    w.put(*ac_tab[(run << 4) | 1])
-                    w.put(1 if full[i] >= 0 else 0, 1)
-                    for b in br:
-                        w.put(b, 1)
-                    br = []
-                    run = 0
-                if run > 0 or br:
-                    eob_run += 1
-                    be_bits.extend(br)
-                    if eob_run == 0x7FFF:
-                        flush_run()
-        flush_run()
-        return w.flush()
-
-    def encode_progressive(
-        coefs,
-        width: int,
-        height: int,
-        bands: tuple = ((1, 5), (6, 63)),
-        al: int = 0,
-        restart_interval: int = 0,
-    ) -> bytes:
-        """Progressive encoder (grayscale): spectral selection — one DC
-        scan (Ss=Se=0, differential predictors) followed by one AC scan
-        per band, each band coded with EOB-run symbols (T.81 G.1.2.2)
-        across blocks — and, with ``al > 0``, full SUCCESSIVE
-        APPROXIMATION (r7e): point-transformed first scans, then DC/AC
-        refinement scans walking al-1..0 with ±1<<lvl insertions and
-        correction bits (T.81 G.1.2.3 structure). Same
-        quantized-coefficient contract as the sequential encoder — any
-        scan script of the same blocks decodes to the same pixels."""
-        coefs = _np.asarray(coefs, dtype=_np.int32)
-        dc_tab = _canonical_codes(JPEG_DC_BITS, JPEG_DC_VALS)
-        ac_tab = _canonical_codes(JPEG_PROG_AC_BITS, JPEG_PROG_AC_VALS)
-        zzb = _zzb(coefs)
-        comp_list = [(zzb, dc_tab)]
-        dqt = bytes([0]) + bytes(JPEG_QUANT_ZZ[k] & 0xFF for k in range(64))
-        sof = _struct.pack(">BHHB", 8, height, width, 1) + bytes([1, 0x11, 0])
-        dht = (
-            bytes([0x00]) + bytes(JPEG_DC_BITS) + bytes(JPEG_DC_VALS)
-            + bytes([0x10])
-            + bytes(JPEG_PROG_AC_BITS) + bytes(JPEG_PROG_AC_VALS)
-        )
-
-        def sos(ss: int, se: int, ah: int, a_low: int) -> bytes:
-            return _marker(
-                0xFFDA, bytes([1, 1, 0x00, ss, se, (ah << 4) | a_low])
-            )
-
-        ri = restart_interval
-        dri = _marker(0xFFDD, _struct.pack(">H", ri)) if ri else b""
-        out = (
-            b"\xff\xd8"
-            + _marker(0xFFDB, dqt)
-            + _marker(0xFFC2, sof)
-            + _marker(0xFFC4, dht)
-            + dri
-            + sos(0, 0, 0, al)
-            + _prog_dc_first(comp_list, al, ri)
-        )
-        for lvl in range(al - 1, -1, -1):
-            out += sos(0, 0, lvl + 1, lvl) + _prog_dc_refine(
-                comp_list, lvl, ri
-            )
-        for ss, se in bands:
-            out += sos(ss, se, 0, al) + _prog_ac_first(
-                zzb, ac_tab, ss, se, al, ri
-            )
-        for lvl in range(al - 1, -1, -1):
-            for ss, se in bands:
-                out += sos(ss, se, lvl + 1, lvl) + _prog_ac_refine(
-                    zzb, ac_tab, ss, se, lvl, ri
-                )
-        return out + b"\xff\xd9"
-
-    def encode_progressive3(
-        coefs,
-        width: int,
-        height: int,
-        bands: tuple = ((1, 5), (6, 63)),
-        al: int = 0,
-        restart_interval: int = 0,
-    ) -> bytes:
-        """Progressive COLOR encoder (r7e, YCbCr 4:4:4): one
-        interleaved DC scan over all three components (per-component
-        predictors and tables, chroma DC uses the Annex-K histogram),
-        DC refinements in the same interleave, then per-COMPONENT AC
-        band scans and refinements (T.81 restricts progressive AC
-        scans to a single component) — Y under ta=0, chroma under
-        ta=1, both carrying the flat progressive AC spec read back
-        from this file's own DHT."""
-        coefs = _np.asarray(coefs, dtype=_np.int32)
-        assert coefs.shape[0] == 3
-        dc_luma = _canonical_codes(JPEG_DC_BITS, JPEG_DC_VALS)
-        dc_chroma = _canonical_codes(
-            JPEG_DC_CHROMA_BITS, JPEG_DC_CHROMA_VALS
-        )
-        ac_tab = _canonical_codes(JPEG_PROG_AC_BITS, JPEG_PROG_AC_VALS)
-        zzbs = [_zzb(coefs[ci]) for ci in range(3)]
-        comp_list = [
-            (zzbs[0], dc_luma),
-            (zzbs[1], dc_chroma),
-            (zzbs[2], dc_chroma),
-        ]
-        dqt = (
-            bytes([0]) + bytes(JPEG_QUANT_ZZ[k] & 0xFF for k in range(64))
-            + bytes([1])
-            + bytes(JPEG_QUANT_CHROMA_ZZ[k] & 0xFF for k in range(64))
-        )
-        sof = _struct.pack(">BHHB", 8, height, width, 3) + bytes(
-            [1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1]
-        )
-        dht = (
-            bytes([0x00]) + bytes(JPEG_DC_BITS) + bytes(JPEG_DC_VALS)
-            + bytes([0x01])
-            + bytes(JPEG_DC_CHROMA_BITS) + bytes(JPEG_DC_CHROMA_VALS)
-            + bytes([0x10])
-            + bytes(JPEG_PROG_AC_BITS) + bytes(JPEG_PROG_AC_VALS)
-            + bytes([0x11])
-            + bytes(JPEG_PROG_AC_BITS) + bytes(JPEG_PROG_AC_VALS)
-        )
-
-        def sos_dc(ah: int, a_low: int) -> bytes:
-            return _marker(
-                0xFFDA,
-                bytes(
-                    [3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, (ah << 4) | a_low]
-                ),
-            )
-
-        def sos_ac(cid: int, ta: int, ss: int, se: int, ah: int, a_low: int) -> bytes:
-            return _marker(
-                0xFFDA,
-                bytes([1, cid, ta, ss, se, (ah << 4) | a_low]),
-            )
-
-        ri = restart_interval
-        dri = _marker(0xFFDD, _struct.pack(">H", ri)) if ri else b""
-        out = (
-            b"\xff\xd8"
-            + _marker(0xFFDB, dqt)
-            + _marker(0xFFC2, sof)
-            + _marker(0xFFC4, dht)
-            + dri
-            + sos_dc(0, al)
-            + _prog_dc_first(comp_list, al, ri)
-        )
-        for lvl in range(al - 1, -1, -1):
-            out += sos_dc(lvl + 1, lvl) + _prog_dc_refine(
-                comp_list, lvl, ri
-            )
-        for ci in range(3):
-            ta = 0 if ci == 0 else 1
-            for ss, se in bands:
-                out += sos_ac(ci + 1, ta, ss, se, 0, al) + _prog_ac_first(
-                    zzbs[ci], ac_tab, ss, se, al, ri
-                )
-        for lvl in range(al - 1, -1, -1):
-            for ci in range(3):
-                ta = 0 if ci == 0 else 1
-                for ss, se in bands:
-                    out += sos_ac(
-                        ci + 1, ta, ss, se, lvl + 1, lvl
-                    ) + _prog_ac_refine(zzbs[ci], ac_tab, ss, se, lvl, ri)
-        return out + b"\xff\xd9"
-
-    def encode_progressive_sampled(
-        coefs_y,
-        coefs_c,
-        width: int,
-        height: int,
-        hy: int = 2,
-        vy: int = 2,
-        bands: tuple = ((1, 5), (6, 63)),
-        al: int = 0,
-        restart_interval: int = 0,
-    ) -> bytes:
-        """Progressive CHROMA-SUBSAMPLED encoder (r8): luma sampled
-        (hy, vy) vs 1x1 chroma, same coefficient contract as
-        :func:`encode_sampled` — luma blocks (vy*nmy, hy*nmx, 8, 8)
-        covering the full MCU grid (dummy blocks included), chroma
-        (2, nmy, nmx, 8, 8). Scan script: one INTERLEAVED DC scan in
-        MCU order (dummy luma blocks encoded, per T.81 A.2.3), DC
-        refinements in the same interleave when al > 0, then
-        per-component AC band scans + refinements over each
-        component's REAL block grid only (T.81 restricts progressive
-        AC scans to one component; non-interleaved scans carry no
-        dummies)."""
-        coefs_y = _np.asarray(coefs_y, dtype=_np.int32)
-        coefs_c = _np.asarray(coefs_c, dtype=_np.int32)
-        nmy, nmx = coefs_c.shape[1:3]
-        assert coefs_y.shape[:2] == (vy * nmy, hy * nmx)
-        dc_luma = _canonical_codes(JPEG_DC_BITS, JPEG_DC_VALS)
-        dc_chroma = _canonical_codes(
-            JPEG_DC_CHROMA_BITS, JPEG_DC_CHROMA_VALS
-        )
-        ac_tab = _canonical_codes(JPEG_PROG_AC_BITS, JPEG_PROG_AC_VALS)
-        zzbs = [_zzb(coefs_y), _zzb(coefs_c[0]), _zzb(coefs_c[1])]
-        # real (non-dummy) per-component AC grids: luma ceil(h/8) x
-        # ceil(w/8); chroma's ceil-of-scaled size IS its full grid
-        nby_y, nbx_y = (height + 7) // 8, (width + 7) // 8
-        zz_ac = [
-            [row[:nbx_y] for row in zzbs[0][:nby_y]],
-            zzbs[1],
-            zzbs[2],
-        ]
-        comp_list = [
-            (zzbs[0], dc_luma),
-            (zzbs[1], dc_chroma),
-            (zzbs[2], dc_chroma),
-        ]
-        samplings = [(hy, vy), (1, 1), (1, 1)]
-        dqt = (
-            bytes([0]) + bytes(JPEG_QUANT_ZZ[k] & 0xFF for k in range(64))
-            + bytes([1])
-            + bytes(JPEG_QUANT_CHROMA_ZZ[k] & 0xFF for k in range(64))
-        )
-        sof = _struct.pack(">BHHB", 8, height, width, 3) + bytes(
-            [1, (hy << 4) | vy, 0, 2, 0x11, 1, 3, 0x11, 1]
-        )
-        dht = (
-            bytes([0x00]) + bytes(JPEG_DC_BITS) + bytes(JPEG_DC_VALS)
-            + bytes([0x01])
-            + bytes(JPEG_DC_CHROMA_BITS) + bytes(JPEG_DC_CHROMA_VALS)
-            + bytes([0x10])
-            + bytes(JPEG_PROG_AC_BITS) + bytes(JPEG_PROG_AC_VALS)
-            + bytes([0x11])
-            + bytes(JPEG_PROG_AC_BITS) + bytes(JPEG_PROG_AC_VALS)
-        )
-
-        def sos_dc(ah: int, a_low: int) -> bytes:
-            return _marker(
-                0xFFDA,
-                bytes(
-                    [3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, (ah << 4) | a_low]
-                ),
-            )
-
-        def sos_ac(cid: int, ta: int, ss: int, se: int, ah: int, a_low: int) -> bytes:
-            return _marker(
-                0xFFDA, bytes([1, cid, ta, ss, se, (ah << 4) | a_low])
-            )
-
-        ri = restart_interval
-        dri = _marker(0xFFDD, _struct.pack(">H", ri)) if ri else b""
-        out = (
-            b"\xff\xd8"
-            + _marker(0xFFDB, dqt)
-            + _marker(0xFFC2, sof)
-            + _marker(0xFFC4, dht)
-            + dri
-            + sos_dc(0, al)
-            + _prog_dc_first_mcu(comp_list, samplings, nmy, nmx, al, ri)
-        )
-        for lvl in range(al - 1, -1, -1):
-            out += sos_dc(lvl + 1, lvl) + _prog_dc_refine_mcu(
-                comp_list, samplings, nmy, nmx, lvl, ri
-            )
-        for ci in range(3):
-            ta = 0 if ci == 0 else 1
-            for ss, se in bands:
-                out += sos_ac(ci + 1, ta, ss, se, 0, al) + _prog_ac_first(
-                    zz_ac[ci], ac_tab, ss, se, al, ri
-                )
-        for lvl in range(al - 1, -1, -1):
-            for ci in range(3):
-                ta = 0 if ci == 0 else 1
-                for ss, se in bands:
-                    out += sos_ac(
-                        ci + 1, ta, ss, se, lvl + 1, lvl
-                    ) + _prog_ac_refine(zz_ac[ci], ac_tab, ss, se, lvl, ri)
-        return out + b"\xff\xd9"
-
-    class _BitReader:
-        def __init__(self, buf: bytes, pos: int):
-            self.buf = buf
-            self.pos = pos
-            self.acc = 0
-            self.nbits = 0
-
-        def bit(self) -> int:
-            if not self.nbits:
-                if self.pos >= len(self.buf):
-                    raise ValueError("JPEG entropy stream truncated")
-                b = self.buf[self.pos]
-                self.pos += 1
-                if b == 0xFF:
-                    nxt = self.buf[self.pos] if self.pos < len(self.buf) else None
-                    if nxt == 0x00:
-                        self.pos += 1  # stuffed byte
-                    else:
-                        raise ValueError("JPEG marker inside entropy data")
-                self.acc, self.nbits = b, 8
-            self.nbits -= 1
-            return (self.acc >> self.nbits) & 1
-
-        def bits(self, n: int) -> int:
-            v = 0
-            for _ in range(n):
-                v = (v << 1) | self.bit()
-            return v
-
-        def restart(self, expected: int) -> None:
-            """Consume one RSTm marker at an MCU-restart boundary:
-            discard the 1-bit padding of the current partial byte
-            (T.81 E.2.4 — the encoder pads the byte the last code
-            ended in, so those bits are already in `acc` iff nbits>0),
-            then require the marker with the expected cycling
-            sequence number."""
-            self.nbits = 0
-            if (
-                self.pos + 1 >= len(self.buf)
-                or self.buf[self.pos] != 0xFF
-                or not 0xD0 <= self.buf[self.pos + 1] <= 0xD7
-            ):
-                raise ValueError("expected JPEG restart marker")
-            if self.buf[self.pos + 1] - 0xD0 != expected % 8:
-                raise ValueError("JPEG restart marker out of sequence")
-            self.pos += 2
-
-    def _decode_huff(reader, table: dict[tuple[int, int], int]) -> int:
-        code, length = 0, 0
-        while length < 17:
-            code = (code << 1) | reader.bit()
-            length += 1
-            sym = table.get((code, length))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid JPEG Huffman code")
-
-    def _extend(v: int, size: int) -> int:
-        return v if v >= (1 << (size - 1)) else v - (1 << size) + 1
-
-    def parse_any(payload: bytes):
-        """Marker walk + entropy decode, 1 or 3 interleaved components
-        (all 1x1 sampling). Returns (width, height, quants, blocks):
-        `quants` a per-component list of 64-entry zigzag tables,
-        `blocks` (ncomp, nby, nbx, 64) QUANTIZED zigzag ints — the
-        lossless layer, split out so tests can pin exact coefficient
-        recovery independently of the IDCT. Components decode MCU-
-        interleaved in scan order with per-component DC predictors and
-        per-component Huffman table selectors, exactly as T.81 A.2
-        specifies for Hi=Vi=1."""
-        if payload[:2] != b"\xff\xd8":
-            raise ValueError("not a JPEG (missing SOI)")
-        pos = 2
-        quant: dict[int, list[int]] = {}
-        huff: dict[tuple[int, int], dict] = {}
-        sof = None
-        ri = 0  # DRI restart interval in MCUs; 0 = no restarts
-        progressive = False
-        prog_blocks = None  # per-component zigzag accumulators (SOF2)
-        while pos + 4 <= len(payload):
-            if payload[pos] != 0xFF:
-                raise ValueError("JPEG marker desync")
-            tag = payload[pos + 1]
-            (seglen,) = _struct.unpack(">H", payload[pos + 2 : pos + 4])
-            seg = payload[pos + 4 : pos + 2 + seglen]
-            if tag == 0xDB:  # DQT (possibly several tables per segment)
-                p = 0
-                while p < len(seg):
-                    pq, tq = seg[p] >> 4, seg[p] & 0xF
-                    if pq != 0:
-                        raise NotImplementedError("16-bit quant tables")
-                    quant[tq] = list(seg[p + 1 : p + 65])
-                    p += 65
-            elif tag == 0xC4:  # DHT (possibly several tables)
-                p = 0
-                while p < len(seg):
-                    tc, th = seg[p] >> 4, seg[p] & 0xF
-                    bits = list(seg[p + 1 : p + 17])
-                    n = sum(bits)
-                    vals = list(seg[p + 17 : p + 17 + n])
-                    codes = _canonical_codes(bits, vals)
-                    huff[(tc, th)] = {
-                        (code, ln): sym for sym, (code, ln) in codes.items()
-                    }
-                    p += 17 + n
-            elif tag in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2 prog.
-                progressive = tag == 0xC2
-                depth, h, w, ncomp = _struct.unpack(">BHHB", seg[:6])
-                if depth != 8 or ncomp not in (1, 3):
-                    raise NotImplementedError(
-                        f"jpeg decode supports 8-bit 1- or 3-component; "
-                        f"got depth={depth} ncomp={ncomp}"
-                    )
-                comps = []
-                for ci in range(ncomp):
-                    cid, hv, tq = seg[6 + 3 * ci : 9 + 3 * ci]
-                    hi, vi = hv >> 4, hv & 0xF
-                    # T.81 B.2.2: Hi/Vi in 1..4 (r8: was 1..2 — the MCU
-                    # walk, per-component planes, and the replication
-                    # upsampler are all generic in the factors)
-                    if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                        raise ValueError(
-                            f"sampling factors {hi}x{vi} outside T.81's 1..4"
-                        )
-                    comps.append((cid, hi, vi, tq))
-                sof = (w, h, comps)
-            elif tag in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
-                         0xCD, 0xCE, 0xCF):
-                raise NotImplementedError(
-                    "hierarchical/arithmetic/lossless JPEG"
-                )
-            elif tag == 0xDD:  # DRI: restart interval in MCUs (r7c)
-                (ri,) = _struct.unpack(">H", seg[:2])
-            elif tag == 0xDA:  # SOS: entropy data follows the header
-                if sof is None:
-                    raise ValueError("JPEG SOS before SOF")
-                w_px, h_px, comps = sof
-                ns = seg[0]
-                if progressive:
-                    # Progressive (r7d/r7e; r8 adds chroma-subsampled
-                    # frames): spectral selection AND successive
-                    # approximation, 1 or 3 components at any T.81
-                    # sampling. Scan kinds (T.81 G.1.2):
-                    # DC first (Ss=Se=0, Ah=0, point transform Al —
-                    # may interleave all components, per-component
-                    # predictors/tables), DC refinement (Ah>0, one bit
-                    # per block in the same order), AC-band first
-                    # (single component, Ah=0, sign-magnitude >> Al
-                    # with EOB-run coding), AC-band refinement
-                    # (Ah=Al+1: ±1<<Al insertions plus inline
-                    # correction bits on every nonzero-history
-                    # coefficient passed, including through EOB-run
-                    # skips). With DRI (r8), every `ri` restart units
-                    # (MCUs in interleaved scans, blocks in single-
-                    # component scans — T.81 E.2.4) an RSTm marker
-                    # byte-realigns the reader and resets the scan's
-                    # entropy state: DC predictors, and the EOB run
-                    # (which may not cross a restart).
-                    ss_, se_, ahal = seg[1 + 2 * ns : 4 + 2 * ns]
-                    ah, al = ahal >> 4, ahal & 0xF
-                    if (ss_ == 0) != (se_ == 0):
-                        raise ValueError(
-                            "progressive DC scan must have Ss=Se=0"
-                        )
-                    if ss_ != 0 and ns != 1:
-                        raise ValueError(
-                            "progressive AC scans are single-component"
-                        )
-                    if not 0 <= ss_ <= se_ <= 63:
-                        raise ValueError("bad spectral band")
-                    if ah and ah != al + 1:
-                        raise ValueError("refinement needs Ah = Al + 1")
-                    cids = [cid for cid, _hi, _vi, _tq in comps]
-                    scan_ci, scan_tt = [], []
-                    for si in range(ns):
-                        cs, tt = seg[1 + 2 * si], seg[2 + 2 * si]
-                        if cs not in cids:
-                            raise ValueError("SOS names unknown component")
-                        scan_ci.append(cids.index(cs))
-                        scan_tt.append(tt)
-                    # Geometry (T.81 A.2): per-component storage covers
-                    # the FULL interleaved-MCU grid (hi*nmx_f, vi*nmy_f
-                    # blocks — interleaved DC scans encode the dummy
-                    # blocks past the component edge too); single-
-                    # component scans (all AC scans, and non-interleaved
-                    # DC) walk only the component's REAL ceil-grid.
-                    # At 4:4:4 (all 1x1) the grids coincide — the r7
-                    # case is the degenerate instance of this walk.
-                    hmax_f = max(hi for _c, hi, _v, _t in comps)
-                    vmax_f = max(vi for _c, _h, vi, _t in comps)
-                    nmx_f = (w_px + 8 * hmax_f - 1) // (8 * hmax_f)
-                    nmy_f = (h_px + 8 * vmax_f - 1) // (8 * vmax_f)
-                    if prog_blocks is None:
-                        prog_blocks = [
-                            _np.zeros(
-                                (vi * nmy_f, hi * nmx_f, 64),
-                                dtype=_np.int32,
-                            )
-                            for _c, hi, vi, _t in comps
-                        ]
-
-                    def _real_grid(ci: int) -> tuple[int, int]:
-                        _c, hi, vi, _t = comps[ci]
-                        cw = (w_px * hi + hmax_f - 1) // hmax_f
-                        ch = (h_px * vi + vmax_f - 1) // vmax_f
-                        return (ch + 7) // 8, (cw + 7) // 8
-
-                    reader = _BitReader(payload, pos + 2 + seglen)
-                    # DRI restart bookkeeping (r8): n counts restart
-                    # units consumed so far in THIS scan, seq the
-                    # cycling RSTm number; _at_restart() is called at
-                    # the top of every unit and consumes the marker
-                    # when one is due, telling the caller to reset the
-                    # scan's entropy state.
-                    rst = {"n": 0, "seq": 0}
-
-                    def _at_restart() -> bool:
-                        due = bool(ri) and rst["n"] > 0 and rst["n"] % ri == 0
-                        if due:
-                            reader.restart(rst["seq"])
-                            rst["seq"] = (rst["seq"] + 1) % 8
-                        rst["n"] += 1
-                        return due
-
-                    if ss_ == 0 and ah == 0:  # DC first, predictors
-                        dc_ts = [huff[(0, tt >> 4)] for tt in scan_tt]
-                        prev = [0] * ns
-
-                        def _dc_first(si: int, by: int, bx: int) -> None:
-                            size = _decode_huff(reader, dc_ts[si])
-                            diff = (
-                                _extend(reader.bits(size), size)
-                                if size
-                                else 0
-                            )
-                            prev[si] += diff
-                            prog_blocks[scan_ci[si]][by, bx, 0] = (
-                                prev[si] << al
-                            )
-
-                        if ns == 1:  # non-interleaved: real grid only
-                            nby_c, nbx_c = _real_grid(scan_ci[0])
-                            for by in range(nby_c):
-                                for bx in range(nbx_c):
-                                    if _at_restart():
-                                        prev = [0] * ns
-                                    _dc_first(0, by, bx)
-                        else:  # interleaved MCU walk, dummies included
-                            for my in range(nmy_f):
-                                for mx in range(nmx_f):
-                                    if _at_restart():
-                                        prev = [0] * ns
-                                    for si in range(ns):
-                                        _c, hi, vi, _t = comps[scan_ci[si]]
-                                        for byi in range(vi):
-                                            for bxi in range(hi):
-                                                _dc_first(
-                                                    si,
-                                                    my * vi + byi,
-                                                    mx * hi + bxi,
-                                                )
-                    elif ss_ == 0:  # DC refinement: one bit per block
-                        if ns == 1:
-                            nby_c, nbx_c = _real_grid(scan_ci[0])
-                            blk_c = prog_blocks[scan_ci[0]]
-                            for by in range(nby_c):
-                                for bx in range(nbx_c):
-                                    _at_restart()  # realign only
-                                    if reader.bit():
-                                        blk_c[by, bx, 0] |= 1 << al
-                        else:
-                            for my in range(nmy_f):
-                                for mx in range(nmx_f):
-                                    _at_restart()  # realign only
-                                    for si in range(ns):
-                                        _c, hi, vi, _t = comps[scan_ci[si]]
-                                        for byi in range(vi):
-                                            for bxi in range(hi):
-                                                if reader.bit():
-                                                    prog_blocks[
-                                                        scan_ci[si]
-                                                    ][
-                                                        my * vi + byi,
-                                                        mx * hi + bxi,
-                                                        0,
-                                                    ] |= 1 << al
-                    elif ah == 0:  # AC first (G.1.2.2, EOB-run coded)
-                        ac_t = huff[(1, scan_tt[0] & 0xF)]
-                        blocks_c = prog_blocks[scan_ci[0]]
-                        nby_c, nbx_c = _real_grid(scan_ci[0])
-                        eobrun = 0
-                        for by in range(nby_c):
-                            for bx in range(nbx_c):
-                                if _at_restart():
-                                    eobrun = 0  # may not cross RSTm
-                                if eobrun:
-                                    eobrun -= 1
-                                    continue
-                                k = ss_
-                                while k <= se_:
-                                    sym = _decode_huff(reader, ac_t)
-                                    r, size = sym >> 4, sym & 0xF
-                                    if size == 0:
-                                        if r == 15:
-                                            k += 16  # ZRL
-                                            continue
-                                        eobrun = (1 << r) - 1 + (
-                                            reader.bits(r) if r else 0
-                                        )
-                                        break  # current band ends here
-                                    k += r
-                                    if k > se_:
-                                        raise ValueError(
-                                            "AC run past band end"
-                                        )
-                                    blocks_c[by, bx, k] = (
-                                        _extend(reader.bits(size), size)
-                                        << al
-                                    )
-                                    k += 1
-                    else:  # AC refinement (G.1.2.3 shape)
-                        ac_t = huff[(1, scan_tt[0] & 0xF)]
-                        blocks_c = prog_blocks[scan_ci[0]]
-                        nby_c, nbx_c = _real_grid(scan_ci[0])
-                        p1, m1 = 1 << al, -1 << al
-
-                        def _correct(blk, k: int) -> None:
-                            """Append this scan's bit to an already-
-                            nonzero coefficient: move it one step away
-                            from zero iff the bit is set and the bit
-                            position is still clear."""
-                            if reader.bit() and not (abs(int(blk[k])) & p1):
-                                blk[k] += p1 if blk[k] > 0 else m1
-
-                        eobrun = 0
-                        for by in range(nby_c):
-                            for bx in range(nbx_c):
-                                if _at_restart():
-                                    eobrun = 0  # may not cross RSTm
-                                blk = blocks_c[by, bx]
-                                k = ss_
-                                if eobrun:
-                                    # EOB-run block: only correction
-                                    # bits for nonzero history
-                                    eobrun -= 1
-                                    for kk in range(ss_, se_ + 1):
-                                        if blk[kk]:
-                                            _correct(blk, kk)
-                                    continue
-                                while k <= se_:
-                                    sym = _decode_huff(reader, ac_t)
-                                    r, size = sym >> 4, sym & 0xF
-                                    newval = 0
-                                    if size == 0:
-                                        if r != 15:  # EOBn
-                                            eobrun = (1 << r) - 1 + (
-                                                reader.bits(r) if r else 0
-                                            )
-                                            break
-                                        # ZRL: r=15 zero-history slots
-                                        # decrement below, the 16th
-                                        # (r==0) breaks with newval=0
-                                    else:
-                                        if size != 1:
-                                            raise ValueError(
-                                                "refinement size must"
-                                                " be 1"
-                                            )
-                                        newval = (
-                                            p1 if reader.bit() else m1
-                                        )
-                                    # advance past r zero-history slots
-                                    # (correcting nonzero history on
-                                    # the way), then place newval
-                                    while k <= se_:
-                                        if blk[k]:
-                                            _correct(blk, k)
-                                        else:
-                                            if r == 0:
-                                                if newval:
-                                                    blk[k] = newval
-                                                k += 1
-                                                break
-                                            r -= 1
-                                        k += 1
-                                # EOBn terminated the block early:
-                                # its remaining nonzero-history
-                                # positions still take correction bits
-                                # (eobrun counts SUBSEQUENT blocks)
-                                if k <= se_:
-                                    for kk in range(k, se_ + 1):
-                                        if blk[kk]:
-                                            _correct(blk, kk)
-                    pos = reader.pos
-                    continue
-                if ns != len(comps):
-                    raise ValueError("scan/frame component mismatch")
-                scan = []
-                for si in range(ns):
-                    cs, tt = seg[1 + 2 * si], seg[2 + 2 * si]
-                    match = [
-                        (hi, vi, tq)
-                        for cid, hi, vi, tq in comps
-                        if cid == cs
-                    ]
-                    if len(match) != 1:
-                        raise ValueError("SOS names unknown component")
-                    hi, vi, tq = match[0]
-                    scan.append(
-                        (hi, vi, tq, huff[(0, tt >> 4)], huff[(1, tt & 0xF)])
-                    )
-                # T.81 A.2: interleaved MCUs tile the frame at
-                # (8*Hmax, 8*Vmax); each MCU carries hi*vi raster-order
-                # blocks per component. A single-component scan (our
-                # gray subset, hi=vi=1) degenerates to one block per
-                # MCU on the plain ceil/8 grid.
-                hmax = max(hi for hi, _, _, _, _ in scan)
-                vmax = max(vi for _, vi, _, _, _ in scan)
-                nmx = (w_px + 8 * hmax - 1) // (8 * hmax)
-                nmy = (h_px + 8 * vmax - 1) // (8 * vmax)
-                reader = _BitReader(payload, pos + 2 + seglen)
-                blocks = [
-                    _np.zeros((vi * nmy, hi * nmx, 64), dtype=_np.int32)
-                    for hi, vi, _, _, _ in scan
-                ]
-                prev_dc = [0] * ns
-
-                def _one_block(ci, by, bx) -> None:
-                    _hi, _vi, _tq, dc_t, ac_t = scan[ci]
-                    size = _decode_huff(reader, dc_t)
-                    diff = _extend(reader.bits(size), size) if size else 0
-                    prev_dc[ci] += diff
-                    blocks[ci][by, bx, 0] = prev_dc[ci]
-                    k = 1
-                    while k < 64:
-                        sym = _decode_huff(reader, ac_t)
-                        if sym == 0x00:  # EOB
-                            break
-                        run, size = sym >> 4, sym & 0xF
-                        if size == 0:
-                            if run != 15:
-                                raise ValueError("bad AC symbol")
-                            k += 16  # ZRL
-                            continue
-                        k += run
-                        if k > 63:
-                            raise ValueError("AC run past block end")
-                        blocks[ci][by, bx, k] = _extend(
-                            reader.bits(size), size
-                        )
-                        k += 1
-
-                mcu_count, rst_seq = 0, 0
-                for my in range(nmy):
-                    for mx in range(nmx):
-                        if ri and mcu_count and mcu_count % ri == 0:
-                            reader.restart(rst_seq)
-                            rst_seq += 1
-                            for ci in range(ns):
-                                prev_dc[ci] = 0
-                        mcu_count += 1
-                        for ci, (hi, vi, _tq, _d, _a) in enumerate(scan):
-                            for byi in range(vi):
-                                for bxi in range(hi):
-                                    _one_block(
-                                        ci, my * vi + byi, mx * hi + bxi
-                                    )
-                samplings = [(hi, vi) for hi, vi, _, _, _ in scan]
-                return (
-                    w_px,
-                    h_px,
-                    [quant[tq] for _, _, tq, _, _ in scan],
-                    blocks,
-                    samplings,
-                )
-            pos += 2 + seglen
-        if progressive and prog_blocks is not None:
-            w_px, h_px, comps = sof
-            return (
-                w_px,
-                h_px,
-                [quant[tq] for _cid, _hi, _vi, tq in comps],
-                prog_blocks,
-                [(hi, vi) for _cid, hi, vi, _tq in comps],
-            )
-        raise ValueError("JPEG missing SOS")
-
-    def parse(payload: bytes):
-        """Single-component adapter preserving the r7 gray contract:
-        (width, height, quant_zz, blocks) with blocks (nby, nbx, 64)."""
-        w_px, h_px, quants, blocks, _samplings = parse_any(payload)
-        if len(blocks) != 1:
-            raise NotImplementedError("gray parse on multi-component scan")
-        return w_px, h_px, quants[0], blocks[0]
-
-    # IDCT basis: A[u][x] = C(u)/2 * cos((2x+1) u pi / 16); spatial
-    # block = A.T @ F @ A for F in natural [v][u] order
-    _A = _np.array(
-        [
-            [
-                (0.5 / _np.sqrt(2.0) if u == 0 else 0.5)
-                * _np.cos((2 * x + 1) * u * _np.pi / 16.0)
-                for x in range(8)
-            ]
-            for u in range(8)
-        ]
-    )
-
-    def _plane(quant_zz, blocks, w_px: int, h_px: int):
-        """One component's blocks -> cropped (h, w) uint8 sample plane:
-        dequant -> de-zigzag -> IDCT -> +128 level shift -> round ->
-        clamp (T.81 clamps each component's output samples) -> crop."""
-        nby, nbx = blocks.shape[:2]
-        q = _np.asarray(quant_zz, dtype=_np.int64)
-        deq = blocks.astype(_np.int64) * q  # (nby, nbx, 64), zigzag
-        nat = _np.zeros((nby, nbx, 8, 8), dtype=_np.float64)
-        for k, (r, c) in enumerate(ZZ):
-            nat[:, :, r, c] = deq[:, :, k]
-        spatial = _np.einsum("vy,bnvu,ux->bnyx", _A, nat, _A)
-        px = _np.clip(_np.round(spatial + 128.0), 0, 255).astype(_np.uint8)
-        full = px.transpose(0, 2, 1, 3).reshape(nby * 8, nbx * 8)
-        return full[:h_px, :w_px]
-
-    def decode(payload: bytes):
-        """Full grayscale pixel decode. Returns (h, w) uint8."""
-        w_px, h_px, quant_zz, blocks = parse(payload)
-        return _plane(quant_zz, blocks, w_px, h_px)
-
-    def decode3(payload: bytes):
-        """Full color pixel decode: per-component entropy + IDCT planes
-        (Y, Cb, Cr) at each component's own sampling resolution,
-        sample-replication upsampling to frame resolution (the
-        non-fancy libjpeg mode — chroma sample (y, x) comes from plane
-        position (y*vi//Vmax, x*hi//Hmax), exactly replayable), then
-        the fixed-point BT.601 conversion (JPEG_FIX_* constants, floor
-        shifts) to RGB. Returns (h, w, 3) uint8."""
-        w_px, h_px, quants, blocks, samplings = parse_any(payload)
-        if len(blocks) != 3:
-            raise ValueError("color decode needs a 3-component scan")
-        hmax = max(hi for hi, _ in samplings)
-        vmax = max(vi for _, vi in samplings)
-        planes = []
-        yi, xi = _np.mgrid[0:h_px, 0:w_px]
-        for ci in range(3):
-            hi, vi = samplings[ci]
-            cw = (w_px * hi + hmax - 1) // hmax
-            ch = (h_px * vi + vmax - 1) // vmax
-            p = _plane(quants[ci], blocks[ci], cw, ch).astype(_np.int64)
-            planes.append(p[yi * vi // vmax, xi * hi // hmax])
-        y, cb, cr = planes[0], planes[1] - 128, planes[2] - 128
-        r = y + ((JPEG_FIX_RCR * cr + 32768) >> 16)
-        g = y - ((JPEG_FIX_GCB * cb + JPEG_FIX_GCR * cr + 32768) >> 16)
-        b = y + ((JPEG_FIX_BCB * cb + 32768) >> 16)
-        rgb = _np.stack([r, g, b], axis=-1)
-        return _np.clip(rgb, 0, 255).astype(_np.uint8)
-
-    return (
-        encode,
-        parse,
-        decode,
-        encode3,
-        parse_any,
-        decode3,
-        encode420,
-        encode_progressive,
-        encode_sampled,
-        encode_progressive3,
-        encode_progressive_sampled,
-    )
-
-
-# module-level functions for driver-side use and the pytest vectors
-(
-    jpeg_encode_gray_coefs,
-    jpeg_parse_gray,
-    jpeg_decode_gray,
-    jpeg_encode_color_coefs,
-    jpeg_parse_any,
-    jpeg_decode_color,
-    jpeg_encode_420_coefs,
-    jpeg_encode_progressive_coefs,
-    jpeg_encode_sampled_coefs,
-    jpeg_encode_progressive3_coefs,
-    jpeg_encode_progressive_sampled_coefs,
-) = _jpeg_codec()
 
 # Oracle constants: dequantized contribution of each test frequency is
 # coef * Q / 8 (IDCT of the exactly-representable basis {(0,0),(4,0),
@@ -4268,74 +1259,32 @@ JPEG_PIXELS_SCHEMA = StructType(
 )
 
 
-def _make_jpeg_test_coefs():
-    """Factory (cloudpickle-by-value — a module-level def would pickle
-    by import path, which executors cannot resolve) for the
-    deterministic per-block quantized coefficients in the
+def _jpeg_test_coefs(doc_id: int, nby: int, nbx: int):
+    """Deterministic per-block quantized coefficients in the
     exactly-representable frequency subspace. Shared by the synthesis
     path and the pytest vectors; the DuckDB oracle re-derives the same
     values arithmetically."""
-
-    def test_coefs(doc_id: int, nby: int, nbx: int):
-        import numpy as np
-
-        coefs = np.zeros((nby, nbx, 8, 8), dtype=np.int32)
-        for by in range(nby):
-            for bx in range(nbx):
-                coefs[by, bx, 0, 0] = (doc_id * 5 + bx * 3 + by * 7) % 41 - 20
-                coefs[by, bx, 4, 0] = (doc_id + bx * 11 + by * 5) % 9 - 4
-                coefs[by, bx, 0, 4] = (doc_id * 3 + bx + by * 2) % 9 - 4
-                coefs[by, bx, 4, 4] = (doc_id + bx + by * 13) % 7 - 3
-        return coefs
-
-    return test_coefs
+    coefs = np.zeros((nby, nbx, 8, 8), dtype=np.int32)
+    for by in range(nby):
+        for bx in range(nbx):
+            coefs[by, bx, 0, 0] = (doc_id * 5 + bx * 3 + by * 7) % 41 - 20
+            coefs[by, bx, 4, 0] = (doc_id + bx * 11 + by * 5) % 9 - 4
+            coefs[by, bx, 0, 4] = (doc_id * 3 + bx + by * 2) % 9 - 4
+            coefs[by, bx, 4, 4] = (doc_id + bx + by * 13) % 7 - 3
+    return coefs
 
 
-# module-level alias for the pytest vectors and driver-side use
-_jpeg_test_coefs = _make_jpeg_test_coefs()
-
-
-def _make_jpeg_pixels_batches():
-    """Closure for cloudpickle-by-value: synthesize a REAL baseline JPEG
-    per image doc from deterministic quantized coefficients, run the
-    REAL decoder (Huffman + dequant + IDCT + level shift) on the bytes
-    and reduce to position-weighted pixel statistics."""
-    encode, _parse, decode, *_ = _jpeg_codec()
-    _jpeg_test_coefs = _make_jpeg_test_coefs()
-
-    def jpeg_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id, nb = int(doc_id), int(nb)
-                w, h = 8 + doc_id % 17, 8 + (doc_id * 3 + nb) % 17
-                nbx, nby = (w + 7) // 8, (h + 7) // 8
-                px = decode(
-                    encode(_jpeg_test_coefs(doc_id, nby, nbx), w, h)
-                ).astype(_np.int64)
-                assert px.shape == (h, w)
-                y, x = _np.mgrid[0:h, 0:w]
-                weight = 1 + (x * 127 + y * 149) % 241
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixels": int(px.size),
-                        "px_min": int(px.min()),
-                        "px_max": int(px.max()),
-                        "px_sum": int(px.sum()),
-                        "px_checksum": int((px * weight).sum()),
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return jpeg_batches
+def _jpeg_pixels_rows(doc_id: int, nb: int):
+    """A REAL baseline JPEG per image doc through the real decoder
+    (Huffman + dequant + IDCT + level shift)."""
+    w, h = 8 + doc_id % 17, 8 + (doc_id * 3 + nb) % 17
+    nbx, nby = (w + 7) // 8, (h + 7) // 8
+    px = jpeg_decode_gray(
+        jpeg_encode_gray_coefs(_jpeg_test_coefs(doc_id, nby, nbx), w, h)
+    )
+    assert px.shape == (h, w)
+    yield {"doc_id": doc_id, "width": w, "height": h,
+           **_gray_stats(px, _weight(h, w, *_W1))}
 
 
 def multimodal_jpeg_pixels(
@@ -4360,9 +1309,7 @@ def multimodal_jpeg_pixels(
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    return _spread(image_docs).mapInPandas(
-        _make_jpeg_pixels_batches(), schema=JPEG_PIXELS_SCHEMA
-    )
+    return _map_docs(_spread(image_docs), _jpeg_pixels_rows, JPEG_PIXELS_SCHEMA)
 
 
 ORACLES["multimodal_jpeg_pixels"] = f"""
@@ -4425,87 +1372,41 @@ COLOR_PIXELS_SCHEMA = StructType(
 )
 
 
-def _make_jpeg_color_coefs():
-    """Factory (cloudpickle-by-value) for deterministic per-channel
-    quantized coefficients in the exactly-representable subspace — the
-    gray formulas salted per channel, so a component swap, a
-    luma/chroma table swap, or a broken MCU interleave each breaks
-    oracle parity on its own."""
-
-    def color_coefs(doc_id: int, nby: int, nbx: int):
-        import numpy as np
-
-        coefs = np.zeros((3, nby, nbx, 8, 8), dtype=np.int32)
-        for ch in range(3):
-            for by in range(nby):
-                for bx in range(nbx):
-                    coefs[ch, by, bx, 0, 0] = (
-                        doc_id * 5 + ch * 17 + bx * 3 + by * 7
-                    ) % 41 - 20
-                    coefs[ch, by, bx, 4, 0] = (
-                        doc_id + ch * 7 + bx * 11 + by * 5
-                    ) % 9 - 4
-                    coefs[ch, by, bx, 0, 4] = (
-                        doc_id * 3 + ch * 5 + bx + by * 2
-                    ) % 9 - 4
-                    coefs[ch, by, bx, 4, 4] = (
-                        doc_id + ch * 3 + bx + by * 13
-                    ) % 7 - 3
-        return coefs
-
-    return color_coefs
+def _jpeg_color_coefs(doc_id: int, nby: int, nbx: int):
+    """Deterministic per-channel quantized coefficients in the
+    exactly-representable subspace — the gray formulas salted per
+    channel, so a component swap, a luma/chroma table swap, or a broken
+    MCU interleave each breaks oracle parity on its own."""
+    coefs = np.zeros((3, nby, nbx, 8, 8), dtype=np.int32)
+    for ch in range(3):
+        for by in range(nby):
+            for bx in range(nbx):
+                coefs[ch, by, bx, 0, 0] = (
+                    doc_id * 5 + ch * 17 + bx * 3 + by * 7
+                ) % 41 - 20
+                coefs[ch, by, bx, 4, 0] = (
+                    doc_id + ch * 7 + bx * 11 + by * 5
+                ) % 9 - 4
+                coefs[ch, by, bx, 0, 4] = (
+                    doc_id * 3 + ch * 5 + bx + by * 2
+                ) % 9 - 4
+                coefs[ch, by, bx, 4, 4] = (
+                    doc_id + ch * 3 + bx + by * 13
+                ) % 7 - 3
+    return coefs
 
 
-_jpeg_color_coefs = _make_jpeg_color_coefs()
-
-
-def _make_color_pixels_batches():
-    """Closure for cloudpickle-by-value: synthesize a REAL interleaved
-    YCbCr 4:4:4 baseline JPEG per image doc, run the REAL 3-component
-    decoder (per-component Huffman tables + predictors, per-component
-    dequant, IDCT planes, fixed-point BT.601 to RGB) and reduce to
-    per-channel position-weighted statistics."""
-    _e, _p, _d, encode3, _pa, decode3, *_rest = _jpeg_codec()
-    color_coefs = _make_jpeg_color_coefs()
-
-    def color_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id, nb = int(doc_id), int(nb)
-                w, h = 8 + doc_id % 17, 8 + (doc_id * 3 + nb) % 17
-                nbx, nby = (w + 7) // 8, (h + 7) // 8
-                rgb = decode3(
-                    encode3(color_coefs(doc_id, nby, nbx), w, h)
-                ).astype(_np.int64)
-                assert rgb.shape == (h, w, 3)
-                y, x = _np.mgrid[0:h, 0:w]
-                w1 = 1 + (x * 127 + y * 149) % 241
-                w2 = 1 + (x * 131 + y * 137) % 239
-                w3 = 1 + (x * 113 + y * 151) % 251
-                r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixels": int(h * w),
-                        "r_sum": int(r.sum()),
-                        "g_sum": int(g.sum()),
-                        "b_sum": int(b.sum()),
-                        "rgb_checksum": int(
-                            (r * w1 + g * w2 + b * w3).sum()
-                        ),
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return color_batches
+def _color_pixels_rows(doc_id: int, nb: int):
+    """A REAL interleaved YCbCr 4:4:4 baseline JPEG per image doc
+    through the real 3-component decoder (per-component Huffman tables
+    + predictors, per-component dequant, IDCT planes, fixed-point
+    BT.601 to RGB)."""
+    w, h = 8 + doc_id % 17, 8 + (doc_id * 3 + nb) % 17
+    nbx, nby = (w + 7) // 8, (h + 7) // 8
+    rgb = jpeg_decode_color(
+        jpeg_encode_color_coefs(_jpeg_color_coefs(doc_id, nby, nbx), w, h)
+    )
+    yield _rgb_row(doc_id, w, h, rgb)
 
 
 def multimodal_color_pixels(
@@ -4532,9 +1433,7 @@ def multimodal_color_pixels(
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    return _spread(image_docs).mapInPandas(
-        _make_color_pixels_batches(), schema=COLOR_PIXELS_SCHEMA
-    )
+    return _map_docs(_spread(image_docs), _color_pixels_rows, COLOR_PIXELS_SCHEMA)
 
 
 ORACLES["multimodal_color_pixels"] = f"""
@@ -4607,103 +1506,40 @@ FROM rgb GROUP BY doc_id
 # --------------------------- 4:2:0-subsampled JPEG decode (r7b)
 
 
-def _make_jpeg_420_coefs():
-    """Factory (cloudpickle-by-value) for the 4:2:0 coefficient pair:
-    luma blocks on the (2*nmy, 2*nmx) grid with the ch=0 formulas,
-    chroma blocks on the (nmy, nmx) grid with the ch=1/2 formulas —
-    same closed forms as 4:4:4, only the grids differ, so the oracle
-    reuses the per-channel arithmetic with half-resolution chroma
-    indexing."""
-
-    def coefs_420(doc_id: int, nmy: int, nmx: int):
-        import numpy as np
-
-        luma = np.zeros((2 * nmy, 2 * nmx, 8, 8), dtype=np.int32)
-        for by in range(2 * nmy):
-            for bx in range(2 * nmx):
-                luma[by, bx, 0, 0] = (doc_id * 5 + bx * 3 + by * 7) % 41 - 20
-                luma[by, bx, 4, 0] = (doc_id + bx * 11 + by * 5) % 9 - 4
-                luma[by, bx, 0, 4] = (doc_id * 3 + bx + by * 2) % 9 - 4
-                luma[by, bx, 4, 4] = (doc_id + bx + by * 13) % 7 - 3
-        chroma = np.zeros((2, nmy, nmx, 8, 8), dtype=np.int32)
-        for ci in range(2):
-            ch = ci + 1
-            for by in range(nmy):
-                for bx in range(nmx):
-                    chroma[ci, by, bx, 0, 0] = (
-                        doc_id * 5 + ch * 17 + bx * 3 + by * 7
-                    ) % 41 - 20
-                    chroma[ci, by, bx, 4, 0] = (
-                        doc_id + ch * 7 + bx * 11 + by * 5
-                    ) % 9 - 4
-                    chroma[ci, by, bx, 0, 4] = (
-                        doc_id * 3 + ch * 5 + bx + by * 2
-                    ) % 9 - 4
-                    chroma[ci, by, bx, 4, 4] = (
-                        doc_id + ch * 3 + bx + by * 13
-                    ) % 7 - 3
-        return luma, chroma
-
-    return coefs_420
+def _jpeg_420_coefs(doc_id: int, nmy: int, nmx: int):
+    """The 4:2:0 coefficient pair: luma blocks on the (2*nmy, 2*nmx)
+    grid with the ch=0 formulas, chroma blocks on the (nmy, nmx) grid
+    with the ch=1/2 formulas — same closed forms as 4:4:4, only the
+    grids differ, so the oracle reuses the per-channel arithmetic with
+    half-resolution chroma indexing."""
+    luma = _jpeg_test_coefs(doc_id, 2 * nmy, 2 * nmx)
+    chroma = _jpeg_color_coefs(doc_id, nmy, nmx)[1:]
+    return luma, chroma
 
 
-_jpeg_420_coefs = _make_jpeg_420_coefs()
+def _jpeg420_geometry(doc_id: int, nb: int):
+    """Frame size, 4:2:0 coefficients and restart interval of a
+    chroma-subsampled image doc. Multi-MCU frames carry DRI restart
+    markers (interval 1) so the restart path — byte realignment,
+    predictor resets, EOB-run termination at markers — is
+    oracle-checked; single-MCU frames keep the no-DRI path alive.
+    Restarts never change pixels, so the oracle ignores them."""
+    w, h = 8 + doc_id % 17, 8 + (doc_id * 3 + nb) % 17
+    nmx, nmy = (w + 15) // 16, (h + 15) // 16
+    luma, chroma = _jpeg_420_coefs(doc_id, nmy, nmx)
+    return w, h, luma, chroma, 1 if nmx * nmy > 1 else 0
 
 
-def _make_jpeg420_pixels_batches():
-    """Closure for cloudpickle-by-value: synthesize a REAL 4:2:0
-    baseline JPEG per image doc (four Y blocks + Cb + Cr per MCU), run
-    the REAL subsampled decoder (generic MCU walk, per-component-
-    resolution IDCT planes, replication upsampling, fixed-point BT.601)
-    and reduce to per-channel position-weighted statistics."""
-    _e, _p, _d, _e3, _pa, decode3, encode420, *_rest = _jpeg_codec()
-    coefs_420 = _make_jpeg_420_coefs()
-
-    def jpeg420_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id, nb = int(doc_id), int(nb)
-                w, h = 8 + doc_id % 17, 8 + (doc_id * 3 + nb) % 17
-                nmx, nmy = (w + 15) // 16, (h + 15) // 16
-                luma, chroma = coefs_420(doc_id, nmy, nmx)
-                # multi-MCU frames carry DRI restart markers (interval
-                # 1) so the restart path — byte realignment + predictor
-                # resets — is exercised under driver verification; the
-                # oracle is unchanged because restarts don't change
-                # pixels. Single-MCU frames keep the no-DRI path alive.
-                ri = 1 if nmx * nmy > 1 else 0
-                rgb = decode3(
-                    encode420(luma, chroma, w, h, restart_interval=ri)
-                ).astype(_np.int64)
-                assert rgb.shape == (h, w, 3)
-                y, x = _np.mgrid[0:h, 0:w]
-                w1 = 1 + (x * 127 + y * 149) % 241
-                w2 = 1 + (x * 131 + y * 137) % 239
-                w3 = 1 + (x * 113 + y * 151) % 251
-                r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixels": int(h * w),
-                        "r_sum": int(r.sum()),
-                        "g_sum": int(g.sum()),
-                        "b_sum": int(b.sum()),
-                        "rgb_checksum": int(
-                            (r * w1 + g * w2 + b * w3).sum()
-                        ),
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return jpeg420_batches
+def _jpeg420_pixels_rows(doc_id: int, nb: int):
+    """A REAL 4:2:0 baseline JPEG per image doc (four Y blocks + Cb +
+    Cr per MCU) through the real subsampled decoder (generic MCU walk,
+    per-component-resolution IDCT planes, replication upsampling,
+    fixed-point BT.601)."""
+    w, h, luma, chroma, ri = _jpeg420_geometry(doc_id, nb)
+    rgb = jpeg_decode_color(
+        jpeg_encode_420_coefs(luma, chroma, w, h, restart_interval=ri)
+    )
+    yield _rgb_row(doc_id, w, h, rgb)
 
 
 def multimodal_jpeg420_pixels(
@@ -4729,9 +1565,7 @@ def multimodal_jpeg420_pixels(
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    return _spread(image_docs).mapInPandas(
-        _make_jpeg420_pixels_batches(), schema=COLOR_PIXELS_SCHEMA
-    )
+    return _map_docs(_spread(image_docs), _jpeg420_pixels_rows, COLOR_PIXELS_SCHEMA)
 
 
 ORACLES["multimodal_jpeg420_pixels"] = f"""
@@ -4810,75 +1644,26 @@ FROM rgb GROUP BY doc_id
 # ------------------ progressive 4:2:0-JPEG pixel decode (r8)
 
 
-def _make_progressive420_batches():
-    """Closure for cloudpickle-by-value: synthesize a REAL progressive
-    CHROMA-SUBSAMPLED (4:2:0) JPEG per image doc — one interleaved DC
+def _progressive420_rows(doc_id: int, nb: int):
+    """A REAL progressive 4:2:0 JPEG per image doc — one interleaved DC
     scan in MCU order (four Y blocks incl. dummies + Cb + Cr per MCU),
     per-component AC band scans over each component's real grid,
-    successive approximation over a per-doc depth — and decode through
-    the genuine multi-scan parser with per-component grid geometry,
-    then the same subsampled IDCT/upsample/BT.601 path as the
-    sequential 4:2:0 member. The scan script is pixel-invariant, so
-    the oracle is the sequential 4:2:0 closed form verbatim."""
-    (
-        _e, _p, _d, _e3, _pa, decode3, _e420, _ep, _es, _ep3,
-        encode_prog_sampled,
-    ) = _jpeg_codec()
-    coefs_420 = _make_jpeg_420_coefs()
-
-    def prog420_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id, nb = int(doc_id), int(nb)
-                w, h = 8 + doc_id % 17, 8 + (doc_id * 3 + nb) % 17
-                nmx, nmy = (w + 15) // 16, (h + 15) // 16
-                luma, chroma = coefs_420(doc_id, nmy, nmx)
-                # per-doc band split and approximation depth (0..2)
-                # vary so dummy-block DC interleave, real-grid AC
-                # walks, and the refinement ladder all verify; multi-
-                # MCU frames carry DRI restarts (interval 1) in EVERY
-                # scan — per-scan realignment, predictor resets, and
-                # EOB-run termination at markers (r8) — while single-
-                # MCU frames keep the no-DRI path alive
-                split = 1 + doc_id % 20
-                ri = 1 if nmx * nmy > 1 else 0
-                rgb = decode3(
-                    encode_prog_sampled(
-                        luma, chroma, w, h, 2, 2,
-                        bands=((1, split), (split + 1, 63)),
-                        al=doc_id % 3,
-                        restart_interval=ri,
-                    )
-                ).astype(_np.int64)
-                assert rgb.shape == (h, w, 3)
-                y, x = _np.mgrid[0:h, 0:w]
-                w1 = 1 + (x * 127 + y * 149) % 241
-                w2 = 1 + (x * 131 + y * 137) % 239
-                w3 = 1 + (x * 113 + y * 151) % 251
-                r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixels": int(h * w),
-                        "r_sum": int(r.sum()),
-                        "g_sum": int(g.sum()),
-                        "b_sum": int(b.sum()),
-                        "rgb_checksum": int(
-                            (r * w1 + g * w2 + b * w3).sum()
-                        ),
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return prog420_batches
+    successive approximation over a per-doc depth (0..2) and band
+    split, DRI restarts in EVERY scan of multi-MCU frames — decoded
+    through the genuine multi-scan parser with per-component grid
+    geometry. The scan script is pixel-invariant, so the oracle is the
+    sequential 4:2:0 closed form verbatim."""
+    w, h, luma, chroma, ri = _jpeg420_geometry(doc_id, nb)
+    split = 1 + doc_id % 20
+    rgb = jpeg_decode_color(
+        jpeg_encode_progressive_sampled_coefs(
+            luma, chroma, w, h, 2, 2,
+            bands=((1, split), (split + 1, 63)),
+            al=doc_id % 3,
+            restart_interval=ri,
+        )
+    )
+    yield _rgb_row(doc_id, w, h, rgb)
 
 
 def multimodal_progressive420_pixels(
@@ -4901,9 +1686,7 @@ def multimodal_progressive420_pixels(
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    return _spread(image_docs).mapInPandas(
-        _make_progressive420_batches(), schema=COLOR_PIXELS_SCHEMA
-    )
+    return _map_docs(_spread(image_docs), _progressive420_rows, COLOR_PIXELS_SCHEMA)
 
 
 # identical closed form (the scan script never changes pixels); only
@@ -4916,62 +1699,29 @@ ORACLES["multimodal_progressive420_pixels"] = ORACLES[
 # --------------------------- progressive-JPEG pixel decode (r7d)
 
 
-def _make_progressive_pixels_batches():
-    """Closure for cloudpickle-by-value: synthesize a REAL
-    spectral-selection progressive JPEG per image doc (DC scan + two
-    AC band scans, EOB-run coded) and decode it through the genuine
-    multi-scan parser — coefficient accumulation across scans, band
-    bookkeeping, EOB-run skips — then the same IDCT path as the
-    sequential member."""
-    _e, _p, decode, _e3, _pa, _d3, _e420, encode_prog, *_r = _jpeg_codec()
-    test_coefs = _make_jpeg_test_coefs()
-
-    def prog_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id, nb = int(doc_id), int(nb)
-                w, h = 8 + (doc_id * 7) % 17, 8 + (doc_id * 5 + nb) % 17
-                nbx, nby = (w + 7) // 8, (h + 7) // 8
-                # per-doc band split AND approximation depth vary so
-                # scan boundaries land on every zigzag position class
-                # and half the corpus exercises the full successive-
-                # approximation path (r7e: DC/AC refinement scans with
-                # correction bits); pixels are script-invariant, so
-                # the oracle is untouched
-                split = 1 + doc_id % 20
-                px = decode(
-                    encode_prog(
-                        test_coefs(doc_id, nby, nbx),
-                        w,
-                        h,
-                        bands=((1, split), (split + 1, 63)),
-                        al=doc_id % 2,
-                    )
-                ).astype(_np.int64)
-                assert px.shape == (h, w)
-                y, x = _np.mgrid[0:h, 0:w]
-                weight = 1 + (x * 127 + y * 149) % 241
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixels": int(px.size),
-                        "px_min": int(px.min()),
-                        "px_max": int(px.max()),
-                        "px_sum": int(px.sum()),
-                        "px_checksum": int((px * weight).sum()),
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return prog_batches
+def _progressive_pixels_rows(doc_id: int, nb: int):
+    """A REAL spectral-selection progressive JPEG per image doc (DC
+    scan + two AC band scans, EOB-run coded) through the genuine
+    multi-scan parser, then the same IDCT path as the sequential
+    member. The band split and approximation depth vary per doc, so
+    scan boundaries land on every zigzag position class and half the
+    corpus runs the full successive-approximation path; pixels are
+    script-invariant, so the oracle is untouched."""
+    w, h = 8 + (doc_id * 7) % 17, 8 + (doc_id * 5 + nb) % 17
+    nbx, nby = (w + 7) // 8, (h + 7) // 8
+    split = 1 + doc_id % 20
+    px = jpeg_decode_gray(
+        jpeg_encode_progressive_coefs(
+            _jpeg_test_coefs(doc_id, nby, nbx),
+            w,
+            h,
+            bands=((1, split), (split + 1, 63)),
+            al=doc_id % 2,
+        )
+    )
+    assert px.shape == (h, w)
+    yield {"doc_id": doc_id, "width": w, "height": h,
+           **_gray_stats(px, _weight(h, w, *_W1))}
 
 
 def multimodal_progressive_pixels(
@@ -5001,9 +1751,7 @@ def multimodal_progressive_pixels(
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    return _spread(image_docs).mapInPandas(
-        _make_progressive_pixels_batches(), schema=JPEG_PIXELS_SCHEMA
-    )
+    return _map_docs(_spread(image_docs), _progressive_pixels_rows, JPEG_PIXELS_SCHEMA)
 
 
 ORACLES["multimodal_progressive_pixels"] = f"""
@@ -5053,62 +1801,25 @@ FROM v GROUP BY doc_id
 # ------------------------ progressive color-JPEG pixel decode (r7e)
 
 
-def _make_progressive_color_batches():
-    """Closure for cloudpickle-by-value: synthesize a REAL progressive
-    COLOR JPEG per image doc (interleaved DC scan over Y/Cb/Cr with
-    per-component predictors and tables, per-component AC band scans,
-    successive approximation for half the corpus) and decode through
-    the genuine multi-scan multi-component parser + BT.601 path."""
-    _e, _p, _d, _e3, _pa, decode3, _e420, _ep, _es, encode_prog3, *_r = (
-        _jpeg_codec()
+def _progressive_color_rows(doc_id: int, nb: int):
+    """A REAL progressive COLOR JPEG per image doc (interleaved DC scan
+    over Y/Cb/Cr with per-component predictors and tables,
+    per-component AC band scans, successive approximation for half the
+    corpus) through the genuine multi-scan multi-component parser +
+    BT.601 path."""
+    w, h = 8 + (doc_id * 11) % 17, 8 + (doc_id * 7 + nb) % 17
+    nbx, nby = (w + 7) // 8, (h + 7) // 8
+    split = 1 + doc_id % 20
+    rgb = jpeg_decode_color(
+        jpeg_encode_progressive3_coefs(
+            _jpeg_color_coefs(doc_id, nby, nbx),
+            w,
+            h,
+            bands=((1, split), (split + 1, 63)),
+            al=doc_id % 2,
+        )
     )
-    color_coefs = _make_jpeg_color_coefs()
-
-    def prog_color_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            rows = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id, nb = int(doc_id), int(nb)
-                w, h = 8 + (doc_id * 11) % 17, 8 + (doc_id * 7 + nb) % 17
-                nbx, nby = (w + 7) // 8, (h + 7) // 8
-                split = 1 + doc_id % 20
-                rgb = decode3(
-                    encode_prog3(
-                        color_coefs(doc_id, nby, nbx),
-                        w,
-                        h,
-                        bands=((1, split), (split + 1, 63)),
-                        al=doc_id % 2,
-                    )
-                ).astype(_np.int64)
-                assert rgb.shape == (h, w, 3)
-                y, x = _np.mgrid[0:h, 0:w]
-                w1 = 1 + (x * 127 + y * 149) % 241
-                w2 = 1 + (x * 131 + y * 137) % 239
-                w3 = 1 + (x * 113 + y * 151) % 251
-                r, g, b = rgb[..., 0], rgb[..., 1], rgb[..., 2]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixels": int(h * w),
-                        "r_sum": int(r.sum()),
-                        "g_sum": int(g.sum()),
-                        "b_sum": int(b.sum()),
-                        "rgb_checksum": int(
-                            (r * w1 + g * w2 + b * w3).sum()
-                        ),
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return prog_color_batches
+    yield _rgb_row(doc_id, w, h, rgb)
 
 
 def multimodal_progressive_color(
@@ -5137,9 +1848,7 @@ def multimodal_progressive_color(
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    return _spread(image_docs).mapInPandas(
-        _make_progressive_color_batches(), schema=COLOR_PIXELS_SCHEMA
-    )
+    return _map_docs(_spread(image_docs), _progressive_color_rows, COLOR_PIXELS_SCHEMA)
 
 
 ORACLES["multimodal_progressive_color"] = f"""
@@ -5212,53 +1921,23 @@ FROM rgb GROUP BY doc_id
 # ----------------------------- truecolor-PNG pixel decode (r7e)
 
 
-def _make_png_color_batches():
-    """Closure for cloudpickle-by-value: synthesize a REAL truecolor
-    (color type 2) filtered+deflated PNG per image doc — per-channel
-    deterministic pixels, all five scanline filters — and round-trip
-    it through the genuine bytewise unfilterer (bpp=3 stride) before
-    reducing to per-channel statistics."""
-    encode, decode, *_pal = _png_codec()
+def _rgba_planes(doc_id: int, y, x) -> list:
+    """Deterministic R, G, B, A planes over an (h, w) grid."""
+    return [
+        ((doc_id * a + y * b + x * c) % 256).astype(np.uint8)
+        for a, b, c in ((7, 31, 13), (11, 17, 29), (3, 23, 19), (13, 7, 37))
+    ]
 
-    def png_color_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
 
-        for pdf in batches:
-            rows = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id, nb = int(doc_id), int(nb)
-                w, h = 8 + (doc_id * 5) % 9, 8 + (nb * 3) % 9
-                y, x = _np.mgrid[0:h, 0:w]
-                r = ((doc_id * 7 + y * 31 + x * 13) % 256).astype(_np.uint8)
-                g = ((doc_id * 11 + y * 17 + x * 29) % 256).astype(_np.uint8)
-                b = ((doc_id * 3 + y * 23 + x * 19) % 256).astype(_np.uint8)
-                rgb = _np.stack([r, g, b], axis=-1)
-                rec = decode(encode(rgb)).astype(_np.int64)
-                assert rec.shape == (h, w, 3)
-                w1 = 1 + (x * 127 + y * 149) % 241
-                w2 = 1 + (x * 131 + y * 137) % 239
-                w3 = 1 + (x * 113 + y * 151) % 251
-                rr, gg, bb = rec[..., 0], rec[..., 1], rec[..., 2]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixels": int(h * w),
-                        "r_sum": int(rr.sum()),
-                        "g_sum": int(gg.sum()),
-                        "b_sum": int(bb.sum()),
-                        "rgb_checksum": int(
-                            (rr * w1 + gg * w2 + bb * w3).sum()
-                        ),
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return png_color_batches
+def _png_color_rows(doc_id: int, nb: int):
+    """A REAL truecolor (color type 2) filtered+deflated PNG per image
+    doc — per-channel deterministic pixels, all five scanline filters —
+    round-tripped through the genuine bytewise unfilterer (bpp=3
+    stride)."""
+    w, h = 8 + (doc_id * 5) % 9, 8 + (nb * 3) % 9
+    y, x = np.mgrid[0:h, 0:w]
+    rgb = np.stack(_rgba_planes(doc_id, y, x)[:3], axis=-1)
+    yield _rgb_row(doc_id, w, h, png_decode(png_encode(rgb)))
 
 
 def multimodal_png_color(
@@ -5278,9 +1957,7 @@ def multimodal_png_color(
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    return _spread(image_docs).mapInPandas(
-        _make_png_color_batches(), schema=COLOR_PIXELS_SCHEMA
-    )
+    return _map_docs(_spread(image_docs), _png_color_rows, COLOR_PIXELS_SCHEMA)
 
 
 ORACLES["multimodal_png_color"] = """
@@ -5321,76 +1998,38 @@ FROM v GROUP BY doc_id
 # ----------- palette / Adam7 / 16-bit PNG pixel decode (r8)
 
 
-def _make_png_palette_batches():
-    """Closure for cloudpickle-by-value: synthesize a REAL PALETTE
-    (color type 3) PNG per image doc — a deterministic 256-entry PLTE
-    (pal[i] = (i, 7i mod 256, 13i mod 256)), all five scanline filters,
-    Adam7 interlacing on odd docs (an independently-filtered sub-image
-    per pass — a storage permutation, so the oracle is unchanged) — and
-    round-trip it through the genuine chunk walk + unfilterer + palette
-    lookup; additionally a 16-bit grayscale image per doc round-trips
-    through the two-byte-stride unfilterer, its checksum folded into
-    the same verified row (shifted so it cannot cancel against the
-    palette channels)."""
-    encode, decode, encode_palette = _png_codec()
 
-    def png_palette_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
+# pal[i] = (i, 7i mod 256, 13i mod 256): every channel a closed form of
+# the index, so DuckDB recomputes the lookup
+_PALETTE = np.stack(
+    [np.arange(256), (np.arange(256) * 7) % 256, (np.arange(256) * 13) % 256],
+    axis=-1,
+).astype(np.uint8)
 
-        pal = _np.stack(
-            [
-                _np.arange(256),
-                (_np.arange(256) * 7) % 256,
-                (_np.arange(256) * 13) % 256,
-            ],
-            axis=-1,
-        ).astype(_np.uint8)
 
-        for pdf in batches:
-            rows = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id, nb = int(doc_id), int(nb)
-                w, h = 8 + (doc_id * 3) % 9, 8 + (nb * 5) % 9
-                y, x = _np.mgrid[0:h, 0:w]
-                idx = ((doc_id * 7 + y * 31 + x * 13) % 256).astype(
-                    _np.uint8
-                )
-                rec = decode(
-                    encode_palette(idx, pal, interlace=bool(doc_id % 2))
-                ).astype(_np.int64)
-                assert rec.shape == (h, w, 3)
-                # the 16-bit grayscale leg: full uint16 dynamic range
-                g16 = (
-                    (doc_id * 257 + y * 7919 + x * 104729) % 65536
-                ).astype(_np.uint16)
-                rec16 = decode(encode(g16, interlace=bool(doc_id % 2)))
-                assert rec16.dtype == _np.uint16
-                g = rec16.astype(_np.int64)
-                w1 = 1 + (x * 127 + y * 149) % 241
-                w2 = 1 + (x * 131 + y * 137) % 239
-                w3 = 1 + (x * 113 + y * 151) % 251
-                rr, gg, bb = rec[..., 0], rec[..., 1], rec[..., 2]
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixels": int(h * w),
-                        "r_sum": int(rr.sum()),
-                        "g_sum": int(gg.sum()),
-                        "b_sum": int(bb.sum()),
-                        "rgb_checksum": int(
-                            (rr * w1 + gg * w2 + bb * w3).sum()
-                            + (g * w1).sum() * 997
-                        ),
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return png_palette_batches
+def _png_palette_rows(doc_id: int, nb: int):
+    """A REAL PALETTE (color type 3) PNG per image doc — all five
+    scanline filters, Adam7 interlacing on odd docs (an independently
+    filtered sub-image per pass — a storage permutation, so the oracle
+    is unchanged) — round-tripped through the genuine chunk walk,
+    unfilterer and palette lookup; a 16-bit grayscale image per doc
+    round-trips through the two-byte-stride unfilterer, its checksum
+    folded into the same verified row (scaled so it cannot cancel
+    against the palette channels)."""
+    w, h = 8 + (doc_id * 3) % 9, 8 + (nb * 5) % 9
+    y, x = np.mgrid[0:h, 0:w]
+    inter = bool(doc_id % 2)
+    idx = ((doc_id * 7 + y * 31 + x * 13) % 256).astype(np.uint8)
+    row = _rgb_row(
+        doc_id, w, h, png_decode(png_encode_palette(idx, _PALETTE, interlace=inter))
+    )
+    # the 16-bit grayscale leg: full uint16 dynamic range
+    g16 = ((doc_id * 257 + y * 7919 + x * 104729) % 65536).astype(np.uint16)
+    rec16 = png_decode(png_encode(g16, interlace=inter))
+    assert rec16.dtype == np.uint16
+    g16_sum = int((rec16.astype(np.int64) * _weight(h, w, *_W1)).sum())
+    row["rgb_checksum"] += g16_sum * 997
+    yield row
 
 
 def multimodal_png_palette(
@@ -5411,9 +2050,7 @@ def multimodal_png_palette(
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    return _spread(image_docs).mapInPandas(
-        _make_png_palette_batches(), schema=COLOR_PIXELS_SCHEMA
-    )
+    return _map_docs(_spread(image_docs), _png_palette_rows, COLOR_PIXELS_SCHEMA)
 
 
 ORACLES["multimodal_png_palette"] = """
@@ -5469,91 +2106,45 @@ ALPHA_PIXELS_SCHEMA = StructType(
 )
 
 
-def _make_png_alpha_batches():
-    """Closure for cloudpickle-by-value: synthesize a REAL RGBA (color
-    type 6) filtered+deflated PNG per image doc — four interleaved
-    channels per scanline, so the bytewise unfilterer runs at bpp=4
-    stride; a stride bug bleeds the alpha plane into color sums
-    instantly — plus the r9 sub-byte legs: a 4-bit PALETTE image (16
+
+_PALETTE4 = np.stack(
+    [(np.arange(16) * k + c) % 256 for k, c in ((37, 11), (59, 7), (83, 3))],
+    axis=-1,
+).astype(np.uint8)
+
+
+def _png_alpha_rows(doc_id: int, nb: int):
+    """A REAL RGBA (color type 6) filtered+deflated PNG per image doc —
+    four interleaved channels per scanline, so the bytewise unfilterer
+    runs at bpp=4 stride and a stride bug bleeds the alpha plane into
+    the color sums — plus the sub-byte legs: a 4-bit PALETTE image (16
     packed indices resolve through PLTE) and a 2-bit grayscale image,
     both MSB-first bit-packings through the same filter machinery.
     Adam7 on odd docs (a storage permutation — the oracle is
     interlace-blind exactly as the spec demands). Both sub-byte
     checksums fold into one column, the gray leg scaled so it cannot
     cancel against the palette channels."""
-    encode, decode, encode_palette = _png_codec()
-
-    def png_alpha_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        import pandas as _pd
-
-        i16 = _np.arange(16)
-        pal4 = _np.stack(
-            [(i16 * 37 + 11) % 256, (i16 * 59 + 7) % 256, (i16 * 83 + 3) % 256],
-            axis=-1,
-        ).astype(_np.uint8)
-
-        for pdf in batches:
-            rows = []
-            for doc_id, nb in zip(pdf["doc_id"], pdf["n_bytes"]):
-                doc_id, nb = int(doc_id), int(nb)
-                w, h = 8 + (doc_id * 7) % 9, 8 + (nb * 3) % 9
-                y, x = _np.mgrid[0:h, 0:w]
-                r = ((doc_id * 7 + y * 31 + x * 13) % 256).astype(_np.uint8)
-                g = ((doc_id * 11 + y * 17 + x * 29) % 256).astype(_np.uint8)
-                b = ((doc_id * 3 + y * 23 + x * 19) % 256).astype(_np.uint8)
-                a = ((doc_id * 13 + y * 7 + x * 37) % 256).astype(_np.uint8)
-                rgba = _np.stack([r, g, b, a], axis=-1)
-                inter = bool(doc_id % 2)
-                rec = decode(encode(rgba, interlace=inter)).astype(_np.int64)
-                assert rec.shape == (h, w, 4)
-                # 4-bit palette leg: packed indices -> PLTE lookup
-                idx4 = ((doc_id + y * 3 + x * 5) % 16).astype(_np.uint8)
-                rec4 = decode(
-                    encode_palette(idx4, pal4, interlace=inter, depth=4)
-                ).astype(_np.int64)
-                assert rec4.shape == (h, w, 3)
-                # 2-bit grayscale leg
-                g2 = ((doc_id + y + x) % 4).astype(_np.uint8)
-                rec2 = decode(encode(g2, interlace=inter, depth=2)).astype(
-                    _np.int64
-                )
-                assert rec2.shape == (h, w)
-                w1 = 1 + (x * 127 + y * 149) % 241
-                w2 = 1 + (x * 131 + y * 137) % 239
-                w3 = 1 + (x * 113 + y * 151) % 251
-                w4 = 1 + (x * 109 + y * 139) % 233
-                rr, gg, bb, aa = (
-                    rec[..., 0], rec[..., 1], rec[..., 2], rec[..., 3],
-                )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixels": int(h * w),
-                        "r_sum": int(rr.sum()),
-                        "g_sum": int(gg.sum()),
-                        "b_sum": int(bb.sum()),
-                        "a_sum": int(aa.sum()),
-                        "rgba_checksum": int(
-                            (rr * w1 + gg * w2 + bb * w3 + aa * w4).sum()
-                        ),
-                        "sub_checksum": int(
-                            (
-                                rec4[..., 0] * w1
-                                + rec4[..., 1] * w2
-                                + rec4[..., 2] * w3
-                            ).sum()
-                            + (rec2 * w4).sum() * 1000003
-                        ),
-                    }
-                )
-            yield _pd.DataFrame(rows)
-
-    return png_alpha_batches
+    w, h = 8 + (doc_id * 7) % 9, 8 + (nb * 3) % 9
+    y, x = np.mgrid[0:h, 0:w]
+    inter = bool(doc_id % 2)
+    rgba = np.stack(_rgba_planes(doc_id, y, x), axis=-1)
+    rec = png_decode(png_encode(rgba, interlace=inter))
+    assert rec.shape == (h, w, 4)
+    idx4 = ((doc_id + y * 3 + x * 5) % 16).astype(np.uint8)
+    rec4 = png_decode(png_encode_palette(idx4, _PALETTE4, interlace=inter, depth=4))
+    g2 = ((doc_id + y + x) % 4).astype(np.uint8)
+    rec2 = png_decode(png_encode(g2, interlace=inter, depth=2)).astype(np.int64)
+    assert rec2.shape == (h, w)
+    w4 = _weight(h, w, *_W4)
+    alpha = rec[..., 3].astype(np.int64)
+    row = _rgb_row(doc_id, w, h, rec[..., :3])
+    row["a_sum"] = int(alpha.sum())
+    row["rgba_checksum"] = row["rgb_checksum"] + int((alpha * w4).sum())
+    row["sub_checksum"] = (
+        _rgb_row(doc_id, w, h, rec4)["rgb_checksum"]
+        + int((rec2 * w4).sum()) * 1000003
+    )
+    yield row
 
 
 def multimodal_png_alpha(
@@ -5573,9 +2164,7 @@ def multimodal_png_alpha(
         "doc_id",
         F.length(F.expr("encode(text, 'UTF-8')")).cast("long").alias("n_bytes"),
     )
-    return _spread(image_docs).mapInPandas(
-        _make_png_alpha_batches(), schema=ALPHA_PIXELS_SCHEMA
-    )
+    return _map_docs(_spread(image_docs), _png_alpha_rows, ALPHA_PIXELS_SCHEMA)
 
 
 ORACLES["multimodal_png_alpha"] = """

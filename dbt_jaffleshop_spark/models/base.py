@@ -137,8 +137,18 @@ def release_cached(spark=None, blocking: bool = True) -> None:
     showed up as long-session dispersion on the cache-heavy rows
     (customer_segmentation's 7→17 s first-pass flapping). Waiting for
     block removal costs milliseconds here and makes every timed run
-    start from the same storage-memory state."""
-    for key, df in list(_CACHE_MEMO.items()):
-        if spark is None or key[0] == id(spark):
-            df.unpersist(blocking=blocking)
-            del _CACHE_MEMO[key]
+    start from the same storage-memory state.
+
+    Safe against concurrent cached() calls: the matching entries leave
+    the memo under _CACHE_LOCK and are unpersisted outside it, so a
+    frame stored while a release is unpersisting stays in the memo
+    (still cached, still releasable) instead of being dropped un-
+    unpersisted."""
+    with _CACHE_LOCK:
+        released = [
+            _CACHE_MEMO.pop(key)
+            for key in list(_CACHE_MEMO)
+            if spark is None or key[0] == id(spark)
+        ]
+    for df in released:
+        df.unpersist(blocking=blocking)

@@ -369,6 +369,11 @@ def run_pipeline(
     failed: set[str] = set()
     done: set[str] = set()
     lock = _threading.Lock()
+    # set by a model's own worker the moment it raises, before that
+    # worker can dequeue an export: no export writes after a model
+    # failure. (Cancelling the queued futures from this thread would
+    # race the worker that just freed up.)
+    aborted = _threading.Event()
 
     def _run_model(name: str) -> None:
         spec = MODELS[name]
@@ -507,6 +512,13 @@ def run_pipeline(
             else:
                 results[name] = {"status": "ok", "seconds": _secs}
 
+    def _model_task(name: str) -> None:
+        try:
+            _run_model(name)
+        except BaseException:
+            aborted.set()
+            raise
+
     # ref() resolution: builders consume already-materialized upstream
     # models (for table marts: the re-read of the written parquet)
     # instead of recomputing their lineage — compute-once/read-many
@@ -538,6 +550,8 @@ def run_pipeline(
             export_by_mart.setdefault(_spec.depends_on, []).append(_spec)
 
         def _run_export(spec) -> None:
+            if aborted.is_set():
+                return
             _t0 = _time.perf_counter()
             query = SAVED_QUERIES[spec.saved_query]
             table = AcidTable(os.path.join(warehouse_dir, spec.name))
@@ -578,12 +592,12 @@ def run_pipeline(
 
     order = topological_order()
     pending = list(order)
+    efutures: dict = {}
     try:
         with materialization_context(materialized), ThreadPoolExecutor(
             max_workers=max(1, threads)
         ) as pool:
             futures: dict = {}
-            efutures: dict = {}
             while pending or futures:
                 ready = []
                 for name in pending:
@@ -597,7 +611,7 @@ def run_pipeline(
                 pending = [n for n in pending
                            if n not in failed and n not in ready]
                 for name in ready:
-                    futures[pool.submit(_run_model, name)] = name
+                    futures[pool.submit(_model_task, name)] = name
                 if not futures:
                     continue
                 finished, _ = wait(list(futures), return_when=FIRST_COMPLETED)
@@ -625,6 +639,21 @@ def run_pipeline(
                         }
             for fut in efutures:
                 fut.result()
+    except BaseException as exc:
+        # a model raised (exports queued behind it returned unwritten,
+        # see `aborted`): the pool has joined every export, so attach
+        # what the ones that ran did instead of dropping it
+        for fut, ename in efutures.items():
+            err = fut.exception()
+            if err is not None and err is not exc:
+                exc.add_note(f"export {ename} failed: {err!r}")
+        committed = [
+            ename for ename in efutures.values()
+            if results.get(f"export:{ename}", {}).get("status") == "ok"
+        ]
+        if committed:
+            exc.add_note(f"exports committed before the failure: {committed}")
+        raise
     finally:
         # Release every memoized cache this run populated (r15): inside
         # the run, cached() memoizes non-materialized sub-analyses

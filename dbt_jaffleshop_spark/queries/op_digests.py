@@ -475,7 +475,7 @@ _GROUP_SPECS: dict[str, dict[str, tuple[Callable, Schema, str]]] = {
         # the dependency-free FLAC encoder (fixed predictors + Rice
         # residuals + CRC-8/16, stereo decorrelation rotating by doc_id)
         # and decoded by the real decoder; losslessness makes the oracle
-        # exact from the sample formula (llm/multimodal.py::_flac_codec)
+        # exact from the sample formula (llm/codecs/flac.py)
         "multimodal_flac": _m(llm_multimodal, "multimodal_flac", [
             ("doc_id", "bigint"),
             ("sample_rate", "int"),

@@ -33,6 +33,8 @@ from __future__ import annotations
 import os
 import uuid
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -72,85 +74,77 @@ STATE_SCHEMA = StructType(
 _SEP = "\x1f"
 
 
-def _make_sessionizer(gap_us: int):
-    """Closure (pickled by value — executors lack this package) that
-    sessionizes one user's events within a micro-batch and merges the
-    first segment with the open tail carried in state. Fully vectorized:
-    numpy gap-flag + reduceat segment aggregates (int64 — no float
-    accumulation); the only per-segment Python is the distinct-type set
-    handling (segment count, not event count)."""
+def _sessionize(key, pdf_iter, state):
+    """Sessionize one user's events within a micro-batch and merge the
+    first segment with the open tail carried in state. Fully
+    vectorized: numpy gap-flag + reduceat segment aggregates (int64 — no
+    float accumulation); the only per-segment Python is the
+    distinct-type set handling (segment count, not event count)."""
+    (user_id,) = key
+    events = pd.concat(list(pdf_iter)).sort_values(["ts_us", "event_id"])
 
-    def sessionize(key, pdf_iter, state):
-        import numpy as np
-        import pandas as pd
-
-        (user_id,) = key
-        events = pd.concat(list(pdf_iter)).sort_values(["ts_us", "event_id"])
-
-        ts = events["ts_us"].to_numpy(np.int64)
-        cents = events["value_cents"].to_numpy(np.int64)
-        if not len(ts):
-            yield pd.DataFrame(
-                {f.name: pd.Series(dtype="int64") for f in OUTPUT_SCHEMA}
-            )
-            return
-
-        tail = state.get if state.exists else None
-        continuing = tail is not None and ts[0] - tail[2] <= gap_us
-
-        new_sess = np.ones(len(ts), dtype=bool)
-        new_sess[1:] = (ts[1:] - ts[:-1]) > gap_us
-        starts_idx = np.flatnonzero(new_sess)
-        ends_idx = np.append(starts_idx[1:], len(ts)) - 1
-        k = len(starts_idx)
-        n_events = np.diff(np.append(starts_idx, len(ts)))
-        cents_sum = np.add.reduceat(cents, starts_idx)
-        starts = ts[starts_idx].copy()
-        seg = np.cumsum(new_sess)  # 1-based segment id per event
-        type_sets = [
-            set(u) for u in events["event_type"].groupby(seg).unique()
-        ]
-
-        if tail is None:
-            first_idx = 1
-        elif continuing:
-            first_idx = tail[0]
-            n_events[0] += tail[3]
-            cents_sum[0] += tail[4]
-            starts[0] = tail[1]
-            type_sets[0] |= set(tail[5].split(_SEP)) if tail[5] else set()
-        else:
-            first_idx = tail[0] + 1
-
-        idx = first_idx + np.arange(k, dtype=np.int64)
-        out = pd.DataFrame(
-            {
-                "user_id": np.full(k, int(user_id), dtype=np.int64),
-                "session_idx": idx,
-                "n_events": n_events.astype(np.int64),
-                "start_us": starts,
-                "end_us": ts[ends_idx],
-                "duration_us": ts[ends_idx] - starts,
-                "session_value_cents": cents_sum.astype(np.int64),
-                "n_event_types": np.array(
-                    [len(s) for s in type_sets], dtype=np.int64
-                ),
-            }
+    ts = events["ts_us"].to_numpy(np.int64)
+    cents = events["value_cents"].to_numpy(np.int64)
+    if not len(ts):
+        yield pd.DataFrame(
+            {f.name: pd.Series(dtype="int64") for f in OUTPUT_SCHEMA}
         )
+        return
 
-        state.update(
-            (
-                int(idx[-1]),
-                int(starts[-1]),
-                int(ts[-1]),
-                int(n_events[-1]),
-                int(cents_sum[-1]),
-                _SEP.join(sorted(type_sets[-1])),
-            )
+    tail = state.get if state.exists else None
+    continuing = tail is not None and ts[0] - tail[2] <= SESSION_GAP_US
+
+    new_sess = np.ones(len(ts), dtype=bool)
+    new_sess[1:] = (ts[1:] - ts[:-1]) > SESSION_GAP_US
+    starts_idx = np.flatnonzero(new_sess)
+    ends_idx = np.append(starts_idx[1:], len(ts)) - 1
+    k = len(starts_idx)
+    n_events = np.diff(np.append(starts_idx, len(ts)))
+    cents_sum = np.add.reduceat(cents, starts_idx)
+    starts = ts[starts_idx].copy()
+    seg = np.cumsum(new_sess)  # 1-based segment id per event
+    type_sets = [
+        set(u) for u in events["event_type"].groupby(seg).unique()
+    ]
+
+    if tail is None:
+        first_idx = 1
+    elif continuing:
+        first_idx = tail[0]
+        n_events[0] += tail[3]
+        cents_sum[0] += tail[4]
+        starts[0] = tail[1]
+        type_sets[0] |= set(tail[5].split(_SEP)) if tail[5] else set()
+    else:
+        first_idx = tail[0] + 1
+
+    idx = first_idx + np.arange(k, dtype=np.int64)
+    out = pd.DataFrame(
+        {
+            "user_id": np.full(k, int(user_id), dtype=np.int64),
+            "session_idx": idx,
+            "n_events": n_events.astype(np.int64),
+            "start_us": starts,
+            "end_us": ts[ends_idx],
+            "duration_us": ts[ends_idx] - starts,
+            "session_value_cents": cents_sum.astype(np.int64),
+            "n_event_types": np.array(
+                [len(s) for s in type_sets], dtype=np.int64
+            ),
+        }
+    )
+
+    state.update(
+        (
+            int(idx[-1]),
+            int(starts[-1]),
+            int(ts[-1]),
+            int(n_events[-1]),
+            int(cents_sum[-1]),
+            _SEP.join(sorted(type_sets[-1])),
         )
-        yield out
-
-    return sessionize
+    )
+    yield out
 
 
 def streaming_sessionize(
@@ -188,7 +182,7 @@ def streaming_sessionize(
         F.expr("cast(round(value * 100) as bigint)").alias("value_cents"),
     )
     sessions = stream.groupBy("user_id").applyInPandasWithState(
-        _make_sessionizer(SESSION_GAP_US),
+        _sessionize,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",

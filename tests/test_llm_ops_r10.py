@@ -10,9 +10,9 @@ import pytest
 
 
 def _codec():
-    from dbt_jaffleshop_spark.llm.multimodal import _flac_codec
+    from dbt_jaffleshop_spark.llm.codecs.flac import flac_decode, flac_encode
 
-    return _flac_codec()
+    return flac_encode, flac_decode
 
 
 @pytest.mark.parametrize("bps", [8, 12, 16, 20, 24])

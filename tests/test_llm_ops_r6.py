@@ -340,18 +340,18 @@ def test_png_codec_roundtrip_all_filters():
     import numpy as np
 
     from dbt_jaffleshop_spark.llm.multimodal import (
-        png_decode_gray,
-        png_encode_gray,
+        png_decode,
+        png_encode,
     )
 
     for h, w, seed in [(1, 8, 3), (5, 5, 0), (9, 16, 7), (16, 8, 250)]:
         y, x = np.mgrid[0:h, 0:w]
         px = ((seed + y * 31 + x * 13) % 256).astype(np.uint8)
-        assert (png_decode_gray(png_encode_gray(px)) == px).all()
+        assert (png_decode(png_encode(px)) == px).all()
     # extremes: constant black / white (filter deltas all zero / wrap)
     for v in (0, 255):
         px = np.full((6, 6), v, dtype=np.uint8)
-        assert (png_decode_gray(png_encode_gray(px)) == px).all()
+        assert (png_decode(png_encode(px)) == px).all()
 
 
 def test_png_decode_rejects_corruption_and_unsupported():
@@ -363,22 +363,22 @@ def test_png_decode_rejects_corruption_and_unsupported():
 
     from dbt_jaffleshop_spark.llm.multimodal import (
         PNG_SIG,
-        png_decode_gray,
-        png_encode_gray,
+        png_decode,
+        png_encode,
     )
 
-    good = bytearray(png_encode_gray(np.zeros((4, 4), dtype=np.uint8)))
+    good = bytearray(png_encode(np.zeros((4, 4), dtype=np.uint8)))
     bad = bytearray(good)
     bad[len(bad) // 2] ^= 0xFF  # flip a byte inside a chunk
     with pytest.raises(ValueError, match="CRC|length|invalid"):
-        png_decode_gray(bytes(bad))
+        png_decode(bytes(bad))
     with pytest.raises(ValueError, match="signature"):
-        png_decode_gray(b"GIF89a" + bytes(good))
+        png_decode(b"GIF89a" + bytes(good))
 
     # r7 extended the decoder to truecolor: an RGB (color type 2)
     # stream now DECODES to (h, w, 3) instead of raising
     rgb = np.arange(4 * 4 * 3, dtype=np.uint8).reshape(4, 4, 3)
-    out = png_decode_gray(png_encode_gray(rgb))
+    out = png_decode(png_encode(rgb))
     assert out.shape == (4, 4, 3) and (out == rgb).all()
 
     def _png(depth, color, interlace, bpp):
@@ -397,14 +397,14 @@ def test_png_decode_rejects_corruption_and_unsupported():
     # r9 closed the last gates: alpha color types and sub-byte depths
     # now DECODE (these zero payloads are valid all-zero images) —
     # see test_llm_ops_r9 for the roundtrips
-    assert png_decode_gray(_png(8, 6, 0, 4)).shape == (4, 4, 4)  # RGBA
-    assert png_decode_gray(_png(8, 4, 0, 2)).shape == (4, 4, 2)  # gray+a
+    assert png_decode(_png(8, 6, 0, 4)).shape == (4, 4, 4)  # RGBA
+    assert png_decode(_png(8, 4, 0, 2)).shape == (4, 4, 2)  # gray+a
     # depth 4, w=4: rowbytes = 2 = "4 * 0.5"
-    assert png_decode_gray(_png(4, 0, 0, 0.5)).shape == (4, 4)
+    assert png_decode(_png(4, 0, 0, 0.5)).shape == (4, 4)
     # 16-bit palette is not a legal PNG combination: with the full IHDR
     # matrix supported, an illegal combo is corrupt input, not a gate
     with pytest.raises(ValueError, match="invalid PNG IHDR"):
-        png_decode_gray(_png(16, 3, 0, 2))
+        png_decode(_png(16, 3, 0, 2))
 
 
 def test_multimodal_pixels_matches_oracle(spark, oracle, sf_dir):
@@ -561,14 +561,14 @@ def test_png_gif_truncation_raises_valueerror_not_struct_error():
 
     from dbt_jaffleshop_spark.llm.multimodal import (
         gif_decode_frames,
-        png_decode_gray,
-        png_encode_gray,
+        png_decode,
+        png_encode,
     )
 
-    png = png_encode_gray(np.zeros((4, 4), dtype=np.uint8))
+    png = png_encode(np.zeros((4, 4), dtype=np.uint8))
     for cut in (10, 20, len(png) - 2):
         with pytest.raises(ValueError):
-            png_decode_gray(png[:cut])
+            png_decode(png[:cut])
     with pytest.raises(ValueError):
         gif_decode_frames(b"GIF89a\x04\x00")  # cut inside the LSD
 
@@ -594,11 +594,9 @@ def test_thumbnail_nn_mapping_exact():
     gradient to 4x4 must pick exactly the (2y, 2x) source pixels."""
     import numpy as np
 
-    from dbt_jaffleshop_spark.llm.multimodal import (
-        _png_codec,
-    )
+    from dbt_jaffleshop_spark.llm.multimodal import png_decode, png_encode
 
-    encode, decode, *_pal = _png_codec()
+    encode, decode = png_encode, png_decode
     y, x = np.mgrid[0:8, 0:8]
     px = (y * 16 + x).astype(np.uint8)
     rec = decode(encode(px)).astype(np.int64)

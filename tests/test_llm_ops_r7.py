@@ -1170,13 +1170,13 @@ def test_png_color_roundtrip_and_stride():
     unchanged; the decoder refuses what it does not support."""
     rng = np.random.default_rng(9)
     rgb = rng.integers(0, 256, size=(11, 17, 3)).astype(np.uint8)
-    out = mm.png_decode_gray(mm.png_encode_gray(rgb))
+    out = mm.png_decode(mm.png_encode(rgb))
     assert out.shape == (11, 17, 3) and np.array_equal(out, rgb)
     gray = rng.integers(0, 256, size=(13, 21)).astype(np.uint8)
-    assert np.array_equal(mm.png_decode_gray(mm.png_encode_gray(gray)), gray)
+    assert np.array_equal(mm.png_decode(mm.png_encode(gray)), gray)
     # a palette (color type 3) header DECODES since r8 — but one with
     # no PLTE chunk is corrupt and must fail loudly, not silently
-    payload = bytearray(mm.png_encode_gray(gray))
+    payload = bytearray(mm.png_encode(gray))
     ihdr_at = payload.find(b"IHDR")
     payload[ihdr_at + 4 + 9] = 3  # color type byte inside IHDR data
     import struct as _struct
@@ -1187,7 +1187,7 @@ def test_png_color_roundtrip_and_stride():
         ">I", _zlib.crc32(b"IHDR" + data) & 0xFFFFFFFF
     )
     with pytest.raises(ValueError, match="PLTE"):
-        mm.png_decode_gray(bytes(payload))
+        mm.png_decode(bytes(payload))
 
 
 def test_png_color_matches_oracle(spark, oracle, sf_dir):

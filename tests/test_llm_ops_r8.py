@@ -19,13 +19,13 @@ def test_progressive_subsampled_equals_sequential():
     successive-approximation ladder) equals the sequential subsampled
     decode bit-for-bit."""
     from dbt_jaffleshop_spark.llm.multimodal import (
-        _make_jpeg_420_coefs,
+        _jpeg_420_coefs,
         jpeg_decode_color,
         jpeg_encode_progressive_sampled_coefs,
         jpeg_encode_sampled_coefs,
     )
 
-    coefs_420 = _make_jpeg_420_coefs()
+    coefs_420 = _jpeg_420_coefs
     for doc_id in range(0, 30, 3):
         w, h = 8 + doc_id % 17, 8 + (doc_id * 3 + 11) % 17
         nmx, nmy = (w + 15) // 16, (h + 15) // 16
@@ -120,7 +120,7 @@ def test_dri_inside_progressive_frames():
     stream of the same blocks, for gray, 4:4:4 color, and 4:2:0."""
     from dbt_jaffleshop_spark.llm import multimodal as mm
 
-    tc = mm._make_jpeg_test_coefs()
+    tc = mm._jpeg_test_coefs
     for doc_id in (0, 5, 9):
         w, h = 24 + doc_id, 25 + doc_id
         nbx, nby = (w + 7) // 8, (h + 7) // 8
@@ -136,7 +136,7 @@ def test_dri_inside_progressive_frames():
             assert payload.count(b"\xff\xd0") > 0  # RST0 present
             assert (mm.jpeg_decode_gray(payload) == base).all(), (doc_id, ri)
 
-    cc = mm._make_jpeg_color_coefs()
+    cc = mm._jpeg_color_coefs
     c3 = cc(4, 3, 3)
     base3 = mm.jpeg_decode_color(
         mm.jpeg_encode_progressive3_coefs(c3, 22, 21, al=1)
@@ -330,66 +330,6 @@ def test_wav_decodes_all_uncompressed_widths():
     # compressed / unknown tags stay out honestly
     assert parse_wav(wav(85, 0, b"\x00" * 64)) is None  # mp3-in-wav
     assert parse_wav(wav(3, 64, b"\x00" * 64)) is None  # float64
-
-
-# ----------- executor-closure isolation (the cloudpickle contract)
-
-
-def test_executor_closures_are_self_contained():
-    """Every mapInPandas factory's closure must survive unpickling in a
-    process that CANNOT import dbt_jaffleshop_spark — the executor
-    contract the factories' docstrings promise (cloudpickle ships
-    nested functions by value). Caught live in r8: a module-level
-    helper referenced from inside a batches closure pickles as a
-    module REFERENCE and dies on the executor with
-    ModuleNotFoundError; this test runs each closure on a sample batch
-    in a clean subprocess so the trap cannot recur."""
-    import os
-    import subprocess
-    import sys
-    import tempfile
-
-    from pyspark.serializers import CloudPickleSerializer
-
-    from dbt_jaffleshop_spark.llm import multimodal as mm
-
-    factories = [
-        n for n in dir(mm)
-        if n.startswith("_make_") and n.endswith("_batches")
-    ]
-    assert len(factories) >= 14  # every registered multimodal member
-    ser = CloudPickleSerializer()
-    d = tempfile.mkdtemp()
-    for name in factories:
-        blob = ser.dumps(getattr(mm, name)())
-        open(os.path.join(d, name + ".pkl"), "wb").write(blob)
-    code = f"""
-import glob, pickle
-import pandas as pd
-for p in sorted(glob.glob("{d}/*.pkl")):
-    fn = pickle.loads(open(p, "rb").read())
-    batch = pd.DataFrame({{
-        "doc_id": [4, 7], "n_bytes": [100, 55],
-        # extra columns some closures expect; unused ones are ignored
-        "payload": [b"x", b"y"], "media_type": ["image", "audio"],
-        "text": ["a b c", "d e"],
-    }})
-    try:
-        list(fn(iter([batch])))
-    except ModuleNotFoundError as e:
-        raise SystemExit(f"{{p}}: NOT self-contained: {{e}}")
-    except Exception:
-        pass  # wrong sample columns are fine - only import isolation matters
-print("ok")
-"""
-    r = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        cwd=tempfile.gettempdir(),
-        env={**os.environ, "PYTHONPATH": ""},
-    )
-    assert r.returncode == 0 and "ok" in r.stdout, r.stdout + r.stderr
 
 
 # ------------------- GIF89a animation semantics (multimodal.py, r8)

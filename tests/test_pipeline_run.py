@@ -124,6 +124,84 @@ def test_fail_fast_skips_descendants(spark, sf_dir, tmp_path, monkeypatch):
     assert results["metricflow_time_spine"]["status"] == "ok"
 
 
+class _ModelError(RuntimeError):
+    pass
+
+
+class _ExportError(RuntimeError):
+    pass
+
+
+def _failing_run(monkeypatch, tmp_path, threads, export_raises):
+    """run_pipeline over stub models and exports (no Spark): ``good``
+    lands at once and launches its export; ``bad`` raises 0.5 s later.
+    Returns the list of export writes."""
+    import dataclasses
+    import time
+
+    from dbt_jaffleshop_spark.plans import acid, dag, exports, state
+    from dbt_jaffleshop_spark.semantic import jaffle_models
+
+    class Frame:
+        def createOrReplaceTempView(self, name):
+            pass
+
+    def bad(spark, sf_dir):
+        time.sleep(0.5)
+        raise _ModelError("bad model")
+
+    writes = []
+
+    class Table:
+        def __init__(self, path):
+            self.path = path
+
+        def exists(self):
+            return False
+
+        def overwrite(self, df, meta=None):
+            if export_raises:
+                raise _ExportError(self.path)
+            writes.append(self.path)
+
+        def vacuum(self, **kw):
+            pass
+
+    models = {
+        "good": dag.ModelSpec("good", lambda spark, sf_dir: Frame(), []),
+        "bad": dag.ModelSpec("bad", bad, []),
+    }
+    spec = dataclasses.replace(
+        next(iter(exports.EXPORTS.values())), name="good_export", depends_on="good"
+    )
+    query = type("Query", (), {"to_df": lambda self, spark, sf_dir: Frame()})()
+    monkeypatch.setattr(dag, "MODELS", models)
+    monkeypatch.setattr(exports, "EXPORTS", {spec.name: spec})
+    monkeypatch.setitem(jaffle_models.SAVED_QUERIES, spec.saved_query, query)
+    monkeypatch.setattr(acid, "AcidTable", Table)
+    monkeypatch.setattr(state, "export_fingerprint", lambda *a: "fp")
+    with pytest.raises(_ModelError) as err:
+        dag.run_pipeline(
+            object(), None, warehouse_dir=str(tmp_path), threads=threads
+        )
+    return writes, err.value
+
+
+def test_model_exception_skips_queued_exports(monkeypatch, tmp_path):
+    """One worker: good's export queues behind the failing model, and
+    must not write once the model has failed."""
+    writes, _err = _failing_run(monkeypatch, tmp_path, 1, export_raises=False)
+    assert writes == []
+
+
+def test_model_exception_surfaces_finished_export_failures(monkeypatch, tmp_path):
+    """Two workers: good's export fails while the model is still
+    running; its exception rides on the model's instead of vanishing."""
+    _writes, err = _failing_run(monkeypatch, tmp_path, 2, export_raises=True)
+    notes = getattr(err, "__notes__", [])
+    assert any("_ExportError" in n and "good_export" in n for n in notes), notes
+
+
 @pytest.mark.parametrize("mart", ["orders", "order_items"])
 def test_incremental_rebuilds_only_affected_partitions(
     spark, sf_dir, built_warehouse, mart
