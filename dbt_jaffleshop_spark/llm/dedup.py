@@ -755,10 +755,10 @@ def _star_components(
         pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint()
+        .localCheckpoint(eager=False)
     )
-    # the count doubles as the checkpoint's materializing action — the
-    # star loop previously paid it implicitly via the first delta count
+    # the count is the lazy checkpoint's materializing action (one job,
+    # not a checkpoint job plus a count job)
     if edges.count() <= cutoff:
         return _components_single_task(edges)
 

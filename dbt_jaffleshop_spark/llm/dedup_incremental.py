@@ -84,7 +84,22 @@ streams the mins table against delta bands (broadcast the delta side at
 scale); verification touches only candidate docs' shingles; component
 re-solve touches only affected clusters. ``scripts/incremental_ab.py``
 measures the full-vs-incremental A/B at two corpus scales showing the
-delta cost tracks |delta|, not |corpus|.
+delta cost tracks |delta|, not |corpus|, and reports each fold's Spark
+job count beside its seconds.
+
+At small deltas a fold's time is per-job fixed cost, so the fold is one
+FUSED job chain: every intermediate that is read more than once is
+computed once and checkpointed (the delta's shingles and bands, the
+candidate edges, the verify shingle relation, the new pairs — lazily,
+so the first consumer materializes each one without a job of its
+own); the pinned cluster rows of the affected clusters form ONE frame
+(:func:`_affected_rows`) from which the re-solve edges, the replaced
+partitions and the kept rows all derive; one driver collect returns
+the replaced partitions together with the delta's id bounds; and the
+cluster commit stages ``kept ∪ resolved`` directly
+(:func:`_commit_clusters` — its docstring proves, per caller, why no
+anti-join against the old table is needed). An sf0.001 fold runs
+about 45 Spark jobs (``tests/test_dedup_fold.py`` bounds the count).
 """
 
 from __future__ import annotations
@@ -95,7 +110,8 @@ import shutil
 import tempfile
 import threading
 from collections.abc import Callable
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor, wait
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -151,25 +167,33 @@ _LAYOUT_KEY = "n_doc_buckets"
 # batching). _commit_all runs one transaction's commit thunks from a
 # small MODULE-LEVEL pool — reused across operations, because a fresh
 # pool per call would leak one pinned-thread-mode JVM companion thread
-# per Python worker per call (r14 ADVICE) — and surfaces the first
-# failure. Crash-atomicity is UNCHANGED from the sequential protocol:
-# a failed/crashed commit leaves meta unmoved, sibling commits that did
-# land are exactly the unreferenced-garbage class the meta-pinned
-# vacuum already ignores, every read is version-pinned so a concurrent
-# sibling commit can never change what another thunk reads, and the
-# re-run is idempotent (pinned-base appends/replaces never build on a
-# crashed attempt). Thunks never submit back into this pool, so it
-# cannot deadlock; it is distinct from the digest member pool
-# (queries/op_digests.py), so a lifecycle member running inside a
-# digest build keeps making progress.
+# per Python worker per call (r14 ADVICE).
+#
+# Failure rule: _commit_all WAITS FOR EVERY THUNK before it raises —
+# the first failure (in thunk order) is raised with every other
+# failure attached as a note, the way plans/dag.run_pipeline reports
+# its exports. Raising at the first failed future would hand control
+# back (and let the caller re-run or vacuum) while sibling commits
+# are still staging files. Crash-atomicity is UNCHANGED from the
+# sequential protocol: a failed/crashed commit leaves meta unmoved,
+# sibling commits that did land are exactly the unreferenced-garbage
+# class the meta-pinned vacuum already ignores, every read is
+# version-pinned so a concurrent sibling commit can never change what
+# another thunk reads, and the re-run is idempotent (pinned-base
+# appends/replaces never build on a crashed attempt). Thunks never
+# submit back into this pool, so it cannot deadlock; it is distinct
+# from the digest member pool (queries/op_digests.py), so a lifecycle
+# member running inside a digest build keeps making progress.
 _COMMIT_POOL: ThreadPoolExecutor | None = None
 _COMMIT_POOL_LOCK = threading.Lock()
 
 
 def _commit_all(thunks: dict[str, Callable[[], int]]) -> dict[str, int]:
     """Run one index transaction's per-table commit thunks concurrently;
-    returns {table: committed version}. The caller swaps meta AFTER all
-    of them return — the transaction's serialization point, unchanged."""
+    returns {table: committed version}. Returns or raises only once
+    every thunk has finished (failure rule above). The caller swaps
+    meta AFTER this returns — the transaction's serialization point,
+    unchanged."""
     global _COMMIT_POOL
     with _COMMIT_POOL_LOCK:
         if _COMMIT_POOL is None:
@@ -178,6 +202,17 @@ def _commit_all(thunks: dict[str, Callable[[], int]]) -> dict[str, int]:
             )
         pool = _COMMIT_POOL
     futures = {name: pool.submit(fn) for name, fn in thunks.items()}
+    wait(futures.values())
+    failed = [
+        (name, f.exception())
+        for name, f in futures.items()
+        if f.exception() is not None
+    ]
+    if failed:
+        (_, first), *rest = failed
+        for name, err in rest:
+            first.add_note(f"commit {name} also failed: {err!r}")
+        raise first
     return {name: f.result() for name, f in futures.items()}
 
 
@@ -192,16 +227,28 @@ def _with_bucket(df: DataFrame, id_col: str, n: int) -> DataFrame:
     return df.withColumn(_PB, (F.col(id_col) % n).cast("int"))
 
 
-def _bucket_values(df: DataFrame, id_col: str, n: int) -> list[int]:
-    """The DISTINCT affected partition values of a frame — a driver
-    collect bounded by the bucket count, never by rows."""
-    return [
-        r[0]
-        for r in _with_bucket(df.select(id_col), id_col, n)
-        .select(_PB)
-        .distinct()
-        .collect()
-    ]
+def _bucket_values(df: DataFrame, id_col: str, n: int) -> DataFrame:
+    """The partition values (id % n) of a frame's rows, as a one-column
+    frame for :func:`_collect_values`."""
+    return _with_bucket(df.select(id_col), id_col, n).select(_PB)
+
+
+def _collect_values(frames: dict[str, DataFrame]) -> dict[str, list[int]]:
+    """The sorted DISTINCT values of several one-column frames in ONE
+    driver collect (one action, one distinct shuffle) — a transaction's
+    partition-value lists, bounded by the bucket / band count, never by
+    rows. Null values (an aggregate over an empty frame) are dropped."""
+    union = reduce(
+        DataFrame.unionByName,
+        [
+            f.select(F.lit(k).alias("k"), F.col(f.columns[0]).cast("long").alias("v"))
+            for k, f in frames.items()
+        ],
+    )
+    out: dict[str, list[int]] = {k: [] for k in frames}
+    for r in union.where(F.col("v").isNotNull()).distinct().collect():
+        out[r["k"]].append(int(r["v"]))
+    return {k: sorted(v) for k, v in out.items()}
 
 
 def _guard_since_read(table: AcidTable, base_version: int):
@@ -472,76 +519,82 @@ def layout_report(spark: SparkSession, idx) -> dict:
     return report
 
 
-def _resolve_labels(
-    new_pairs: DataFrame, old: DataFrame, corpus_max: int
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Fold verified delta edges into an existing (doc_id, cluster_id,
-    cluster_size) labeling, re-solving ONLY the components a new edge
-    touches: old labels of affected clusters re-enter as (cluster_id →
-    member) edges — which encode exactly the old connectivity — while
-    every untouched cluster row is carried forward by value. Shared by
-    the document (MinHash) and embedding (hyperplane) folds.
+def _affected_rows(old: DataFrame, touched: DataFrame) -> DataFrame:
+    """The pinned ``clusters`` rows (WITH their ``p_bucket``) of every
+    cluster holding a ``touched`` doc — the one frame a cluster-table
+    update derives all of its pieces from (:func:`_commit_clusters`):
+    the re-solve subgraph, the replaced-partition values, and the kept
+    rows. Checkpointed lazily: the caller's partition-value collect is
+    its first action, so materializing it costs no job of its own."""
+    cids = old.join(touched, "doc_id", "left_semi").select("cluster_id").distinct()
+    return (
+        old.join(cids, "cluster_id", "left_semi")
+        .select("doc_id", "cluster_id", "cluster_size", _PB)
+        .localCheckpoint(eager=False)
+    )
 
-    Returns ``(final, resolved, affected_cids)``: the full updated
-    labeling, the re-solved rows alone, and the re-solved cluster ids —
-    the latter two drive the partition-scoped cluster-table commit
-    (:func:`_commit_clusters_update`)."""
-    old = old.select("doc_id", "cluster_id", "cluster_size")
-    touched = (
-        new_pairs.where(F.col("doc_a") <= F.lit(corpus_max))
-        .select(F.col("doc_a").alias("doc_id"))
-        .distinct()
-    )
-    affected_cids = (
-        old.join(touched, "doc_id", "left_semi")
-        .select("cluster_id")
-        .distinct()
-    )
-    affected = old.join(affected_cids, "cluster_id", "left_semi")
-    label_edges = affected.where(
-        F.col("doc_id") != F.col("cluster_id")
-    ).select(
+
+def _label_edges(aff: DataFrame) -> DataFrame:
+    """(cluster_id → member) edges of the affected clusters — they encode
+    exactly the old connectivity, which is all a FOLD needs to re-solve
+    (a fold only adds edges, so no old component can split)."""
+    return aff.where(F.col("doc_id") != F.col("cluster_id")).select(
         F.col("cluster_id").alias("doc_a"), F.col("doc_id").alias("doc_b")
     )
-    # checkpointed: resolved feeds BOTH the replace leg (via final) and
-    # the append leg of the partition-scoped commit — one evaluation
-    resolved = _star_components(new_pairs.unionByName(label_edges)).localCheckpoint()
-    final = (
-        old.join(affected_cids, "cluster_id", "left_anti")
-        .unionByName(resolved)
-        .select("doc_id", "cluster_id", "cluster_size")
-    )
-    return final, resolved, affected_cids
 
 
-def _commit_clusters_update(
+def _commit_clusters(
     table: AcidTable,
     old: DataFrame,
-    final: DataFrame,
-    resolved: DataFrame,
-    affected_cids: DataFrame,
+    aff: DataFrame,
+    vals: list[int],
+    edges: DataFrame,
     base_version: int,
     n: int,
 ) -> int:
-    """Commit a cluster-table update (fold or removal) touching only
-    the partitions whose rows changed: partitions holding a re-solved
-    cluster's OLD rows are replaced (their re-labeled/shrunk content
-    comes from ``final``), while rows for docs with NO previous cluster
-    row — delta docs, and corpus docs gaining their FIRST verified pair
-    (singletons have no stored row, so their partitions are not in the
-    replace set) — are APPENDED into the other partitions. One manifest
-    (replace_partitions_and_append), pinned to the meta-referenced base
-    so a crashed attempt's commit is never built on. Files written:
-    O(affected partitions + new rows), not O(corpus)."""
-    old = old.select("doc_id", "cluster_id", "cluster_size")
-    old_affected = old.join(affected_cids, "cluster_id", "left_semi")
-    vals = _bucket_values(old_affected, "doc_id", n)
-    fresh = resolved.join(old.select("doc_id"), "doc_id", "left_anti")
+    """Commit a cluster-table update — fold, removal or rebucket — that
+    re-solves ONLY the affected clusters: ``resolved`` = components of
+    ``edges`` (the re-solve subgraph the caller derived from ``aff``),
+    ``kept`` = the pinned rows outside the affected clusters. One
+    pinned-base manifest (replace_partitions_and_append): the ``vals``
+    partitions (those holding an affected row, collected from ``aff``)
+    are replaced by ``kept ∪ resolved``; resolved rows landing in any
+    other partition are appended. Files written: O(affected partitions
+    + new rows), not O(corpus) — and the ``p_bucket IN vals`` filter
+    reaches the ``old`` scan as a PartitionFilter, so ``kept`` reads
+    only the replaced partitions.
+
+    Staging ``kept ∪ resolved`` directly (no ``resolved ▷ old``
+    anti-join to pick the appended rows) rests on ONE invariant every
+    caller satisfies: **every resolved doc that has a pinned row
+    belongs to an affected cluster** — so its partition is in ``vals``
+    and an append can never duplicate an old row. Per caller (nodes of
+    ``edges`` = the resolved docs):
+
+    * folds (:func:`incremental_update`, :func:`emb_incremental_update`)
+      — ``edges`` = new pairs ∪ label edges of ``aff``. A label-edge
+      endpoint is an ``aff`` row. A new pair's ``doc_b`` is a delta id
+      (above the high-water mark, so it has no pinned row); its
+      ``doc_a`` is a delta id or a corpus id, and every corpus
+      ``doc_a`` is ``touched``.
+    * :func:`remove_docs` — ``touched`` holds BOTH endpoints of every
+      new pair; every other edge is a surviving stored pair whose
+      ``doc_a`` is in ``aff``, and a stored pair never crosses clusters
+      (clusters = components(pairs)), so its ``doc_b`` is in ``aff``.
+    * :func:`remove_vecs`, :func:`rebucket_emb_index` — every edge is a
+      surviving stored pair with ``doc_a`` in ``aff``: same argument.
+
+    ``tests/test_dedup_fold.py`` pins the invariant for every caller."""
+    resolved = _star_components(edges).localCheckpoint(eager=False)
+    kept = old.select("doc_id", "cluster_id", "cluster_size", _PB).join(
+        aff.select("doc_id"), "doc_id", "left_anti"
+    )
+    new_rows = _with_bucket(resolved, "doc_id", n)
     return table.replace_partitions_and_append(
-        _with_bucket(final, "doc_id", n),
+        kept.unionByName(new_rows),
         _PB,
         vals,
-        append_df=_with_bucket(fresh, "doc_id", n),
+        append_df=new_rows,
         base_version=base_version,
         meta={_LAYOUT_KEY: n},
     )
@@ -794,26 +847,19 @@ def incremental_update(
     each step is exact, not approximate."""
     meta_v, snap = idx.snapshot(spark)
     corpus_max = int(snap["max_doc_id"])
-    d_min, d_max = delta_docs.agg(
-        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-    ).collect()[0][:2]
-    if d_min is None:  # empty delta: a legal no-op
-        return idx.clusters_df(spark)
-    if int(d_min) <= corpus_max:
-        raise ValueError(
-            f"incremental dedup requires delta doc_ids above the corpus "
-            f"high-water mark {corpus_max}, got {d_min} — the id-ordering "
-            f"invariant is what makes bucket mins (and therefore corpus-"
-            f"internal star edges) immutable"
-        )
+    n = _n_buckets(snap)
 
     # --- delta signatures: the ONLY shingling/minhashing this batch
-    # pays (both checkpointed — bands feed three actions: candidates,
-    # the bands append, and the new-bucket mins append)
-    d_sh = _shingle_table(delta_docs).localCheckpoint()
-    d_bands = _lsh_bands(_minhash_signatures_from(d_sh)).localCheckpoint()
+    # pays. Both checkpointed (lazily, like every intermediate below:
+    # the first consumer's job materializes it) — shingles feed the
+    # minhash, verification and the shingles append; bands feed the
+    # candidates, the bands append and the new-bucket mins append
+    d_sh = _shingle_table(delta_docs).localCheckpoint(eager=False)
+    d_bands = _lsh_bands(_minhash_signatures_from(d_sh)).localCheckpoint(eager=False)
 
-    # --- new star edges: delta member → effective bucket min
+    # --- new star edges: delta member → effective bucket min.
+    # Checkpointed (lazily — the verify stages materialize it):
+    # verification reads the candidate edges three times
     mins = idx.bucket_mins.read(spark, version=snap["bucket_mins_v"])
     d_mins = d_bands.groupBy("band", "bv").agg(F.min("doc_id").alias("dmn"))
     eff = (
@@ -825,29 +871,60 @@ def incremental_update(
         eff.where(F.col("doc_id") > F.col("emn"))
         .select(F.col("emn").alias("doc_a"), F.col("doc_id").alias("doc_b"))
         .distinct()
+        .localCheckpoint(eager=False)
     )
 
-    # --- verify: fetch ONLY the candidate corpus mins' shingle rows
+    # --- verify over ONLY the candidate corpus mins' shingle rows plus
+    # the delta's; that relation is read four times, so it is
+    # checkpointed too (O(delta): corpus rows are semi-joined down to
+    # the candidate mins first)
     cand_corpus = (
         cands.where(F.col("doc_a") <= F.lit(corpus_max))
         .select(F.col("doc_a").alias("doc_id"))
         .distinct()
     )
-    corpus_sh = (
+    verify_sh = (
         idx.shingles.read(spark, version=snap["shingles_v"])
         .select("doc_id", "sh_h")
         .join(cand_corpus, "doc_id", "left_semi")
+        .unionByName(d_sh)
+        .localCheckpoint(eager=False)
     )
-    new_pairs = _verify_jaccard(
-        cands, corpus_sh.unionByName(d_sh)
-    ).select("doc_a", "doc_b").localCheckpoint()
+    new_pairs = (
+        _verify_jaccard(cands, verify_sh)
+        .select("doc_a", "doc_b")
+        .localCheckpoint(eager=False)
+    )
 
-    # --- re-solve ONLY the components a new edge touches, reading the
-    # pinned snapshot
+    # --- the affected rows: pinned cluster rows of every cluster a new
+    # edge reaches (its corpus endpoint is doc_a). ONE collect returns
+    # their partitions AND the delta's id bounds — so the id-ordering
+    # check runs here, still before anything is committed
     old = idx.clusters.read(spark, version=snap["clusters_v"])
-    final, resolved, affected_cids = _resolve_labels(
-        new_pairs, old, corpus_max
+    aff = _affected_rows(
+        old,
+        new_pairs.where(F.col("doc_a") <= F.lit(corpus_max)).select(
+            F.col("doc_a").alias("doc_id")
+        ),
     )
+    got = _collect_values(
+        {
+            "clusters": aff.select(_PB),
+            "ids": delta_docs.agg(
+                F.array(F.min("doc_id"), F.max("doc_id")).alias("b")
+            ).select(F.explode("b")),
+        }
+    )
+    if not got["ids"]:  # empty delta: a legal no-op
+        return idx.clusters_df(spark)
+    d_min, d_max = got["ids"][0], got["ids"][-1]
+    if d_min <= corpus_max:
+        raise ValueError(
+            f"incremental dedup requires delta doc_ids above the corpus "
+            f"high-water mark {corpus_max}, got {d_min} — the id-ordering "
+            f"invariant is what makes bucket mins (and therefore corpus-"
+            f"internal star edges) immutable"
+        )
 
     # --- commit the transaction: every data table is computed FROM the
     # pinned snapshot (append_from / pinned replace, never append — a
@@ -856,17 +933,17 @@ def incremental_update(
     # serialization point. Crash anywhere before the meta swap → meta
     # unmoved → partial versions invisible, re-run idempotent. Every
     # commit is partition-scoped: appends land only the delta's files;
-    # the cluster update rewrites affected partitions and appends the
-    # delta's rows — O(affected + delta) files written.
-    n = _n_buckets(snap)
+    # the cluster update re-solves the affected clusters and rewrites
+    # only their partitions — O(affected + delta) files written.
     rider = {_LAYOUT_KEY: n}
     # the five data commits run CONCURRENTLY (_commit_all): every thunk
     # reads version-pinned snapshots or checkpointed delta frames, so
     # sibling commits cannot disturb each other; meta still swaps LAST.
     v = _commit_all(
         {
-            "clusters": lambda: _commit_clusters_update(
-                idx.clusters, old, final, resolved, affected_cids,
+            "clusters": lambda: _commit_clusters(
+                idx.clusters, old, aff, got["clusters"],
+                new_pairs.unionByName(_label_edges(aff)),
                 snap["clusters_v"], n,
             ),
             "shingles": lambda: idx.shingles.append_from(
@@ -931,7 +1008,7 @@ def remove_docs(
     # ONE bounded collect doubles as the emptiness check (r12: the old
     # separate count() was a whole extra Spark job on the hot path);
     # the no-op return reads through the snapshot already in hand
-    doc_vals = _bucket_values(rem, "doc_id", n)
+    doc_vals = _collect_values({"docs": _bucket_values(rem, "doc_id", n)})["docs"]
     if not doc_vals:
         return idx.clusters.read(spark, version=snap["clusters_v"]).select(
             "doc_id", "cluster_id", "cluster_size"
@@ -946,7 +1023,6 @@ def remove_docs(
     clusters = idx.clusters.read(spark, version=snap["clusters_v"]).select(
         "doc_id", "cluster_id", "cluster_size", _PB
     )
-    clus3 = clusters.select("doc_id", "cluster_id", "cluster_size")
 
     # lazy anti-joins, NOT checkpointed: the pinned reads resolve a
     # fixed file list, so both uses (verification, the write-back) see
@@ -992,61 +1068,40 @@ def remove_docs(
         .localCheckpoint()
     )
 
-    # --- re-solve ONLY the affected components, from the REAL pairs
-    touched = (
-        clus3.join(rem, "doc_id", "left_semi")
-        .select("cluster_id")
-        .unionByName(
-            clus3.join(
-                new_pairs.select(F.col("doc_a").alias("doc_id"))
-                .unionByName(new_pairs.select(F.col("doc_b").alias("doc_id")))
-                .distinct(),
-                "doc_id",
-                "left_semi",
-            ).select("cluster_id")
-        )
-        .distinct()
-    )
-    affected_members = clus3.join(touched, "cluster_id", "left_semi").select(
-        "doc_id"
+    # --- re-solve ONLY the affected components, from the REAL pairs:
+    # the clusters holding a removed doc or a new-edge endpoint
+    aff = _affected_rows(
+        clusters,
+        rem.unionByName(new_pairs.select(F.col("doc_a").alias("doc_id")))
+        .unionByName(new_pairs.select(F.col("doc_b").alias("doc_id"))),
     )
     sub = (
         pairs_next.join(
-            affected_members.select(F.col("doc_id").alias("doc_a")),
-            "doc_a",
-            "left_semi",
+            aff.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi"
         )
         .unionByName(new_pairs)
         .distinct()
     )
-    resolved = _star_components(sub).localCheckpoint()
-    final = (
-        clus3.join(touched, "cluster_id", "left_anti")
-        .unionByName(resolved)
-        .select("doc_id", "cluster_id", "cluster_size")
-    )
 
     # --- affected-partition sets, each a driver list bounded by the
     # partition-value domain (bucket count / LSH band count), collected
-    # from the pinned reads (doc_vals was collected up front as the
-    # emptiness check)
-    pair_vals = sorted(
-        r[0]
-        for r in pairs.join(
-            rem.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi"
-        )
-        .select(_PB)
-        .unionByName(
-            pairs.join(
-                rem.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_semi"
-            ).select(_PB)
-        )
-        .unionByName(_with_bucket(new_pairs, "doc_a", n).select(_PB))
-        .distinct()
-        .collect()
-    )
-    band_vals = sorted(
-        r[0] for r in reelect_keys.select("band").distinct().collect()
+    # in ONE action from the pinned reads (doc_vals was collected up
+    # front as the emptiness check)
+    got = _collect_values(
+        {
+            "clusters": aff.select(_PB),
+            "pairs": pairs.join(
+                rem.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi"
+            )
+            .select(_PB)
+            .unionByName(
+                pairs.join(
+                    rem.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_semi"
+                ).select(_PB)
+            )
+            .unionByName(_bucket_values(new_pairs, "doc_a", n)),
+            "bands": reelect_keys.select("band"),
+        }
     )
 
     # --- commit the transaction: partition-scoped overwrites computed
@@ -1055,8 +1110,8 @@ def remove_docs(
     # lower: ids are never reused, keeping the fold invariant intact.
     v = _commit_all(
         {
-            "clusters": lambda: _commit_clusters_update(
-                idx.clusters, clus3, final, resolved, touched,
+            "clusters": lambda: _commit_clusters(
+                idx.clusters, clusters, aff, got["clusters"], sub,
                 snap["clusters_v"], n,
             ),
             "shingles": lambda: idx.shingles.overwrite_partitions(
@@ -1069,11 +1124,11 @@ def remove_docs(
             ),
             "pairs": lambda: idx.pairs.overwrite_partitions(
                 _with_bucket(pairs_next.select("doc_a", "doc_b"), "doc_a", n),
-                _PB, pair_vals, base_version=snap["pairs_v"], meta=rider,
+                _PB, got["pairs"], base_version=snap["pairs_v"], meta=rider,
             ),
             "bucket_mins": lambda: idx.bucket_mins.overwrite_partitions(
                 mins_kept.unionByName(new_mins),
-                "band", band_vals, base_version=snap["bucket_mins_v"],
+                "band", got["bands"], base_version=snap["bucket_mins_v"],
             ),
         }
     )
@@ -1438,18 +1493,7 @@ def emb_incremental_update(
     state equal to :func:`emb_clusters_lsh_over` on corpus + delta."""
     meta_v, snap = idx.snapshot(spark)
     corpus_max = int(snap["max_vec_id"])
-    d_min, d_max = delta_emb.agg(
-        F.min("vec_id").alias("lo"), F.max("vec_id").alias("hi")
-    ).collect()[0][:2]
-    if d_min is None:
-        return idx.clusters_df(spark)
-    if int(d_min) <= corpus_max:
-        raise ValueError(
-            f"incremental embedding dedup requires delta vec_ids above "
-            f"the corpus high-water mark {corpus_max}, got {d_min} — "
-            f"cluster-min labels compose only under monotone batch ids"
-        )
-
+    n = _n_buckets(snap)
     extra_bits = int(snap.get("extra_bits", 0) or 0)
     dq = _quantize_frame(delta_emb).localCheckpoint()
     d_buckets = _coarse_buckets(dq, extra_bits).localCheckpoint()
@@ -1471,37 +1515,63 @@ def emb_incremental_update(
             F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b")
         )
     )
-    cands = cross.unionByName(dd).distinct()
+    # candidates and the verify vector relation are each read twice by
+    # verification: checkpointed lazily, like the document fold's
+    cands = cross.unionByName(dd).distinct().localCheckpoint(eager=False)
     cand_corpus = (
         cands.where(F.col("id_a") <= F.lit(corpus_max))
         .select(F.col("id_a").alias("vec_id"))
         .distinct()
     )
-    corpus_q = (
+    verify_q = (
         idx.vectors.read(spark, version=snap["vectors_v"])
         .select("vec_id", "e", "nrm")
         .join(cand_corpus, "vec_id", "left_semi")
+        .unionByName(dq)
+        .localCheckpoint(eager=False)
     )
     new_pairs = (
-        _verify_cosine(cands, corpus_q.unionByName(dq))
+        _verify_cosine(cands, verify_q)
         .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
         .localCheckpoint()
     )
 
+    # affected rows + the delta's id bounds in one collect — see
+    # incremental_update
     old = idx.clusters.read(spark, version=snap["clusters_v"])
-    final, resolved, affected_cids = _resolve_labels(
-        new_pairs, old, corpus_max
+    aff = _affected_rows(
+        old,
+        new_pairs.where(F.col("doc_a") <= F.lit(corpus_max)).select(
+            F.col("doc_a").alias("doc_id")
+        ),
     )
+    got = _collect_values(
+        {
+            "clusters": aff.select(_PB),
+            "ids": delta_emb.agg(
+                F.array(F.min("vec_id"), F.max("vec_id")).alias("b")
+            ).select(F.explode("b")),
+        }
+    )
+    if not got["ids"]:
+        return idx.clusters_df(spark)
+    d_min, d_max = got["ids"][0], got["ids"][-1]
+    if d_min <= corpus_max:
+        raise ValueError(
+            f"incremental embedding dedup requires delta vec_ids above "
+            f"the corpus high-water mark {corpus_max}, got {d_min} — "
+            f"cluster-min labels compose only under monotone batch ids"
+        )
+
     # transaction commit: pinned-base appends + partition-scoped
-    # cluster update, meta swapped last — see incremental_update
-    n = _n_buckets(snap)
+    # cluster update, four concurrent data commits (_commit_all), meta
+    # swapped last — see incremental_update
     rider = {_LAYOUT_KEY: n}
-    # four concurrent data commits (_commit_all), meta swapped last —
-    # see incremental_update
     v = _commit_all(
         {
-            "clusters": lambda: _commit_clusters_update(
-                idx.clusters, old, final, resolved, affected_cids,
+            "clusters": lambda: _commit_clusters(
+                idx.clusters, old, aff, got["clusters"],
+                new_pairs.unionByName(_label_edges(aff)),
                 snap["clusters_v"], n,
             ),
             "vectors": lambda: idx.vectors.append_from(
@@ -1542,7 +1612,7 @@ def remove_vecs(
     rider = {_LAYOUT_KEY: n}
     # one bounded collect doubles as the emptiness check (see
     # remove_docs); the no-op return reads the snapshot already in hand
-    doc_vals = _bucket_values(rem, "doc_id", n)
+    doc_vals = _collect_values({"docs": _bucket_values(rem, "doc_id", n)})["docs"]
     if not doc_vals:
         return idx.clusters.read(spark, version=snap["clusters_v"]).select(
             F.col("doc_id").alias("vec_id"), "cluster_id", "cluster_size"
@@ -1550,60 +1620,45 @@ def remove_vecs(
     clusters = idx.clusters.read(spark, version=snap["clusters_v"]).select(
         "doc_id", "cluster_id", "cluster_size", _PB
     )
-    clus3 = clusters.select("doc_id", "cluster_id", "cluster_size")
     pairs = idx.pairs.read(spark, version=snap["pairs_v"])
     kept_pairs = pairs.join(
         rem.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_anti"
     ).join(rem.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_anti")
     kept2 = kept_pairs.select("doc_a", "doc_b").localCheckpoint()
-    touched = (
-        clus3.join(rem, "doc_id", "left_semi")
-        .select("cluster_id")
-        .distinct()
-    )
-    affected_members = clus3.join(touched, "cluster_id", "left_semi").select(
-        "doc_id"
-    )
-    sub = kept2.join(
-        affected_members.select(F.col("doc_id").alias("doc_a")),
-        "doc_a",
-        "left_semi",
-    )
-    resolved = _star_components(sub).localCheckpoint()
-    final = (
-        clus3.join(touched, "cluster_id", "left_anti")
-        .unionByName(resolved)
-        .select("doc_id", "cluster_id", "cluster_size")
-    )
-    # affected-partition sets — see remove_docs (clique candidates have
-    # no elected minimum, so removal never ADDS pairs: the pair
-    # partitions touched are exactly those holding a dropped row;
-    # doc_vals was collected up front as the emptiness check)
-    pair_vals = sorted(
-        r[0]
-        for r in pairs.join(
-            rem.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi"
-        )
-        .select(_PB)
-        .unionByName(
-            pairs.join(
-                rem.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_semi"
-            ).select(_PB)
-        )
-        .distinct()
-        .collect()
+    aff = _affected_rows(clusters, rem)
+    # affected-partition sets in one collect — see remove_docs (clique
+    # candidates have no elected minimum, so removal never ADDS pairs:
+    # the pair partitions touched are exactly those holding a dropped
+    # row; doc_vals was collected up front as the emptiness check)
+    got = _collect_values(
+        {
+            "clusters": aff.select(_PB),
+            "pairs": pairs.join(
+                rem.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi"
+            )
+            .select(_PB)
+            .unionByName(
+                pairs.join(
+                    rem.select(F.col("doc_id").alias("doc_b")), "doc_b", "left_semi"
+                ).select(_PB)
+            ),
+        }
     )
     # transaction commit: pinned-base partition-scoped overwrites run
     # CONCURRENTLY (_commit_all), meta swapped last (high-water mark
     # unchanged — ids are never reused)
     v = _commit_all(
         {
-            "clusters": lambda: _commit_clusters_update(
-                idx.clusters, clus3, final, resolved, touched,
+            "clusters": lambda: _commit_clusters(
+                idx.clusters, clusters, aff, got["clusters"],
+                kept2.join(
+                    aff.select(F.col("doc_id").alias("doc_a")),
+                    "doc_a", "left_semi",
+                ),
                 snap["clusters_v"], n,
             ),
             "pairs": lambda: idx.pairs.overwrite_partitions(
-                _with_bucket(kept2, "doc_a", n), _PB, pair_vals,
+                _with_bucket(kept2, "doc_a", n), _PB, got["pairs"],
                 base_version=snap["pairs_v"], meta=rider,
             ),
             "vectors": lambda: idx.vectors.overwrite_partitions(
@@ -1701,35 +1756,21 @@ def rebucket_emb_index(
         .distinct()
     )
 
-    clusters = idx.clusters.read(spark, version=snap["clusters_v"])
-    clus3 = clusters.select("doc_id", "cluster_id", "cluster_size")
-    touched = (
-        clus3.join(dropped_ids, "doc_id", "left_semi")
-        .select("cluster_id")
-        .distinct()
-    )
-    affected_members = clus3.join(touched, "cluster_id", "left_semi").select(
-        "doc_id"
-    )
-    sub = kept.join(
-        affected_members.select(F.col("doc_id").alias("doc_a")),
-        "doc_a",
-        "left_semi",
-    )
-    resolved = _star_components(sub).localCheckpoint()
-    final = (
-        clus3.join(touched, "cluster_id", "left_anti")
-        .unionByName(resolved)
-        .select("doc_id", "cluster_id", "cluster_size")
-    )
-
     # split-only invariant: a doc clustered before may become a
     # singleton (size 1) after the split — _star_components drops
     # isolated nodes, matching build-from-scratch, so nothing extra to
-    # filter. Pair partitions touched = those holding a dropped row.
+    # filter. Only clusters that lost a pair re-solve; pair partitions
+    # touched = those holding a dropped row (one collect for both).
+    clusters = idx.clusters.read(spark, version=snap["clusters_v"])
+    aff = _affected_rows(clusters, dropped_ids)
     n = _n_buckets(snap)
     rider = {_LAYOUT_KEY: n}
-    pair_vals = _bucket_values(dropped, "doc_a", n)
+    got = _collect_values(
+        {
+            "clusters": aff.select(_PB),
+            "pairs": _bucket_values(dropped, "doc_a", n),
+        }
+    )
 
     v: dict[str, int] = {}
     v["vectors"] = int(snap["vectors_v"])  # untouched by a rebucket
@@ -1738,11 +1779,14 @@ def rebucket_emb_index(
         meta=rider,
     )
     v["pairs"] = idx.pairs.overwrite_partitions(
-        _with_bucket(kept, "doc_a", n), _PB, pair_vals,
+        _with_bucket(kept, "doc_a", n), _PB, got["pairs"],
         base_version=snap["pairs_v"], meta=rider,
     )
-    v["clusters"] = _commit_clusters_update(
-        idx.clusters, clus3, final, resolved, touched,
+    v["clusters"] = _commit_clusters(
+        idx.clusters, clusters, aff, got["clusters"],
+        kept.join(
+            aff.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi"
+        ),
         snap["clusters_v"], n,
     )
     idx._commit_meta(

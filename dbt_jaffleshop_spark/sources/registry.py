@@ -69,6 +69,29 @@ def events_ts_is_long(spark: SparkSession, path: str) -> bool:
     return isinstance(schema["ts"].dataType, LongType)
 
 
+def input_bytes(paths: list[str]) -> int:
+    """Total bytes of the data files under ``paths``: a file counts
+    itself; a directory (a Spark-written table) counts every leaf file
+    below it, so a directory-layout source is sized by its part files,
+    not its directory inode. Hidden and metadata files (``_SUCCESS``,
+    ``.crc``) are skipped, as Spark's file readers skip them."""
+
+    def _data(name: str) -> bool:
+        return not name.startswith(("_", "."))
+
+    total = 0
+    for path in paths:
+        if not os.path.isdir(path):
+            total += os.path.getsize(path)
+            continue
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if _data(d)]
+            total += sum(
+                os.path.getsize(os.path.join(root, f)) for f in files if _data(f)
+            )
+    return total
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Scan one source table (SURVEY §2.1 S1).
 

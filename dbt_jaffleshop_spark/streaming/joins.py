@@ -29,6 +29,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.registry import input_bytes
 from .daily import events_stream_schema
 
 ATTRIBUTION_WINDOW_MINUTES = 30
@@ -56,11 +57,10 @@ _CONF_LOCK = threading.Lock()
 
 def _attribution_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     """ceil(input bytes / target), floored at 4, capped at the session
-    shuffle-partition count."""
-    size = sum(
-        os.path.getsize(p)
-        for p in glob.glob(os.path.join(sf_dir, "events*.parquet"))
-    )
+    shuffle-partition count. Input bytes are the source's data-file
+    bytes (:func:`..sources.registry.input_bytes`), for a single-file
+    and a directory-layout ``events.parquet`` alike."""
+    size = input_bytes(glob.glob(os.path.join(sf_dir, "events*.parquet")))
     sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
     want = -(-size // _STATE_TARGET_BYTES)
     return max(4, min(sess, want))

@@ -25,8 +25,14 @@ Pass bar: A's time is roughly flat from 1× to 10× corpus while B grows
 10× the incremental fold beats the full recompute outright. Results
 recorded in BASELINE.md round-10 notes.
 
+Every fold timing is reported with the Spark jobs that fold submitted
+(``*_jobs``), read from the driver's status store (kept with the UI
+off): at a fixed delta the job count is a property of the fold's plan,
+so it should not move with the corpus size.
+
 Usage: python scripts/incremental_ab.py [--runs 3] [--cpus 32]
        [--sf-dir /root/testdata/sf0.1] [--scale-dir /tmp/sfscale10]
+       [--scales 1x,10x]
 """
 
 from __future__ import annotations
@@ -56,6 +62,38 @@ def _session(cpus: int):
 
 def _force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def _last_job_id(spark) -> int:
+    """Highest job id in the driver's status store, once every event
+    posted so far has reached it."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+
+def _scales(args) -> list[tuple[str, str]]:
+    dirs = {"1x": args.sf_dir, "10x": args.scale_dir}
+    return [(label, dirs[label]) for label in args.scales.split(",")]
+
+
+def _growth(results: dict) -> dict:
+    """10×-over-1× ratios, when both scales ran."""
+    if not {"1x", "10x"} <= results.keys():
+        return {}
+    r1, r10 = results["1x"], results["10x"]
+    return {
+        "inc_growth_10x": round(
+            r10["incremental_sec"] / max(r1["incremental_sec"], 1e-9), 2
+        ),
+        "full_growth_10x": round(
+            r10["full_recompute_sec"] / max(r1["full_recompute_sec"], 1e-9), 2
+        ),
+        "inc_vs_full_at_10x": round(
+            r10["full_recompute_sec"] / max(r10["incremental_sec"], 1e-9), 2
+        ),
+    }
 
 
 def _delta_frame(spark, sf_dir: str, corpus_max: int):
@@ -98,7 +136,7 @@ def run_emb_suite(spark, args) -> None:
     from dbt_jaffleshop_spark.llm.dedup import _quantize_frame
 
     results: dict[str, dict] = {}
-    for label, corpus_dir in (("1x", args.sf_dir), ("10x", args.scale_dir)):
+    for label, corpus_dir in _scales(args):
         emb = spark.read.parquet(
             os.path.join(corpus_dir, "embeddings.parquet")
         ).select("vec_id", "embedding")
@@ -111,14 +149,17 @@ def run_emb_suite(spark, args) -> None:
         di.build_emb_index(spark, emb, root)
         t_build = time.perf_counter() - t0
 
-        inc_times, full_times = [], []
+        inc_times, inc_jobs, full_times = [], [], []
         for _ in range(args.runs):
             work = tempfile.mkdtemp(prefix=f"emb_ab_run_{label}_")
             shutil.rmtree(work)
             shutil.copytree(root, work)
             idx = di.EmbDedupIndex(work)
+            j0 = _last_job_id(spark)
             t0 = time.perf_counter()
-            _force(di.emb_incremental_update(spark, delta, idx))
+            out = di.emb_incremental_update(spark, delta, idx)
+            inc_jobs.append(_last_job_id(spark) - j0)
+            _force(out)
             inc_times.append(time.perf_counter() - t0)
             shutil.rmtree(work, ignore_errors=True)
 
@@ -135,34 +176,16 @@ def run_emb_suite(spark, args) -> None:
             "n_delta": n_delta,
             "index_build_sec": round(t_build, 2),
             "incremental_sec": round(statistics.median(inc_times), 2),
+            "incremental_jobs": statistics.median(inc_jobs),
             "full_recompute_sec": round(statistics.median(full_times), 2),
             "all_incremental": [round(t, 2) for t in inc_times],
+            "all_incremental_jobs": inc_jobs,
             "all_full": [round(t, 2) for t in full_times],
         }
         shutil.rmtree(root, ignore_errors=True)
         print(json.dumps({"suite": "emb", "scale": label, **results[label]}))
 
-    r1, r10 = results["1x"], results["10x"]
-    print(
-        json.dumps(
-            {
-                "metric": "emb_incremental_dedup_ab",
-                "inc_growth_10x": round(
-                    r10["incremental_sec"] / max(r1["incremental_sec"], 1e-9), 2
-                ),
-                "full_growth_10x": round(
-                    r10["full_recompute_sec"]
-                    / max(r1["full_recompute_sec"], 1e-9),
-                    2,
-                ),
-                "inc_vs_full_at_10x": round(
-                    r10["full_recompute_sec"]
-                    / max(r10["incremental_sec"], 1e-9),
-                    2,
-                ),
-            }
-        )
-    )
+    print(json.dumps({"metric": "emb_incremental_dedup_ab", **_growth(results)}))
 
 
 def run_days_suite(spark, args) -> None:
@@ -185,8 +208,10 @@ def run_days_suite(spark, args) -> None:
     for day in range(args.days):
         hi = idx.max_doc_id(spark)
         delta = _delta_frame(spark, args.sf_dir, hi).localCheckpoint()
+        j0 = _last_job_id(spark)
         t0 = time.perf_counter()
         out = di.incremental_update(spark, delta, idx)
+        fold_jobs = _last_job_id(spark) - j0
         _force(out)
         fold_s = round(time.perf_counter() - t0, 2)
         idx.vacuum(keep_last=2)
@@ -195,6 +220,7 @@ def run_days_suite(spark, args) -> None:
             {
                 "day": day + 1,
                 "fold_sec": fold_s,
+                "fold_jobs": fold_jobs,
                 "clusters_rows": out.count(),
                 "version": n_versions,
             }
@@ -207,6 +233,7 @@ def run_days_suite(spark, args) -> None:
                 "metric": "incremental_dedup_days",
                 "index_build_sec": build,
                 "fold_secs": [s["fold_sec"] for s in series],
+                "fold_jobs": [s["fold_jobs"] for s in series],
                 "flat_ratio_last_vs_first": round(
                     series[-1]["fold_sec"] / max(series[0]["fold_sec"], 1e-9),
                     2,
@@ -226,6 +253,10 @@ def main() -> None:
         "--suite", choices=["docs", "emb", "days", "both"], default="docs"
     )
     ap.add_argument(
+        "--scales", default="1x,10x",
+        help="comma-separated corpus scales to run: 1x (--sf-dir), 10x (--scale-dir)",
+    )
+    ap.add_argument(
         "--scale-dir",
         default=os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/sfscale10"),
     )
@@ -236,10 +267,11 @@ def main() -> None:
         run_days_suite(spark, args)
         spark.stop()
         return
-    if args.suite in ("emb", "both"):
-        from scripts.scale_ratio import build_derived as _bd
+    from scripts.scale_ratio import build_derived
 
-        _bd(spark, args.sf_dir, args.scale_dir, 10)
+    if "10x" in args.scales:
+        build_derived(spark, args.sf_dir, args.scale_dir, 10)
+    if args.suite in ("emb", "both"):
         run_emb_suite(spark, args)
         if args.suite == "emb":
             spark.stop()
@@ -254,12 +286,9 @@ def main() -> None:
         _star_components,
         _verify_jaccard,
     )
-    from scripts.scale_ratio import build_derived
-
-    build_derived(spark, args.sf_dir, args.scale_dir, 10)
 
     results: dict[str, dict] = {}
-    for label, corpus_dir in (("1x", args.sf_dir), ("10x", args.scale_dir)):
+    for label, corpus_dir in _scales(args):
         docs = spark.read.parquet(
             os.path.join(corpus_dir, "documents.parquet")
         ).select("doc_id", "text")
@@ -272,15 +301,17 @@ def main() -> None:
         di.build_dedup_index(spark, docs, root)
         t_build = time.perf_counter() - t0
 
-        inc_times, full_times = [], []
+        inc_times, inc_jobs, full_times = [], [], []
         for _ in range(args.runs):
             # A: fold from a pristine copy of the committed index
             work = tempfile.mkdtemp(prefix=f"inc_ab_run_{label}_")
             shutil.rmtree(work)
             shutil.copytree(root, work)
             idx = di.DedupIndex(work)
+            j0 = _last_job_id(spark)
             t0 = time.perf_counter()
             out = di.incremental_update(spark, delta, idx)
+            inc_jobs.append(_last_job_id(spark) - j0)
             _force(out)
             inc_times.append(time.perf_counter() - t0)
             shutil.rmtree(work, ignore_errors=True)
@@ -299,34 +330,16 @@ def main() -> None:
             "n_delta": n_delta,
             "index_build_sec": round(t_build, 2),
             "incremental_sec": round(statistics.median(inc_times), 2),
+            "incremental_jobs": statistics.median(inc_jobs),
             "full_recompute_sec": round(statistics.median(full_times), 2),
             "all_incremental": [round(t, 2) for t in inc_times],
+            "all_incremental_jobs": inc_jobs,
             "all_full": [round(t, 2) for t in full_times],
         }
         shutil.rmtree(root, ignore_errors=True)
         print(json.dumps({"scale": label, **results[label]}))
 
-    r1, r10 = results["1x"], results["10x"]
-    print(
-        json.dumps(
-            {
-                "metric": "incremental_dedup_ab",
-                "inc_growth_10x": round(
-                    r10["incremental_sec"] / max(r1["incremental_sec"], 1e-9), 2
-                ),
-                "full_growth_10x": round(
-                    r10["full_recompute_sec"]
-                    / max(r1["full_recompute_sec"], 1e-9),
-                    2,
-                ),
-                "inc_vs_full_at_10x": round(
-                    r10["full_recompute_sec"]
-                    / max(r10["incremental_sec"], 1e-9),
-                    2,
-                ),
-            }
-        )
-    )
+    print(json.dumps({"metric": "incremental_dedup_ab", **_growth(results)}))
     spark.stop()
 
 

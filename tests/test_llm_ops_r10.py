@@ -363,7 +363,7 @@ def test_incremental_candidate_plans_stay_joins(spark, sf_dir):
         assert "CartesianProduct" not in p
 
 
-def test_resolve_labels_algebra_matches_full_components(spark):
+def test_resolve_labels_algebra_matches_full_components(spark, tmp_path):
     """The label-fold core in isolation: for ANY old edge set E1 over
     corpus nodes and new edge set E2 (each new edge's corpus endpoint
     in doc_a, per the production orientation), folding E2 into
@@ -371,12 +371,18 @@ def test_resolve_labels_algebra_matches_full_components(spark):
     adversarial shapes: a delta node MERGING two old clusters, a
     previously-unclustered corpus node, a delta-only component, plus
     seeded random graphs."""
+    import itertools
     import random
+
+    from pyspark.sql import functions as F
 
     from dbt_jaffleshop_spark.llm import dedup as dd
     from dbt_jaffleshop_spark.llm import dedup_incremental as di
+    from dbt_jaffleshop_spark.plans.acid import AcidTable
 
     CORPUS_MAX = 60
+    N = di.N_DOC_BUCKETS
+    case = itertools.count()
 
     def fold_vs_full(e1, e2):
         e1df = spark.createDataFrame(
@@ -385,9 +391,31 @@ def test_resolve_labels_algebra_matches_full_components(spark):
         e2df = spark.createDataFrame(
             [(int(a), int(b)) for a, b in e2], "doc_a long, doc_b long"
         )
-        old = dd._star_components(e1df)
+        # the fold's own steps: affected rows of the pinned labeling,
+        # then the clusters commit over new edges ∪ label edges
+        t = AcidTable(str(tmp_path / f"case{next(case)}"))
+        base_v = t.overwrite(
+            di._with_bucket(dd._star_components(e1df), "doc_id", N),
+            partition_by=[di._PB],
+        )
+        old = t.read(spark, version=base_v)
+        aff = di._affected_rows(
+            old,
+            e2df.where(F.col("doc_a") <= CORPUS_MAX).select(
+                F.col("doc_a").alias("doc_id")
+            ),
+        )
+        vals = di._collect_values({"c": aff.select(di._PB)})["c"]
+        v = di._commit_clusters(
+            t, old, aff, vals, e2df.unionByName(di._label_edges(aff)), base_v, N
+        )
         got = sorted(
-            map(tuple, di._resolve_labels(e2df, old, CORPUS_MAX)[0].collect())
+            map(
+                tuple,
+                t.read(spark, version=v)
+                .select("doc_id", "cluster_id", "cluster_size")
+                .collect(),
+            )
         )
         want = sorted(
             map(

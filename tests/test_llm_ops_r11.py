@@ -316,17 +316,15 @@ def test_commit_clusters_update_appends_fresh_corpus_rows(spark, tmp_path):
         di._with_bucket(old, "doc_id", di.N_DOC_BUCKETS), partition_by=[di._PB]
     )
 
-    # re-solve: cluster 20 re-labeled (lost a member elsewhere — any
-    # change), plus the fresh component {7, 23}
-    resolved = spark.createDataFrame(
-        [(20, 20, 2), (36, 20, 2), (7, 7, 2), (23, 7, 2)],
-        "doc_id bigint, cluster_id bigint, cluster_size bigint",
+    # re-solve: cluster 20 (touched) plus the fresh component {7, 23}
+    pinned = t.read(spark, version=base_v)
+    aff = di._affected_rows(
+        pinned, spark.createDataFrame([(20,)], "doc_id bigint")
     )
-    affected = spark.createDataFrame([(20,)], "cluster_id bigint")
-    final = resolved  # carried ∪ resolved where carried is empty here
-    di._commit_clusters_update(
-        t, old, final, resolved, affected, base_v, di.N_DOC_BUCKETS
-    )
+    vals = di._collect_values({"clusters": aff.select(di._PB)})["clusters"]
+    assert vals == [20 % di.N_DOC_BUCKETS]
+    edges = spark.createDataFrame([(20, 36), (7, 23)], "doc_a bigint, doc_b bigint")
+    di._commit_clusters(t, pinned, aff, vals, edges, base_v, di.N_DOC_BUCKETS)
 
     got = sorted(
         map(

@@ -47,6 +47,34 @@ def test_commit_all_propagates_failure():
         _commit_all({"ok": lambda: 1, "bad": boom})
 
 
+def test_commit_all_waits_for_siblings_before_raising():
+    """A failed commit must not surface while a sibling is still
+    staging: _commit_all raises only after every thunk finished, with
+    the other failures attached as notes."""
+    import threading
+    import time
+
+    from dbt_jaffleshop_spark.llm.dedup_incremental import _commit_all
+
+    sibling_done = threading.Event()
+
+    def boom() -> int:
+        raise RuntimeError("staging failed")
+
+    def slow() -> int:
+        time.sleep(0.5)
+        sibling_done.set()
+        return 2
+
+    def boom_too() -> int:
+        raise ValueError("second failure")
+
+    with pytest.raises(RuntimeError, match="staging failed") as err:
+        _commit_all({"bad": boom, "slow": slow, "bad_too": boom_too})
+    assert sibling_done.is_set()
+    assert any("bad_too" in note for note in err.value.__notes__)
+
+
 def test_failed_table_commit_leaves_meta_unmoved(spark, sf_dir, tmp_path, monkeypatch):
     """A fold whose pairs commit dies mid-transaction must not move the
     index's committed snapshot (crash-atomicity with concurrent
@@ -178,3 +206,25 @@ def test_attribution_restores_session_conf(spark, sf_dir):
     df = joins.streaming_attribution(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
     assert spark.conf.get(key) == before
+
+
+def test_attribution_partitions_size_directory_layout_from_part_files(
+    spark, tmp_path, monkeypatch
+):
+    """A directory-layout ``events.parquet/`` is sized by its part files
+    (not its directory inode): ceil(bytes / target), floor 4, capped."""
+    from dbt_jaffleshop_spark.streaming import joins
+
+    src = tmp_path / "events.parquet"
+    spark.range(3000).selectExpr("id", "cast(id * 7919 as string) s").repartition(
+        3
+    ).write.parquet(str(src))
+    size = sum(
+        p.stat().st_size for p in src.iterdir() if p.name.startswith("part-")
+    )
+    target = -(-size // 6)
+    monkeypatch.setattr(joins, "_STATE_TARGET_BYTES", target)
+    sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    want = max(4, min(sess, -(-size // target)))
+    assert want > 4  # the floor alone would not pass
+    assert joins._attribution_shuffle_partitions(spark, str(tmp_path)) == want
