@@ -7,7 +7,9 @@
   resolved`` without an anti-join against the old cluster table:
   no resolved doc that has a pinned cluster row lies outside the
   replaced partitions — checked on every caller (document fold and
-  removal, embedding fold, removal and rebucket).
+  removal, embedding fold, removal and rebucket), and on a planted
+  removal whose re-elected bucket min pairs into a cluster that holds
+  no removed doc.
 
 The document index is built once per module and copied per test.
 """
@@ -145,3 +147,33 @@ def test_clusters_commit_invariant_embedding_index(
     assert len(clusters_commits) == 3
     assert [stray for stray, _ in clusters_commits] == [0, 0, 0]
     assert all(pinned > 0 for _, pinned in clusters_commits), clusters_commits
+
+
+# Four documents (word 3-gram shingles) planted so that every LSH bucket
+# holding both 2 and 3 also holds 1: the stored star pairs are (1, 2)
+# and (3, 4), and only after removing 1 does a re-elected bucket min 2
+# pair with 3 — a removal edge into a cluster that holds no removed doc.
+_REELECT_DOCS = {
+    1: "w140891 w596853 w888598 w841235 w800875 w066172 w267459 w123646"
+    " w519501 w683244 w398055",
+    2: "w140891 w596853 w888598 w841235 w800875 w066172 w267459 w123646"
+    " w519501 w797926 w471325 w495185",
+    3: "w827036 w220153 w841235 w800875 w066172 w267459 w123646 w519501"
+    " w797926 w471325 w495185",
+    4: "w827036 w220153 w841235 w800875 w066172 w267459 w123646 w519501"
+    " w797926 w471325 w495185 w098418 w511554 w029724 w936710",
+}
+
+
+def test_clusters_commit_invariant_removal_reelects_into_other_cluster(
+    spark, tmp_path, clusters_commits
+):
+    docs = spark.createDataFrame(
+        sorted(_REELECT_DOCS.items()), "doc_id bigint, text string"
+    )
+    idx = di.build_dedup_index(spark, docs, str(tmp_path / "index"))
+    clusters = sorted(map(tuple, idx.clusters_df(spark).collect()))
+    assert clusters == [(1, 1, 2), (2, 1, 2), (3, 3, 2), (4, 3, 2)]
+    got = di.remove_docs(spark, docs.where(F.col("doc_id") == 1).select("doc_id"), idx)
+    assert sorted(map(tuple, got.collect())) == [(2, 2, 3), (3, 2, 3), (4, 2, 3)]
+    assert clusters_commits == [(0, 3)]
