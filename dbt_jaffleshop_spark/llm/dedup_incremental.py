@@ -844,7 +844,14 @@ def incremental_update(
     """Fold one delta batch into the index; returns (and commits) the
     updated full cluster table — value-equal to a full star-semantics
     recompute over (corpus + delta). See the module docstring for why
-    each step is exact, not approximate."""
+    each step is exact, not approximate.
+
+    The empty-batch return and the id-ordering check share the
+    affected-rows collect, so they run after the candidate and verify
+    chain has been computed (and still before any commit): an empty
+    batch, or a replayed corpus that is then refused, pays that chain.
+    Callers that can see an empty batch drop it first, as
+    ``streaming/index_fold.fold_batch`` does."""
     meta_v, snap = idx.snapshot(spark)
     corpus_max = int(snap["max_doc_id"])
     n = _n_buckets(snap)
@@ -1490,7 +1497,11 @@ def emb_incremental_update(
     clique edges from ONE join against the stored bucket membership,
     exact integer-cosine verification touching only the candidate
     corpus vectors, affected-components-only label re-solve — end
-    state equal to :func:`emb_clusters_lsh_over` on corpus + delta."""
+    state equal to :func:`emb_clusters_lsh_over` on corpus + delta.
+
+    As in :func:`incremental_update`, the empty-batch return and the
+    id-ordering check run after the verify chain has been computed
+    (before any commit); drop empty batches before calling."""
     meta_v, snap = idx.snapshot(spark)
     corpus_max = int(snap["max_vec_id"])
     n = _n_buckets(snap)

@@ -32,7 +32,6 @@ so it should not move with the corpus size.
 
 Usage: python scripts/incremental_ab.py [--runs 3] [--cpus 32]
        [--sf-dir /root/testdata/sf0.1] [--scale-dir /tmp/sfscale10]
-       [--scales 1x,10x]
 """
 
 from __future__ import annotations
@@ -49,6 +48,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from perfbench.probe import SparkRecord  # noqa: E402
 
 DELTA_STRIDE = 10**14  # far above scale_ratio's replica key space
 
@@ -67,33 +68,8 @@ def _force(df) -> None:
 def _last_job_id(spark) -> int:
     """Highest job id in the driver's status store, once every event
     posted so far has reached it."""
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    jobs = sc.statusStore().jobsList(None)
-    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
-
-
-def _scales(args) -> list[tuple[str, str]]:
-    dirs = {"1x": args.sf_dir, "10x": args.scale_dir}
-    return [(label, dirs[label]) for label in args.scales.split(",")]
-
-
-def _growth(results: dict) -> dict:
-    """10×-over-1× ratios, when both scales ran."""
-    if not {"1x", "10x"} <= results.keys():
-        return {}
-    r1, r10 = results["1x"], results["10x"]
-    return {
-        "inc_growth_10x": round(
-            r10["incremental_sec"] / max(r1["incremental_sec"], 1e-9), 2
-        ),
-        "full_growth_10x": round(
-            r10["full_recompute_sec"] / max(r1["full_recompute_sec"], 1e-9), 2
-        ),
-        "inc_vs_full_at_10x": round(
-            r10["full_recompute_sec"] / max(r10["incremental_sec"], 1e-9), 2
-        ),
-    }
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return SparkRecord(spark).last_job_id()
 
 
 def _delta_frame(spark, sf_dir: str, corpus_max: int):
@@ -136,7 +112,7 @@ def run_emb_suite(spark, args) -> None:
     from dbt_jaffleshop_spark.llm.dedup import _quantize_frame
 
     results: dict[str, dict] = {}
-    for label, corpus_dir in _scales(args):
+    for label, corpus_dir in (("1x", args.sf_dir), ("10x", args.scale_dir)):
         emb = spark.read.parquet(
             os.path.join(corpus_dir, "embeddings.parquet")
         ).select("vec_id", "embedding")
@@ -185,7 +161,27 @@ def run_emb_suite(spark, args) -> None:
         shutil.rmtree(root, ignore_errors=True)
         print(json.dumps({"suite": "emb", "scale": label, **results[label]}))
 
-    print(json.dumps({"metric": "emb_incremental_dedup_ab", **_growth(results)}))
+    r1, r10 = results["1x"], results["10x"]
+    print(
+        json.dumps(
+            {
+                "metric": "emb_incremental_dedup_ab",
+                "inc_growth_10x": round(
+                    r10["incremental_sec"] / max(r1["incremental_sec"], 1e-9), 2
+                ),
+                "full_growth_10x": round(
+                    r10["full_recompute_sec"]
+                    / max(r1["full_recompute_sec"], 1e-9),
+                    2,
+                ),
+                "inc_vs_full_at_10x": round(
+                    r10["full_recompute_sec"]
+                    / max(r10["incremental_sec"], 1e-9),
+                    2,
+                ),
+            }
+        )
+    )
 
 
 def run_days_suite(spark, args) -> None:
@@ -253,10 +249,6 @@ def main() -> None:
         "--suite", choices=["docs", "emb", "days", "both"], default="docs"
     )
     ap.add_argument(
-        "--scales", default="1x,10x",
-        help="comma-separated corpus scales to run: 1x (--sf-dir), 10x (--scale-dir)",
-    )
-    ap.add_argument(
         "--scale-dir",
         default=os.environ.get("SPARK_GRAFT_SCALE_DIR", "/tmp/sfscale10"),
     )
@@ -267,11 +259,10 @@ def main() -> None:
         run_days_suite(spark, args)
         spark.stop()
         return
-    from scripts.scale_ratio import build_derived
-
-    if "10x" in args.scales:
-        build_derived(spark, args.sf_dir, args.scale_dir, 10)
     if args.suite in ("emb", "both"):
+        from scripts.scale_ratio import build_derived as _bd
+
+        _bd(spark, args.sf_dir, args.scale_dir, 10)
         run_emb_suite(spark, args)
         if args.suite == "emb":
             spark.stop()
@@ -286,9 +277,12 @@ def main() -> None:
         _star_components,
         _verify_jaccard,
     )
+    from scripts.scale_ratio import build_derived
+
+    build_derived(spark, args.sf_dir, args.scale_dir, 10)
 
     results: dict[str, dict] = {}
-    for label, corpus_dir in _scales(args):
+    for label, corpus_dir in (("1x", args.sf_dir), ("10x", args.scale_dir)):
         docs = spark.read.parquet(
             os.path.join(corpus_dir, "documents.parquet")
         ).select("doc_id", "text")
@@ -339,7 +333,27 @@ def main() -> None:
         shutil.rmtree(root, ignore_errors=True)
         print(json.dumps({"scale": label, **results[label]}))
 
-    print(json.dumps({"metric": "incremental_dedup_ab", **_growth(results)}))
+    r1, r10 = results["1x"], results["10x"]
+    print(
+        json.dumps(
+            {
+                "metric": "incremental_dedup_ab",
+                "inc_growth_10x": round(
+                    r10["incremental_sec"] / max(r1["incremental_sec"], 1e-9), 2
+                ),
+                "full_growth_10x": round(
+                    r10["full_recompute_sec"]
+                    / max(r1["full_recompute_sec"], 1e-9),
+                    2,
+                ),
+                "inc_vs_full_at_10x": round(
+                    r10["full_recompute_sec"]
+                    / max(r10["incremental_sec"], 1e-9),
+                    2,
+                ),
+            }
+        )
+    )
     spark.stop()
 
 

@@ -2,7 +2,7 @@
 
 * One ``incremental_update`` on the sf0.001 corpus submits at most
   ``FOLD_JOBS_MAX`` Spark jobs, counted from the driver's status store
-  (the read perfbench/probe.py makes, UI off).
+  (``perfbench.probe.SparkRecord``, UI off).
 * The invariant that lets ``_commit_clusters`` stage ``kept ∪
   resolved`` without an anti-join against the old cluster table:
   no resolved doc that has a pinned cluster row lies outside the
@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from dbt_jaffleshop_spark.llm import dedup_incremental as di
 from dbt_jaffleshop_spark.llm.dedup import _quantize_frame, _star_components
 from dbt_jaffleshop_spark.sources import load_table
+from perfbench.probe import SparkRecord
 
 # Jobs of one fold on the conftest corpus: 44 with the fused chain
 # (each intermediate computed once, one affected-rows frame, one
@@ -46,20 +47,16 @@ def _index_copy(root: str, tmp_path) -> di.DedupIndex:
     return di.DedupIndex(dst)
 
 
-def _last_job_id(spark) -> int:
-    sc = spark.sparkContext._jsc.sc()
-    sc.listenerBus().waitUntilEmpty()
-    jobs = sc.statusStore().jobsList(None)
-    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
-
-
 def test_fold_job_count(spark, doc_index, tmp_path):
     docs, thr, root = doc_index
     idx = _index_copy(root, tmp_path)
     delta = docs.where(F.col("doc_id") > thr)
-    before = _last_job_id(spark)
+    record, bus = SparkRecord(spark), spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = record.last_job_id()
     di.incremental_update(spark, delta, idx)
-    jobs = _last_job_id(spark) - before
+    bus.waitUntilEmpty()
+    jobs = record.last_job_id() - before
     assert jobs <= FOLD_JOBS_MAX, f"fold submitted {jobs} Spark jobs"
 
 
